@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The repo's bench-methodology load rule (established round 3,
@@ -261,12 +260,7 @@ object Bench {
       }
     } catch { case _: Exception => None }
     externalBusy() // prime the tick counters
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
     // warm-up: JIT + codegen + parquet footer caches, so the first timed
     // query isn't charged for JVM start-up. Events must go through
     // Tables (TIMESTAMP(NANOS) needs the nanosAsLong conf — a raw

@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   *  - '''scoped''' — a build side or self-join input that exists for ONE
   *    query. Registered here by the operator that persists it; the caller
   *    that runs queries back-to-back ([[Bench]], [[Verify]],
-  *    [[ScaleProbe]], QueriesSpec's golden loop) calls [[releaseScoped]]
+  *    [[QueryBench]], QueriesSpec's golden loop) calls [[releaseScoped]]
   *    after each query's action, so retained relations can't accumulate
   *    across a 60-query session and compete for storage memory (the
   *    round-2 bench regression mechanism). The registry assumes queries
@@ -78,7 +78,10 @@ object Caches {
     * later action sees the batch's own appends (a doc "matching itself"
     * was the observed failure). A local checkpoint is a materialized RDD
     * with the lineage truncated — every later action replays the
-    * snapshot taken BEFORE the append. */
+    * snapshot taken BEFORE the append. The eager checkpoint runs a job
+    * at the call, and [[releaseScoped]] only drops the reference: its
+    * unpersist does not free checkpoint blocks, the ContextCleaner does
+    * once the RDD is garbage. */
   def scopedCheckpoint(df: DataFrame): DataFrame = synchronized {
     val p = df.localCheckpoint(eager = true)
     scoped += p

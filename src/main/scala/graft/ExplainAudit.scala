@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries so plan
   * regressions (lost pushdown, surprise shuffles, broadcast->SMJ flips)
   * are visible in review. Run: sbt "runMain graft.ExplainAudit". */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4)
     val interesting =
       if (args.length > 1) args(1).split(",").toSeq
       else Seq(

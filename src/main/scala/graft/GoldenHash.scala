@@ -2,7 +2,7 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
 /** Golden-hash regression harness (SURVEY.md §5.2.5): a canonical md5 of
@@ -40,13 +40,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "src/test/resources/goldens.properties"
     val sfDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val h = s"$name=${GoldenHash.hashDf(fn(spark, sfDir))}"
       Caches.releaseScoped() // per-query release, same as the harness mains

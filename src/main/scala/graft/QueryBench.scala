@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted per-query micro-bench: times a named SUBSET of
   * [[SparkEntry.queries]] with the full [[Bench]] methodology (same
   * session confs, table warm-up, reps, true median, per-rep scoped-cache
@@ -27,12 +25,7 @@ object QueryBench {
       else Seq.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cpus.toInt)
     try {
       spark.range(100000).selectExpr("sum(id)").count()
       Tables.events(spark, sfDir).count()

@@ -426,13 +426,9 @@ object PipelineQueries {
     positionalShingleDocs(s, d)
       .select(col("doc_id"), array_distinct(col("sp")).as("sh"))
 
-  /** The shingle base for stage-level profiling mains (SimhashProfile)
-    * — same relation, package-external name. */
-  def shingleDocsForProfile(s: SparkSession, d: String): DataFrame = shingleDocs(s, d)
-
   /** The positional-shingle base for the streaming novelty replay
     * ([[graft.streaming.StreamingNovelty]]) — the same shared relation,
-    * package-external name (the shingleDocsForProfile precedent). */
+    * package-external name. */
   def positionalShingles(s: SparkSession, d: String): DataFrame =
     positionalShingleDocs(s, d)
 
@@ -790,7 +786,7 @@ object PipelineQueries {
        |       FROM mh GROUP BY doc_id, seed // 2)""".stripMargin
 
   /** Materializes the shared dedup-trio relations (shingles → candidates
-    * → verified pairs) in one pass. Bench/ScaleProbe time this step (and
+    * → verified pairs) in one pass. Bench/QueryBench time this step (and
     * [[SharedRelations.warm]], the dense-id family) separately and charge
     * them to the total, so the compute-once cost of the shared relations
     * is on the record instead of hiding in whichever query happens to run
@@ -1062,6 +1058,13 @@ object PipelineQueries {
           // |g| ≤ n·max², 4 integer digits at the gate SFs — (18,10)
           // keeps every product/sum below exact-DECIMAL overflow
           .agg(sum(col("e.p")).cast("decimal(18,10)").as("g"))
+          // eager: this runs a Spark job when the DataFrame is BUILT, so
+          // even a plan-only caller (`ExplainAudit q165`) executes the
+          // corpus pass. The blocks are not registered with graft.Caches,
+          // and `Caches.releaseScoped()` could not free them anyway
+          // (unpersist does not touch checkpoint blocks) — only the
+          // ContextCleaner does, once the RDD is garbage. Fine for a
+          // 2080-row triangle; do not copy onto a large relation.
           .localCheckpoint(true)
       val gram = tri.unionByName(tri.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("g")))

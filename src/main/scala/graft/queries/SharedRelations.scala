@@ -49,7 +49,7 @@ object SharedRelations {
         "frame_number")
     }
 
-  /** Materializes both dense-id relations (Bench/ScaleProbe time this
+  /** Materializes both dense-id relations (Bench/QueryBench time this
     * together with the dedup trio as `shared_build`). */
   def warm(s: SparkSession, d: String): Unit = {
     eventsDense(s, d).count()

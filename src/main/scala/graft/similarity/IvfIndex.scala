@@ -47,7 +47,7 @@ object IvfIndex {
         Tables.embeddings(s, d).select("vec_id", "embedding"), codebook(s, d))
     }
 
-  /** Materializes codebook + assignments (Bench/ScaleProbe time this as
+  /** Materializes codebook + assignments (Bench/QueryBench time this as
     * the `ivf_index` shared-build part). One call suffices: the
     * assignments build nests the codebook build, and `sharedRelation`
     * already counts each relation at materialization — an extra count

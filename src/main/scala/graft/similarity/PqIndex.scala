@@ -26,7 +26,7 @@ object PqIndex {
         centroids(s, d))
     }
 
-  /** Materializes codebooks + codes (Bench/ScaleProbe time this as the
+  /** Materializes codebooks + codes (Bench/QueryBench time this as the
     * `pq_index` shared-build part). */
   def warm(s: SparkSession, d: String): Unit = {
     codes(s, d)

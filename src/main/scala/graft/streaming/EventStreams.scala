@@ -72,9 +72,10 @@ object EventStreams {
 
   /** Engine-reported stats of the most recent [[drainToFilesCounting]]
     * run in this JVM: micro-batch count, peak stateful-operator state
-    * rows, and watermark drops — the observables the 10× streaming scale
-    * probe reads ([[graft.StreamProbe]], VERDICT r3 item 7). Captured
-    * from the same synchronous progress buffer the drop count uses. */
+    * rows, watermark drops and the effective state width — the
+    * observables the streaming scale specs read (VERDICT r3 item 7).
+    * Captured from the same synchronous progress buffer the drop count
+    * uses. */
   final case class StreamRunStats(batches: Int, stateRowsMax: Long,
                                   stateRowsEnd: Long, dropped: Long,
                                   width: Int = 0)
@@ -88,37 +89,20 @@ object EventStreams {
     * join carries FOUR stores per partition — so width costs per-batch
     * file IO whether or not the partitions hold state. Sizing it to state
     * volume rather than inheriting the batch shuffle width halved every
-    * stateful query at sf0.1 (q71 6.0→2.2 s, family 17.6→9.6 s measured
-    * at 32 vs 8 by [[graft.StreamPartProbe]], which sweeps this var). On
-    * a real cluster this is the same knob sized UP — hundreds of
-    * partitions for TB-scale state; results are partition-count-
-    * independent either way (every query-path stream re-sorts after the
-    * drain). Env-overridable for cluster runs; the env parse is LAZY
-    * (not object-init) so a typo'd value surfaces as a named
-    * IllegalArgumentException at the first stream start — an eager field
-    * would wrap it in ExceptionInInitializerError and poison every later
-    * EventStreams touch with a message-less NoClassDefFoundError.
+    * stateful query at sf0.1 (q71 6.0→2.2 s, family 17.6→9.6 s at width
+    * 32 vs 8, measured by a width-sweep probe main since removed;
+    * ARCHITECTURE.md cites its source). On a real cluster this is the
+    * same knob sized UP — hundreds of partitions for TB-scale state;
+    * results are partition-count-independent either way (every
+    * query-path stream re-sorts after the drain).
     *
-    * Since r17 the un-overridden width is DERIVED per run from the
-    * stream's input volume ([[derivedParts]]) instead of a constant —
-    * the optimization-guide rule that partitioning must be
-    * scale-adaptive rather than tuned to either local mode or one
-    * cluster. This getter (the probe/spec surface) reports
-    * override/env/default; the derivation applies inside
-    * [[drainToFilesCounting]], where the stream's sources are known. */
-  def StreamShufflePartitions: Int =
-    partsOverride.orElse(envStreamParts).getOrElse(DefaultStreamParts)
-  /** Probe/test hook ([[graft.StreamPartProbe]] sweeps this). */
-  def StreamShufflePartitions_=(v: Int): Unit = { partsOverride = Some(v) }
-  /** Clears any probe override so the env/default read applies again —
-    * sweeps must restore via this, not by re-assigning the captured
-    * default, or a later SPARK_GRAFT_STREAM_PARTS read is masked for
-    * the rest of the JVM. */
-  def resetStreamShufflePartitions(): Unit = { partsOverride = None }
-  @volatile private var partsOverride: Option[Int] = None
-  /** Fallback width when neither an override nor the env nor a
-    * derivable input size is present. */
-  private val DefaultStreamParts = 8
+    * The rule: SPARK_GRAFT_STREAM_PARTS > width DERIVED from the
+    * stream's file-source bytes ([[derivedParts]]) > [[DefaultStreamParts]].
+    * The env parse is LAZY (not object-init) so a typo'd value surfaces
+    * as a named IllegalArgumentException at the first stream start — an
+    * eager field would wrap it in ExceptionInInitializerError and poison
+    * every later EventStreams touch with a message-less
+    * NoClassDefFoundError. */
   private lazy val envStreamParts: Option[Int] = {
     sys.env.get("SPARK_GRAFT_STREAM_PARTS").map { raw =>
       val parsed = raw.toIntOption.getOrElse(
@@ -128,6 +112,9 @@ object EventStreams {
       parsed
     }
   }
+  /** Fallback width when neither the env nor a derivable input size is
+    * present. */
+  private val DefaultStreamParts = 8
 
   /** Input-volume target per state partition for the DERIVED width
     * below — every partition is a per-batch state-store commit (delta
@@ -137,27 +124,41 @@ object EventStreams {
     * floor (events.parquet at sf0.1 is 2 MB) while a 100× corpus
     * derives ~7 and a TB-scale one derives hundreds — the same knob a
     * cluster deployment sizes UP for TB state, reached by data volume
-    * instead of a constant. Measured at sf0.1 (StreamPartProbe sweep,
-    * r17): width 8 → 2 is q71 3.76 → 2.31 s and −8…−38% across the
-    * whole streamed family, with zero result change (every query-path
-    * stream re-sorts after the drain). */
+    * instead of a constant. Measured at sf0.1 (r17, the removed width
+    * sweep above): width 8 → 2 is q71 3.76 → 2.31 s and −8…−38% across
+    * the whole streamed family, with zero result change (every
+    * query-path stream re-sorts after the drain). */
   private val BytesPerStatePartition: Long = 32L << 20
+
+  /** Spark's own rule for files a file source never reads
+    * (`InMemoryFileIndex.shouldFilterOutPathName`): `.`-prefixed names
+    * (checksums, editor temp files) and `_`-prefixed ones (`_SUCCESS`,
+    * `_spark_metadata`) unless they are `key=value` partition dirs. */
+  private def hiddenName(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
 
   /** Scale-ADAPTIVE state width (r17, optimization guide §2.2/§6): the
     * total on-disk size of the stream's FILE sources, divided by
     * [[BytesPerStatePartition]], floored at 2 (so the seam semantics
     * the specs pin — cross-partition merges, multi-store commits —
     * always exercise real fan-out). Returns None for non-file sources
-    * (RTSP, DSv2 probes), which fall back to [[DefaultStreamParts]].
-    * Precedence: probe override > SPARK_GRAFT_STREAM_PARTS > derived >
-    * default — a cluster run pins the env and never pays the listing. */
+    * (RTSP, DSv2 probes) and for a source path that does not exist yet,
+    * which fall back to [[DefaultStreamParts]].
+    *
+    * Each source path is read the way the file source reads it: glob
+    * patterns (the staged replays' chunk glob) expanded with `globStatus`,
+    * directories listed down to their leaf files, hidden names skipped
+    * at every level, and a `pathGlobFilter` applied to leaf names
+    * (ADVICE r17: a multi-part dataset directory must count its leaves,
+    * not its own entry length). */
   private def derivedParts(df: DataFrame): Option[Int] = try {
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val sizes = df.queryExecution.analyzed.collect {
       case sr: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
         val ds = sr.dataSource
-        val glob = ds.options.collectFirst {
-          case (k, v) if k.equalsIgnoreCase("pathGlobFilter") => v
+        val leafFilter = ds.options.collectFirst {
+          case (k, v) if k.equalsIgnoreCase("pathGlobFilter") =>
+            new org.apache.hadoop.fs.GlobFilter(v)
         }
         val paths =
           if (ds.paths.nonEmpty) ds.paths
@@ -165,27 +166,17 @@ object EventStreams {
             case (k, v) if k.equalsIgnoreCase("path") => v
           }.toSeq
         paths.map { p =>
-          val base = new org.apache.hadoop.fs.Path(p)
-          val fs = base.getFileSystem(conf)
-          glob match {
-            // ADVICE r17: globStatus only matches DIRECT children and
-            // returns a directory's own entry length (~KB) for a
-            // multi-part dataset directory, while pathGlobFilter matches
-            // LEAF files recursively — so the old form collapsed the
-            // derived width to the floor at exactly the multi-file scale
-            // the feature targets. Mirror the source: list leaf files
-            // recursively and sum the ones whose NAME matches the glob.
-            case Some(g) =>
-              val filter = new org.apache.hadoop.fs.GlobFilter(g)
-              val it = fs.listFiles(base, true)
-              var total = 0L
-              while (it.hasNext) {
-                val st = it.next()
-                if (filter.accept(st.getPath)) total += st.getLen
-              }
-              total
-            case None => fs.getContentSummary(base).getLength
-          }
+          val path = new org.apache.hadoop.fs.Path(p)
+          val fs = path.getFileSystem(conf)
+          def bytes(st: org.apache.hadoop.fs.FileStatus): Long =
+            if (hiddenName(st.getPath.getName)) 0L
+            else if (st.isDirectory) fs.listStatus(st.getPath).map(bytes).sum
+            else if (leafFilter.forall(_.accept(st.getPath))) st.getLen
+            else 0L
+          // null = a non-glob path that does not exist (yet)
+          val matched = Option(fs.globStatus(path)).getOrElse(
+            throw new java.io.FileNotFoundException(p))
+          matched.map(bytes).sum
         }
     }.flatten
     if (sizes.isEmpty) None
@@ -198,8 +189,7 @@ object EventStreams {
 
   /** The width a given stream should run at — see [[derivedParts]]. */
   private def widthFor(df: DataFrame): Int =
-    partsOverride.orElse(envStreamParts)
-      .orElse(derivedParts(df)).getOrElse(DefaultStreamParts)
+    envStreamParts.orElse(derivedParts(df)).getOrElse(DefaultStreamParts)
 
   /** Runs `body` with the session's `spark.sql.shuffle.partitions`
     * scoped to [[widthFor]] of `df` — the shared width helper (VERDICT
@@ -239,13 +229,12 @@ object EventStreams {
     * synchronous progress buffer is race-free, unlike a listener whose
     * events arrive on an async bus).
     *
-    * Runs the stream at [[widthFor]] (probe override > env > width
-    * DERIVED from the stream's file-source bytes > default — note the
-    * [[StreamShufflePartitions]] getter reports only override/env/
-    * default; the per-run EFFECTIVE width is recorded on
-    * [[lastRunStats]].width, ADVICE r17); the session's batch width is
-    * restored afterwards (micro-batch planning reads the conf at
-    * start(), so the scoped set binds only this query's state layout). */
+    * Runs the stream at [[widthFor]] (env > width DERIVED from the
+    * stream's file-source bytes > default; the per-run EFFECTIVE width
+    * is recorded on [[lastRunStats]].width, ADVICE r17); the session's
+    * batch width is restored afterwards (micro-batch planning reads the
+    * conf at start(), so the scoped set binds only this query's state
+    * layout). */
   def drainToFilesCounting(df: DataFrame, mode: String): (DataFrame, Long) = {
     // update-mode would silently duplicate keys through an append parquet
     // write (each state revision appended as a fresh row) — fail fast.

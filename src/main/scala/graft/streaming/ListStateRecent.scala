@@ -56,10 +56,6 @@ object ListStateRecent {
     }
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Apply the recent-items processor to a (possibly streaming) typed
     * source. Shared by the gate face and the spec. */
   def tracked(spark: SparkSession, events: Dataset[EventIn]): DataFrame = {
@@ -112,9 +108,7 @@ object ListStateRecent {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[EventIn]
 
-    val prev = spark.conf.getOption(ProviderKey)
-    try {
-      spark.conf.set(ProviderKey, RocksDbProvider)
+    SessionTimers.withRocksDb(spark) {
       // r18 (VERDICT r17 item 3): derived state width — each partition
       // is a per-micro-batch RocksDB commit, so session batch width
       // (32 at driver settings) is pure fixed cost here.
@@ -128,11 +122,6 @@ object ListStateRecent {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
     // chunk order: the file source triggers files in modification-time

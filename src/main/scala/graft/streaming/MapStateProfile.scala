@@ -51,10 +51,6 @@ object MapStateProfile {
     }
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Apply the profile processor to a (possibly streaming) typed source.
     * Shared by the gate face and the spec so the wiring cannot drift. */
   def profiled(spark: SparkSession, events: Dataset[EventIn]): DataFrame = {
@@ -89,9 +85,7 @@ object MapStateProfile {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[EventIn]
 
-    val prev = spark.conf.getOption(ProviderKey)
-    try {
-      spark.conf.set(ProviderKey, RocksDbProvider)
+    SessionTimers.withRocksDb(spark) {
       // r18 (VERDICT r17 item 3): derived state width — each partition
       // is a per-micro-batch RocksDB commit, so session batch width
       // (32 at driver settings) is pure fixed cost here.
@@ -105,11 +99,6 @@ object MapStateProfile {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
     spark.read.parquet(out)

@@ -63,10 +63,6 @@ object RateLimitStream {
     }
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Apply the quota processor to a (possibly streaming) typed source.
     * Shared by the oracle face and the spec so the wiring cannot drift. */
   def limited(spark: SparkSession,
@@ -84,17 +80,9 @@ object RateLimitStream {
     import spark.implicits._
     val in = EventStreams.eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_id")).as[EventIn]
-    val prev = spark.conf.getOption(ProviderKey)
-    val out =
-      try {
-        spark.conf.set(ProviderKey, RocksDbProvider)
-        EventStreams.drainToFiles(limited(spark, in), "append")
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(ProviderKey, v)
-          case None => spark.conf.unset(ProviderKey)
-        }
-      }
+    val out = SessionTimers.withRocksDb(spark) {
+      EventStreams.drainToFiles(limited(spark, in), "append")
+    }
     out.select("event_id", "user_id", "k", "throttled").orderBy("event_id")
   }
 }

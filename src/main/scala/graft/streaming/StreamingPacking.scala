@@ -144,10 +144,6 @@ object StreamingPacking {
       .toDF()
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Replay a staged (shard, pos, doc_id, n_tokens) relation as TWO real
     * micro-batches (split by a pos threshold — each batch a per-shard
     * prefix of the export order) through the RocksDB ValueState engine;
@@ -195,9 +191,7 @@ object StreamingPacking {
       org.apache.spark.sql.types.StructField("n_tokens", lt)))
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[DocIn]
-    val prev = spark.conf.getOption(ProviderKey)
-    try {
-      spark.conf.set(ProviderKey, RocksDbProvider)
+    SessionTimers.withRocksDb(spark) {
       // r18 (VERDICT r17 item 3): derived state width — each partition
       // is a per-micro-batch RocksDB commit, so session batch width
       // (32 at driver settings) is pure fixed cost here.
@@ -211,11 +205,6 @@ object StreamingPacking {
           }
           .start()
         try q.processAllAvailable() finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
     spark.read.parquet(out)

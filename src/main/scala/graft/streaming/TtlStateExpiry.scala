@@ -71,10 +71,6 @@ object TtlStateExpiry {
     }
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Apply the TTL'd processor to a typed source (spec hook — the spec
     * feeds slice-controlled files and a spec-chosen TTL). */
   def profiled(spark: SparkSession, events: Dataset[EventIn],
@@ -130,9 +126,7 @@ object TtlStateExpiry {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[EventIn]
 
-    val prev = spark.conf.getOption(ProviderKey)
-    try {
-      spark.conf.set(ProviderKey, RocksDbProvider)
+    SessionTimers.withRocksDb(spark) {
       // A processing-time-mode stateful query NEVER quiesces: the
       // engine's shouldRunAnotherBatch is unconditionally true (the
       // clock must keep advancing for timeouts/TTL), so BOTH
@@ -173,11 +167,6 @@ object TtlStateExpiry {
             throw new IllegalStateException(
               "TTL replay: the second data batch did not complete within 300 s")
         } finally q.stop()
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
       }
     }
     spark.read.parquet(out)

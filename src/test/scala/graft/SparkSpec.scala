@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session fixture: one SparkSession per JVM (getOrCreate), local
   * parallelism, UTC, small shuffle fan-out for test-sized data. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf0001 = "/root/testdata/sf0.001"
 }

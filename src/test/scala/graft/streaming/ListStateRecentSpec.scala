@@ -17,31 +17,23 @@ class ListStateRecentSpec extends SparkSpec {
   test("the ring folds across the batch boundary against a hand truth") {
     import spark.implicits._
     implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ck = java.nio.file.Files.createTempDirectory("graft-liststate-spec-")
     graft.TempDirs.cleanupOnExit(ck)
     val mem = MemoryStream[EventIn]
-    val q = tracked(spark, mem.toDS()).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ck.toString)
-      .format("memory").queryName("liststate_spec_sink")
-      .start()
-    try {
-      // batch 1 REVERSED in arrival order — the slice sort must fix it
-      mem.addData(EventIn(7L, 3L, "c"), EventIn(7L, 1L, "a"), EventIn(7L, 2L, "b"))
-      q.processAllAvailable()
-      // batch 2 pushes two more: 'a' and 'b' must scroll out of the ring
-      mem.addData(EventIn(7L, 4L, "d"), EventIn(7L, 5L, "e"))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    SessionTimers.withRocksDb(spark) {
+      val q = tracked(spark, mem.toDS()).writeStream
+        .outputMode("append")
+        .option("checkpointLocation", ck.toString)
+        .format("memory").queryName("liststate_spec_sink")
+        .start()
+      try {
+        // batch 1 REVERSED in arrival order — the slice sort must fix it
+        mem.addData(EventIn(7L, 3L, "c"), EventIn(7L, 1L, "a"), EventIn(7L, 2L, "b"))
+        q.processAllAvailable()
+        // batch 2 pushes two more: 'a' and 'b' must scroll out of the ring
+        mem.addData(EventIn(7L, 4L, "d"), EventIn(7L, 5L, "e"))
+        q.processAllAvailable()
+      } finally q.stop()
     }
     val out = spark.table("liststate_spec_sink")
       .orderBy("n_seen")

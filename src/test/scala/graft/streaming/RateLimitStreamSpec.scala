@@ -12,20 +12,6 @@ import graft.SparkSpec
   */
 class RateLimitStreamSpec extends SparkSpec {
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[A](body: => A): A = {
-    val prev = spark.conf.getOption(ProviderKey)
-    try {
-      spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      body
-    } finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
-
   test("the ValueState counter continues across batches; order within a batch is event_id") {
     import spark.implicits._
     implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -33,7 +19,7 @@ class RateLimitStreamSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Long)]
     val in = mem.toDF().toDF("user_id", "event_id")
       .as[RateLimitStream.EventIn]
-    val out = withRocksDb {
+    val out = SessionTimers.withRocksDb(spark) {
       val sink = "rate_limit_sink"
       val q = RateLimitStream.limited(spark, in)
         .writeStream.outputMode("append").format("memory").queryName(sink).start()

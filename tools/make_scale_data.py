@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Dev-only scale-probe data builder (the ScaleProbe input).
+"""Dev-only scale data builder: a replicated sf directory for timing a
+query subset at N× data with `graft.QueryBench <outDir> <prefixes>`.
 
 Replicates the SF-proportional tables N times:
 

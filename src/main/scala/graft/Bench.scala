@@ -1,5 +1,28 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
 object Bench {
+
+  /** The seven shared-relation builds, in build order, each under its
+    * `shared_build_parts` key on the bench record. [[QueryBench]] runs
+    * the same list to pre-build them. */
+  val SharedBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "dedup_trio" -> graft.queries.PipelineQueries.warmSharedRelations,
+    "dense_ids" -> graft.queries.SharedRelations.warm,
+    "bucketed_layout" -> BucketedTables.warm,
+    "partitioned_layout" -> PartitionedTables.warm,
+    "ivf_index" -> graft.similarity.IvfIndex.warm,
+    "pq_index" -> graft.similarity.PqIndex.warm,
+    "zorder_layout" -> ZOrderTables.warm)
+
+  /** True median: even-length inputs average the two middle elements
+    * (upper-middle alone would report the max of 2 reps — biased high). */
+  def median(ts: Seq[Double]): Double = {
+    val s = ts.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
 
   /** The repo's bench-methodology load rule (established round 3,
     * whole-run since round 9): totals swing ~2× with host load, so a
@@ -328,18 +351,11 @@ object Bench {
       }
       t
     }
-    val sharedTrio = timed(graft.queries.PipelineQueries.warmSharedRelations(spark, sfDir))
-    val sharedDense = timed(graft.queries.SharedRelations.warm(spark, sfDir))
-    val sharedBuckets = timed(BucketedTables.warm(spark, sfDir))
-    val sharedParts = timed(PartitionedTables.warm(spark, sfDir))
-    val sharedIvf = timed(graft.similarity.IvfIndex.warm(spark, sfDir))
-    val sharedPq = timed(graft.similarity.PqIndex.warm(spark, sfDir))
-    val sharedZorder = timed(ZOrderTables.warm(spark, sfDir))
+    val sharedTimes = SharedBuilds.map { case (name, build) =>
+      name -> timed(build(spark, sfDir))
+    }
     val sharedBuild =
-      if (sharedTrio < 0 || sharedDense < 0 || sharedBuckets < 0 ||
-        sharedParts < 0 || sharedIvf < 0 || sharedPq < 0 || sharedZorder < 0) -1.0
-      else sharedTrio + sharedDense + sharedBuckets + sharedParts +
-        sharedIvf + sharedPq + sharedZorder
+      if (sharedTimes.exists(_._2 < 0)) -1.0 else sharedTimes.map(_._2).sum
     // per-rep loadavg stamps (VERDICT r10 item 3): mid-run loadavg
     // mostly measures the bench's own 32 threads, so it is NOT a taint
     // input — but stamping its max on the record lets a reader see the
@@ -378,13 +394,6 @@ object Bench {
         }
         name -> times
       }
-    // true median: even-length inputs average the two middle elements
-    // (upper-middle alone would report the max of 2 reps — biased high)
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
     // any failed rep marks the whole query failed (-1): a query that
     // crashes intermittently must not report its lucky-rep median
     val med = runs.map { case (n, ts) =>
@@ -513,10 +522,7 @@ object Bench {
     // reported — the two fields now tile (`value` = shared ok-portion +
     // query medians). Cross-round note: r13+ totals carry those seconds;
     // pre-r13 totals do not (ARCHITECTURE round table).
-    val sharedOk = math.max(sharedTrio, 0.0) + math.max(sharedDense, 0.0) +
-      math.max(sharedBuckets, 0.0) + math.max(sharedParts, 0.0) +
-      math.max(sharedIvf, 0.0) + math.max(sharedPq, 0.0) +
-      math.max(sharedZorder, 0.0)
+    val sharedOk = sharedTimes.map(t => math.max(t._2, 0.0)).sum
     val total = sharedOk + ok.map { case (_, ts) => median(ts) }.sum
     val totalMin = sharedOk + ok.map(_._2.min).sum
     val totalMax = sharedOk + ok.map(_._2.max).sum
@@ -583,7 +589,9 @@ object Bench {
     val bandTop = ok.map { case (n, ts) => shortName(n) -> (ts.max - ts.min) }
       .sortBy(-_._2).take(8)
       .map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"median_def":"midpoint_even","attempt":$attempt,"load_wait_sec":$waited,"shared_build":${ms(sharedBuild)},"shared_build_parts":{"dedup_trio":${ms(sharedTrio)},"dense_ids":${ms(sharedDense)},"bucketed_layout":${ms(sharedBuckets)},"partitioned_layout":${ms(sharedParts)},"ivf_index":${ms(sharedIvf)},"pq_index":${ms(sharedPq)},"zorder_layout":${ms(sharedZorder)}},"band":{"min":${ms(totalMin)},"max":${ms(totalMax)}},"rep_totals":$repTotalsJson,"band_top":$bandTop,"failed":$failed,"tainted":$tainted,"kept_hot":$anyKeptRepHot,"n_suspect":${suspects.size},"suspect_baseline":$suspectBaseline,"suspects":$suspectsJson,"suspects_adjudicated":$adjudicatedJson,"external_busy":{"available":$extAvailable,"signal":"$extSignal","end":${ms(extEnd)},"max_kept":${ms(maxKeptExternal)},"kernel_run":${ms(kernelRun)}},"load_avg":{"start":${ms(loadStart)},"end":${ms(loadEnd)},"max_mid":${ms(maxMidLoad)}},"wall_sec":${ms(wallSec)},"queries":${fmt(med)},"query_bands":${fmtBands(runs)},"sf":"$sfDir"}""")
+    val sharedPartsJson =
+      sharedTimes.map { case (n, t) => s""""$n":${ms(t)}""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"median_def":"midpoint_even","attempt":$attempt,"load_wait_sec":$waited,"shared_build":${ms(sharedBuild)},"shared_build_parts":$sharedPartsJson,"band":{"min":${ms(totalMin)},"max":${ms(totalMax)}},"rep_totals":$repTotalsJson,"band_top":$bandTop,"failed":$failed,"tainted":$tainted,"kept_hot":$anyKeptRepHot,"n_suspect":${suspects.size},"suspect_baseline":$suspectBaseline,"suspects":$suspectsJson,"suspects_adjudicated":$adjudicatedJson,"external_busy":{"available":$extAvailable,"signal":"$extSignal","end":${ms(extEnd)},"max_kept":${ms(maxKeptExternal)},"kernel_run":${ms(kernelRun)}},"load_avg":{"start":${ms(loadStart)},"end":${ms(loadEnd)},"max_mid":${ms(maxMidLoad)}},"wall_sec":${ms(wallSec)},"queries":${fmt(med)},"query_bands":${fmtBands(runs)},"sf":"$sfDir"}""")
     // The driver persists only the LAST ~2000 chars of stdout. At 124
     // queries the full line above outgrew that window and BENCH_r10 went
     // on record with "parsed": null — no total at all (VERDICT r10 item

@@ -31,8 +31,11 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
 
   private val scoped = mutable.ArrayBuffer.empty[DataFrame]
-  private val shared = mutable.LinkedHashMap.empty[String, DataFrame]
-  // keys whose shared build is currently running OUTSIDE the monitor —
+  // relations persisted by sharedRelation — unpersisted by releaseShared
+  // (or once their session stops); the memo entry serves them
+  private val shared = mutable.ArrayBuffer.empty[DataFrame]
+  private val memos = mutable.HashMap.empty[String, Any]
+  // keys whose memo build is currently running OUTSIDE the monitor —
   // waiters block on the latch, not on the global lock (a multi-second
   // build under `synchronized` would stall every scopedPersist/release
   // from other threads, e.g. a foreachBatch or parallel-suite thread).
@@ -47,20 +50,25 @@ object Caches {
   private def sessionKey(spark: SparkSession, name: String, dir: String): String =
     s"${org.apache.spark.sql.graft.SessionBridge.uuid(spark)}|$dir|$name"
 
-  /** Drop (and unpersist) entries whose session has been stopped — they
-    * can never be served again, and holding them pins the dead session's
-    * plan graphs across test suites. Caller holds the lock. */
+  /** Drop (and unpersist) shared relations whose session has been
+    * stopped — they can never be served again, and holding them pins the
+    * dead session's plan graphs across test suites. Caller holds the
+    * lock. */
   private def evictStopped(): Unit = {
-    val dead = shared.filter { case (_, df) =>
+    val dead = shared.filter { df =>
       try df.sparkSession.sparkContext.isStopped
       catch { case _: Throwable => true }
     }
-    dead.foreach { case (k, df) =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-      shared.remove(k)
+    if (dead.nonEmpty) {
+      dead.foreach(unpersistQuietly)
+      shared --= dead
+      memos.filterInPlace { case (_, v) => !dead.contains(v) }
     }
   }
+
+  private def unpersistQuietly(df: DataFrame): Unit =
+    try df.unpersist(blocking = false)
+    catch { case _: Throwable => () }
 
   /** Persist `df` for the duration of the current query. */
   def scopedPersist(df: DataFrame): DataFrame = synchronized {
@@ -88,7 +96,8 @@ object Caches {
     p
   }
 
-  /** Compute-once relation shared across queries of one (session, dir).
+  /** Compute-once relation shared across queries of one (session, dir),
+    * built on [[memo]]'s per-key latch.
     *
     * Materialized EAGERLY: a shared build may internally register scoped
     * persists (RowIds' sorted intermediate) whose two-pass consistency
@@ -96,21 +105,40 @@ object Caches {
     * caller construct it, releaseScoped(), and materialize later with
     * the intermediate gone — re-running the range sort independently in
     * each subtree. Counting here pins materialization inside the build's
-    * own scoped-persist window.
-    *
-    * The build (a full Spark job) runs OUTSIDE the global monitor: the
-    * lock guards only the map lookups. A concurrent caller of the same
-    * key waits on a per-key latch and re-checks; a caller of a DIFFERENT
-    * key (or of scopedPersist/releaseScoped) proceeds immediately. Nested
-    * builds (verified_pairs builds shingle_docs) use distinct keys, so
-    * the same thread never waits on its own latch. */
+    * own scoped-persist window. Nested builds (verified_pairs builds
+    * shingle_docs) use distinct keys, so the same thread never waits on
+    * its own latch. */
   def sharedRelation(spark: SparkSession, dir: String, name: String)
-                    (build: => DataFrame): DataFrame = {
+                    (build: => DataFrame): DataFrame =
+    memo(spark, dir, name) {
+      val p = build.persist(StorageLevel.MEMORY_AND_DISK)
+      p.count()
+      synchronized { shared += p }
+      p
+    }
+
+  /** Compute-once Long per (session, dir) — the scalar sibling of
+    * [[sharedRelation]], for values like a corpus count that size a
+    * downstream plan (q57's bandBits) but are constant for a session. */
+  def sharedLong(spark: SparkSession, dir: String, name: String)
+                (compute: => Long): Long =
+    memo(spark, dir, name)(compute)
+
+  /** Compute-once value per (session, dir, name) with the build OUTSIDE
+    * the monitor — the registry primitive behind [[sharedRelation]],
+    * [[sharedLong]] and the standing layouts ([[BucketedTables]],
+    * [[PartitionedTables]]) whose build is a multi-second Spark write
+    * job. The lock guards only the map lookups: a concurrent caller of
+    * the same key waits on a per-key latch and re-checks (retrying if
+    * the first build failed); a caller of a different key (or of
+    * scopedPersist/releaseScoped) never blocks behind the build. The
+    * build runs at most once per key. */
+  def memo[T](spark: SparkSession, dir: String, name: String)(build: => T): T = {
     val key = sessionKey(spark, name, dir)
     val claim = synchronized {
       evictStopped()
-      shared.get(key) match {
-        case Some(df) => Some(Right(df))
+      memos.get(key) match {
+        case Some(v) => Some(Right(v))
         case None => inFlight.get(key) match {
           case Some(latch) => Some(Left(latch))
           case None =>
@@ -120,87 +148,20 @@ object Caches {
       }
     }
     claim match {
-      case Some(Right(df)) => df
+      case Some(Right(v)) => v.asInstanceOf[T]
       case Some(Left(latch)) =>
         latch.await()
         // built by the other thread — or its build failed, in which case
         // the key is free again and this call retries the build itself.
-        sharedRelation(spark, dir, name)(build)
-      case None =>
-        val latch = synchronized(inFlight(key))
-        try {
-          val p = build.persist(StorageLevel.MEMORY_AND_DISK)
-          p.count()
-          synchronized { shared(key) = p }
-          p
-        } finally {
-          synchronized { inFlight.remove(key) }
-          latch.countDown()
-        }
-    }
-  }
-
-  private val longs = mutable.HashMap.empty[String, Long]
-
-  /** Compute-once Long per (session, dir) — the scalar sibling of
-    * [[sharedRelation]], for values like a corpus count that size a
-    * downstream plan (q57's bandBits) but are constant for a session.
-    * `compute` runs OUTSIDE the monitor; a concurrent race computes the
-    * same deterministic value twice and the first write wins — acceptable
-    * for a cheap count, and it keeps multi-second jobs off the global
-    * lock. Entries are 8 bytes each and keyed by session UUID, so stale
-    * keys from stopped sessions cost nothing; [[releaseShared]] clears
-    * them anyway. */
-  def sharedLong(spark: SparkSession, dir: String, name: String)
-                (compute: => Long): Long = {
-    val key = sessionKey(spark, name, dir)
-    synchronized(longs.get(key)) match {
-      case Some(v) => v
-      case None =>
-        val v = compute
-        synchronized(longs.getOrElseUpdate(key, v))
-    }
-  }
-
-  private val memos = mutable.HashMap.empty[String, Any]
-  private val memoInFlight = mutable.HashMap.empty[String, java.util.concurrent.CountDownLatch]
-
-  /** Compute-once value per (session, dir, name) with the build OUTSIDE
-    * the monitor — the registry primitive for standing layouts
-    * ([[BucketedTables]], [[PartitionedTables]]) whose build is a
-    * multi-second Spark write job. Same per-key-latch discipline as
-    * [[sharedRelation]]: a concurrent caller of the same key waits on
-    * the latch and re-checks (retrying if the first build failed); a
-    * caller of a different key never blocks behind the write. Unlike
-    * [[sharedLong]] the build runs at most once per key — layout writes
-    * are not idempotent-cheap, so the lose-the-race-recompute stance
-    * doesn't apply. */
-  def memo[T](spark: SparkSession, dir: String, name: String)(build: => T): T = {
-    val key = sessionKey(spark, name, dir)
-    val claim = synchronized {
-      memos.get(key) match {
-        case Some(v) => Some(Right(v))
-        case None => memoInFlight.get(key) match {
-          case Some(latch) => Some(Left(latch))
-          case None =>
-            memoInFlight(key) = new java.util.concurrent.CountDownLatch(1)
-            None
-        }
-      }
-    }
-    claim match {
-      case Some(Right(v)) => v.asInstanceOf[T]
-      case Some(Left(latch)) =>
-        latch.await()
         memo(spark, dir, name)(build)
       case None =>
-        val latch = synchronized(memoInFlight(key))
+        val latch = synchronized(inFlight(key))
         try {
           val v = build
           synchronized { memos(key) = v }
           v
         } finally {
-          synchronized { memoInFlight.remove(key) }
+          synchronized { inFlight.remove(key) }
           latch.countDown()
         }
     }
@@ -209,24 +170,17 @@ object Caches {
   /** Unpersist every scoped relation registered since the last release.
     * Safe against already-stopped sessions (specs stop theirs). */
   def releaseScoped(): Unit = synchronized {
-    scoped.foreach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
+    scoped.foreach(unpersistQuietly)
     scoped.clear()
   }
 
-  /** Unpersist the shared relations too — session end only. */
+  /** Unpersist the shared relations too — session end only. Memoized
+    * layout paths/names go as well: the temp dirs themselves are
+    * JVM-lifetime (TempDirs.cleanupOnExit), but a fresh session must
+    * rebuild its own entries rather than see a stopped session's. */
   def releaseShared(): Unit = synchronized {
-    shared.values.foreach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
+    shared.foreach(unpersistQuietly)
     shared.clear()
-    longs.clear()
-    // memoized layout PATHS/names go too — the temp dirs themselves are
-    // JVM-lifetime (TempDirs.cleanupOnExit), but a fresh session must
-    // rebuild its own entries rather than see a stopped session's
     memos.clear()
   }
 }

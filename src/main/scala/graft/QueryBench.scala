@@ -31,15 +31,8 @@ object QueryBench {
       Tables.events(spark, sfDir).count()
       Tables.documents(spark, sfDir).count()
       Tables.embeddings(spark, sfDir).count()
-      if (sys.env.get("SPARK_GRAFT_QBENCH_WARM_SHARED").contains("1")) {
-        graft.queries.PipelineQueries.warmSharedRelations(spark, sfDir)
-        graft.queries.SharedRelations.warm(spark, sfDir)
-        BucketedTables.warm(spark, sfDir)
-        PartitionedTables.warm(spark, sfDir)
-        graft.similarity.IvfIndex.warm(spark, sfDir)
-        graft.similarity.PqIndex.warm(spark, sfDir)
-        ZOrderTables.warm(spark, sfDir)
-      }
+      if (sys.env.get("SPARK_GRAFT_QBENCH_WARM_SHARED").contains("1"))
+        Bench.SharedBuilds.foreach { case (_, build) => build(spark, sfDir) }
     } catch { case e: Throwable =>
       System.err.println(s"[qbench] warm-up failed: ${e.getMessage}")
     }
@@ -57,11 +50,7 @@ object QueryBench {
           -1.0
         } finally Caches.releaseScoped()
       }
-      val s = times.sorted
-      val med =
-        if (times.exists(_ < 0)) -1.0
-        else if (s.length % 2 == 1) s(s.length / 2)
-        else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+      val med = if (times.exists(_ < 0)) -1.0 else Bench.median(times)
       println(f"[qbench] $name%-34s med=$med%8.3f  band=[${times.min}%.3f,${times.max}%.3f]  reps=$reps  cpus=$cpus%s")
     }
     Caches.releaseShared()

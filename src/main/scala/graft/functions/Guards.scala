@@ -48,4 +48,14 @@ object Guards {
       raise_error(concat(
         lit(s"$what: shift outside [0,$maxShift]: "), shift.cast("string"))))
       .otherwise(call_function("shiftleft", v, shift.cast("int")))
+
+  /** `v` unchanged, or a named error when it lies outside [lo, hi] — the
+    * domain guard for a fixed-width packing whose bijection holds only
+    * on a bounded range (q192/q198's `(pk << 32) + pk` pair key). Nulls
+    * pass through. */
+  def checkedRange(v: Column, lo: Long, hi: Long, what: String): Column =
+    when(v < lo || v > hi,
+      raise_error(concat(
+        lit(s"$what: outside [$lo,$hi]: "), v.cast("string"))))
+      .otherwise(v)
 }

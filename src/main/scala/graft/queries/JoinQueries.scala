@@ -246,7 +246,7 @@ object JoinQueries {
     * the pair counts describe one table), top-3 per part via a
     * vocabulary-bounded (sim DESC, part_b) rank window. Shared so the
     * recommender and its eval can never drift. */
-  private def itemNeighbors(bb: DataFrame): DataFrame = {
+  private[graft] def itemNeighbors(bb: DataFrame): DataFrame = {
     val mink = udaf(new graft.expressions.MinKLong(BasketCap))
     val capped = graft.Caches.scopedPersist(
       bb.select(col("ck"), col("pk"),
@@ -256,14 +256,17 @@ object JoinQueries {
         .groupBy("ck")
         .agg(mink(col("pri"), col("pk")).as("keep"))
         .select(col("ck"), explode(col("keep")).as("e"))
-        .select(col("ck"), col("e._2").as("pk")))
+        // the packed pair key below is bijective only for 0 <= pk < 2^31:
+        // checked once per capped incidence row, not per expanded pair
+        .select(col("ck"), graft.functions.Guards.checkedRange(col("e._2"),
+          0L, Int.MaxValue.toLong, "q192/q198 packed pair key: part id").as("pk")))
     val marg = capped.groupBy(col("pk")).agg(count(lit(1)).as("c"))
     // r18 (VERDICT r17 item 2, guide §2.3 — narrower shuffle keys): the
     // pair count, the chain's heaviest shuffle (C(64,2)-bounded rows per
     // customer), groups on ONE packed 64-bit key instead of two long
-    // columns. pk is a positive 32-bit part id (l_partkey), so
-    // (pk_a << 32) + pk_b is bijective and the post-agg unpack
-    // reconstructs the exact (part_a, part_b) longs — half the group-key
+    // columns. pk is a non-negative 31-bit part id (l_partkey, guarded
+    // on `capped`), so (pk_a << 32) + pk_b is bijective and the post-agg
+    // unpack reconstructs the exact (part_a, part_b) longs — half the group-key
     // bytes through the exchange and one-column hashing/comparison in
     // the partial and final aggregates. Measured by the r17 stage
     // profile (packed vs two-column pair count) before landing.

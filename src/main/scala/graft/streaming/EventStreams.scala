@@ -142,8 +142,9 @@ object EventStreams {
     * [[BytesPerStatePartition]], floored at 2 (so the seam semantics
     * the specs pin — cross-partition merges, multi-store commits —
     * always exercise real fan-out). Returns None for non-file sources
-    * (RTSP, DSv2 probes) and for a source path that does not exist yet,
-    * which fall back to [[DefaultStreamParts]].
+    * (RTSP, DSv2 probes) and for a source path that does not exist yet
+    * or cannot be listed ([[sourceBytes]]), which fall back to
+    * [[DefaultStreamParts]].
     *
     * Each source path is read the way the file source reads it: glob
     * patterns (the staged replays' chunk glob) expanded with `globStatus`,
@@ -151,7 +152,7 @@ object EventStreams {
     * at every level, and a `pathGlobFilter` applied to leaf names
     * (ADVICE r17: a multi-part dataset directory must count its leaves,
     * not its own entry length). */
-  private def derivedParts(df: DataFrame): Option[Int] = try {
+  private def derivedParts(df: DataFrame): Option[Int] = {
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val sizes = df.queryExecution.analyzed.collect {
       case sr: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
@@ -165,27 +166,41 @@ object EventStreams {
           else ds.options.collectFirst {
             case (k, v) if k.equalsIgnoreCase("path") => v
           }.toSeq
-        paths.map { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val fs = path.getFileSystem(conf)
-          def bytes(st: org.apache.hadoop.fs.FileStatus): Long =
-            if (hiddenName(st.getPath.getName)) 0L
-            else if (st.isDirectory) fs.listStatus(st.getPath).map(bytes).sum
-            else if (leafFilter.forall(_.accept(st.getPath))) st.getLen
-            else 0L
-          // null = a non-glob path that does not exist (yet)
-          val matched = Option(fs.globStatus(path)).getOrElse(
-            throw new java.io.FileNotFoundException(p))
-          matched.map(bytes).sum
-        }
+        paths.map(sourceBytes(_, leafFilter, conf))
     }.flatten
-    if (sizes.isEmpty) None
+    if (sizes.isEmpty || sizes.exists(_.isEmpty)) None
     else {
-      val total = sizes.sum
+      val total = sizes.flatten.sum
       Some(math.max(2L,
         (total + BytesPerStatePartition - 1) / BytesPerStatePartition).toInt)
     }
-  } catch { case _: Exception => None }
+  }
+
+  /** Visible bytes under one file-source path, or None when they cannot
+    * be counted. A path that does not exist (yet) is the growing-stream
+    * case and falls back quietly; any other listing failure is reported
+    * on stderr, naming the path, so a width that silently stays at the
+    * fallback cannot hide a broken derivation. */
+  private def sourceBytes(p: String,
+                          leafFilter: Option[org.apache.hadoop.fs.GlobFilter],
+                          conf: org.apache.hadoop.conf.Configuration): Option[Long] =
+    try {
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(conf)
+      def bytes(st: org.apache.hadoop.fs.FileStatus): Long =
+        if (hiddenName(st.getPath.getName)) 0L
+        else if (st.isDirectory) fs.listStatus(st.getPath).map(bytes).sum
+        else if (leafFilter.forall(_.accept(st.getPath))) st.getLen
+        else 0L
+      // null = a non-glob path that does not exist (yet)
+      Option(fs.globStatus(path)).map(_.map(bytes).sum)
+    } catch {
+      case _: java.io.FileNotFoundException => None
+      case e: Exception =>
+        System.err.println(s"[graft] stream width: cannot list source $p " +
+          s"(${e.getClass.getName}: ${e.getMessage}); using width $DefaultStreamParts")
+        None
+    }
 
   /** The width a given stream should run at — see [[derivedParts]]. */
   private def widthFor(df: DataFrame): Int =
@@ -194,9 +209,9 @@ object EventStreams {
   /** Runs `body` with the session's `spark.sql.shuffle.partitions`
     * scoped to [[widthFor]] of `df` — the shared width helper (VERDICT
     * r17 item 3) for the streamed faces that run their OWN
-    * `writeStream` (transformWithState / mapGroupsWithState /
-    * foreachBatch replays) instead of draining through
-    * [[drainToFilesCounting]]. Those faces otherwise inherit the
+    * `writeStream` instead of draining through [[drainToFilesCounting]]
+    * (q207's update-mode fold, q228's processing-time latch — drains
+    * the file drain cannot express). Those faces otherwise inherit the
     * session's BATCH width (32 at driver settings) as their state-store
     * partition count, paying a per-micro-batch commit per store per
     * partition that the derived width already proved unnecessary at the
@@ -205,17 +220,51 @@ object EventStreams {
     * recorded in the checkpoint — and the previous session width is
     * restored even when `body` throws, so batch queries never keep
     * running at stream width. */
-  def withStreamWidth[T](df: DataFrame)(body: => T): T = {
-    val spark = df.sparkSession
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(partsKey)
+  def withStreamWidth[T](df: DataFrame)(body: => T): T =
+    withConfs(df.sparkSession, PartsKey -> widthFor(df).toString)(body)
+
+  private val PartsKey = "spark.sql.shuffle.partitions"
+
+  /** Runs `body` with each (key, value) set on the session conf, then
+    * puts every key back as it was (unset if it was unset), even when
+    * `body` throws — the one set-and-restore scope behind the width,
+    * progress-retention and state-store settings of a stream run. */
+  private[streaming] def withConfs[T](spark: SparkSession, confs: (String, String)*)
+                                     (body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
-      spark.conf.set(partsKey, widthFor(df).toString)
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       body
-    } finally prev match {
-      case Some(v) => spark.conf.set(partsKey, v)
-      case None => spark.conf.unset(partsKey)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The one staged micro-batch replay source. Writes each chunk as one
+    * parquet file under a fresh temp root, stamps the files with strictly
+    * increasing mtimes in chunk order, and returns the
+    * `maxFilesPerTrigger=1` file stream over them, typed by the chunks'
+    * own schema — so micro-batch i is chunk i. The file source triggers
+    * files oldest-mtime-first with the listing order breaking ties, and
+    * chunks written within the same millisecond tie often enough to swap;
+    * the order-dependent folds (ListState's recent items, the packing
+    * walks) need batch 0 to be chunk 0 by construction, so every replay
+    * gets the pin. The stamps are 60 s apart, far beyond any
+    * filesystem's timestamp granularity. The root is deleted at JVM exit
+    * (the stream reads it lazily). */
+  def stagedStream(chunks: Seq[DataFrame]): DataFrame = {
+    require(chunks.nonEmpty, "stagedStream needs at least one chunk")
+    val root = java.nio.file.Files.createTempDirectory("graft-staged-")
+    cleanupOnExit(root)
+    val t0 = System.currentTimeMillis() - 60000L * chunks.size
+    chunks.zipWithIndex.foreach { case (chunk, i) =>
+      val dir = s"$root/chunk$i"
+      chunk.coalesce(1).write.parquet(dir)
+      new java.io.File(dir).listFiles().foreach(_.setLastModified(t0 + 60000L * i))
+    }
+    chunks.head.sparkSession.readStream.schema(chunks.head.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$root/*")
   }
 
   /** [[drainToFiles]] plus the number of input rows the stateful operators
@@ -245,56 +294,42 @@ object EventStreams {
     cleanupOnExit(root)
     val dir = root.toString + "/out"
     val writeMode = if (mode == "complete") "overwrite" else "append"
-    val retentionKey = "spark.sql.streaming.numRecentProgressUpdates"
-    val prevRetention = spark.conf.getOption(retentionKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(partsKey)
     // the conf sets live INSIDE the restore scope: if start() or stop()
     // throws, the session must not be left buffering 100k progress
     // objects per stream — or running batch queries at the streaming
     // state width — for the rest of a harness run
     val effectiveWidth = widthFor(df)
-    val dropped =
-      try {
-        spark.conf.set(retentionKey, "100000")
-        spark.conf.set(partsKey, effectiveWidth.toString)
-        val query = df.writeStream.outputMode(mode)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode(writeMode).parquet(dir)
-            ()
-          }
-          .start()
-        try query.processAllAvailable()
-        finally query.stop()
-        val perBatch = query.recentProgress
-          .map(p => Option(p.stateOperators).toSeq.flatten)
-          .filter(_.nonEmpty)
-        val ops = perBatch.flatten
-        // stateRowsEnd = state surviving the LAST batch (after the final
-        // watermark advance evicted finalized windows/sessions) — the
-        // number that must stay horizon-bounded on an unbounded stream,
-        // where the peak legitimately includes pre-eviction build-up
-        // peak = max over PER-BATCH SUMS of all stateful operators (a
-        // per-entry max would understate a multi-operator chain's state)
-        lastRunStats = Some(StreamRunStats(
-          batches = query.recentProgress.length,
-          stateRowsMax =
-            if (perBatch.isEmpty) 0L
-            else perBatch.map(_.map(_.numRowsTotal).sum).max,
-          stateRowsEnd = perBatch.lastOption.map(_.map(_.numRowsTotal).sum).getOrElse(0L),
-          dropped = ops.map(_.numRowsDroppedByWatermark).sum,
-          width = effectiveWidth))
-        ops.map(_.numRowsDroppedByWatermark).sum
-      } finally {
-        prevRetention match {
-          case Some(v) => spark.conf.set(retentionKey, v)
-          case None => spark.conf.unset(retentionKey)
+    val dropped = withConfs(spark,
+        "spark.sql.streaming.numRecentProgressUpdates" -> "100000",
+        PartsKey -> effectiveWidth.toString) {
+      val query = df.writeStream.outputMode(mode)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode(writeMode).parquet(dir)
+          ()
         }
-        prevParts match {
-          case Some(v) => spark.conf.set(partsKey, v)
-          case None => spark.conf.unset(partsKey)
-        }
-      }
+        .start()
+      try query.processAllAvailable()
+      finally query.stop()
+      val perBatch = query.recentProgress
+        .map(p => Option(p.stateOperators).toSeq.flatten)
+        .filter(_.nonEmpty)
+      val ops = perBatch.flatten
+      // stateRowsEnd = state surviving the LAST batch (after the final
+      // watermark advance evicted finalized windows/sessions) — the
+      // number that must stay horizon-bounded on an unbounded stream,
+      // where the peak legitimately includes pre-eviction build-up
+      // peak = max over PER-BATCH SUMS of all stateful operators (a
+      // per-entry max would understate a multi-operator chain's state)
+      lastRunStats = Some(StreamRunStats(
+        batches = query.recentProgress.length,
+        stateRowsMax =
+          if (perBatch.isEmpty) 0L
+          else perBatch.map(_.map(_.numRowsTotal).sum).max,
+        stateRowsEnd = perBatch.lastOption.map(_.map(_.numRowsTotal).sum).getOrElse(0L),
+        dropped = ops.map(_.numRowsDroppedByWatermark).sum,
+        width = effectiveWidth))
+      ops.map(_.numRowsDroppedByWatermark).sum
+    }
     val out =
       if (new java.io.File(dir).exists) spark.read.parquet(dir)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)

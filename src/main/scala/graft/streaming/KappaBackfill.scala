@@ -8,9 +8,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * production streaming deployment crosses: history is aggregated once
   * as a BATCH job, the live tail continues as a STREAM, and the stream's
   * per-key state must start exactly where the batch left off. Spark's
-  * native lever is `mapGroupsWithState(..., initialState)` — the batch
-  * result is handed to the state store as the stream's first snapshot,
-  * so no event is double-counted and none is dropped at the seam.
+  * native lever is the `initialState` argument of the group-state map
+  * ([[fold]]) — the batch result is handed to the state store as the
+  * stream's first snapshot, so no event is double-counted and none is
+  * dropped at the seam.
   *
   * The running aggregate is (event count, value cents): cents as LONG —
   * the fixture values carry two decimals, so ×100 is exact — because a
@@ -49,21 +50,17 @@ object KappaBackfill {
       .map { case (u, n, c) => (u, UserState(n, c)) }
   }
 
-  /** The STREAM half: a files-source of post-cut events, folded into the
-    * backfilled state via `initialState`. Each invocation emits the
-    * group's updated running aggregate (update output mode). */
-  def run(spark: SparkSession, inputDir: String,
-          initial: Dataset[(Long, UserState)],
-          checkpoint: String, sinkTable: String): StreamingQuery = {
+  /** The stream's fold: each micro-batch's (user_id, cents) rows folded
+    * into the per-user state, which the group-state map seeds from the
+    * backfilled `initial`. Each invocation emits the group's updated
+    * running aggregate. Shared by [[run]] and [[kappaReplay]], so the
+    * seam spec exercises q207's own fold. */
+  private def fold(spark: SparkSession, tail: Dataset[(Long, Long)],
+                   initial: Dataset[(Long, UserState)]): Dataset[UserUpdate] = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-    val init = initial.groupByKey(_._1).mapValues(_._2)
-    spark.readStream.schema(schema).parquet(inputDir)
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout, init) {
+    tail.groupByKey(_._1)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout,
+          initial.groupByKey(_._1).mapValues(_._2)) {
         (user: Long, rows: Iterator[(Long, Long)], state: GroupState[UserState]) =>
           val prev = state.getOption.getOrElse(UserState(0L, 0L))
           var n = prev.n; var c = prev.cents
@@ -72,6 +69,19 @@ object KappaBackfill {
           state.update(next)
           UserUpdate(user, next.n, next.cents)
       }
+  }
+
+  /** The STREAM half: a files-source of post-cut (user_id, cents) events,
+    * folded into the backfilled state via `initialState` (update output
+    * mode, memory sink `sinkTable`). */
+  def run(spark: SparkSession, inputDir: String,
+          initial: Dataset[(Long, UserState)],
+          checkpoint: String, sinkTable: String): StreamingQuery = {
+    import spark.implicits._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
+    fold(spark, spark.readStream.schema(schema).parquet(inputDir).as[(Long, Long)], initial)
       .writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
@@ -82,10 +92,10 @@ object KappaBackfill {
   /** q207: the kappa seam promoted into the oracle gate (the
     * q147/q170/q196 precedent). History up to the median event time is
     * aggregated as a BATCH and handed to the stream as `initialState`;
-    * the live tail replays as TWO real micro-batches (two staged files,
-    * `maxFilesPerTrigger=1`, split by timestamp parity so the SAME user
-    * appears in both batches and the state provably folds across the
-    * boundary); the final per-user state — last emission per user
+    * the live tail replays as TWO real micro-batches (two chunks staged
+    * by [[EventStreams.stagedStream]], split by timestamp parity so the
+    * SAME user appears in both batches and the state provably folds
+    * across the boundary); the final per-user state — last emission per user
     * (n is monotone, so `max(struct(n, cents))` selects it), untouched
     * users backfilled from the initial state — must hash-match the
     * ORACLE, which is one full-history batch aggregate with no cut and
@@ -105,40 +115,22 @@ object KappaBackfill {
       .select(expr("CAST(median(unix_micros(ts)) AS BIGINT)")).as[Long].head()
     val initial = backfill(spark, dir, cutUs)
 
-    val root = java.nio.file.Files.createTempDirectory("graft-kappa-replay-")
-    graft.TempDirs.cleanupOnExit(root)
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
     val t = graft.Tables.events(spark, dir)
       .filter(expr("unix_micros(ts)") > cutUs)
       .select(col("user_id"), centsCol.as("cents"),
         pmod(expr("unix_micros(ts)"), lit(2)).as("half"))
-    (0 to 1).foreach { h =>
+    val src = EventStreams.stagedStream((0 to 1).map { h =>
       t.filter(col("half") === h).select("user_id", "cents")
-        .coalesce(1).write.parquet(s"$in/chunk$h")
-    }
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-    val init = initial.groupByKey(_._1).mapValues(_._2)
-    val updates = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*")
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout, init) {
-        (user: Long, rows: Iterator[(Long, Long)], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0L))
-          var n = prev.n; var c = prev.cents
-          rows.foreach { case (_, cents) => n += 1; c += cents }
-          val next = UserState(n, c)
-          state.update(next)
-          UserUpdate(user, next.n, next.cents)
-      }
-    // r18 (VERDICT r17 item 3): run the replay stream at the shared
-    // derived state width instead of the session's batch width — every
-    // state partition is a per-micro-batch store commit.
-    EventStreams.withStreamWidth(updates.toDF()) {
-      val q = updates.writeStream
+    }).as[(Long, Long)]
+    val root = java.nio.file.Files.createTempDirectory("graft-kappa-replay-")
+    graft.TempDirs.cleanupOnExit(root)
+    val ck = s"$root/ck"; val out = s"$root/out"
+    // update-mode emissions have no file-sink analog, so this replay
+    // drains itself (EventStreams.drainToFiles takes append|complete);
+    // it runs at the shared derived state width — every state partition
+    // is a per-micro-batch store commit.
+    EventStreams.withStreamWidth(src.toDF()) {
+      val q = fold(spark, src, initial).writeStream
         .outputMode(OutputMode.Update())
         .option("checkpointLocation", ck)
         .foreachBatch { (b: Dataset[UserUpdate], _: Long) =>

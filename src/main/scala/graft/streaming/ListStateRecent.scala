@@ -68,70 +68,23 @@ object ListStateRecent {
   /** q213: the events log replayed as TWO real micro-batches staged as
     * event_id-RANGE chunks (order-preserving — see the class doc), the
     * final per-user (n_seen, recent_path) hash-matched against the
-    * one-shot batch truth (last Keep event types by event_id). */
+    * one-shot batch truth (last Keep event types by event_id). The
+    * file source triggers files oldest-mtime-first, and ListState is the
+    * one state primitive whose result is ORDER-dependent, so the chunk
+    * order rests on [[EventStreams.stagedStream]]'s mtime pin, never on
+    * "chunk0 happened to be written first". */
   def recentReplay(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-liststate-")
-    graft.TempDirs.cleanupOnExit(root)
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"))
     val cut = ev.agg(expr("CAST(max(event_id) div 2 AS BIGINT)"))
       .as[Long].head()
-    ev.filter(col("event_id") <= cut).coalesce(1).write.parquet(s"$in/chunk0")
-    ev.filter(col("event_id") > cut).coalesce(1).write.parquet(s"$in/chunk1")
-    // ordered-log pin (r13, VERDICT r12 item 4 / ADVICE r12): the file
-    // source triggers files oldest-mtime-first, and ListState is the one
-    // state primitive whose result is ORDER-dependent — so the chunk
-    // order must not rest on "chunk0 happened to be written seconds
-    // before chunk1". Stamp strictly increasing mtimes (60 s apart — far
-    // beyond any filesystem's timestamp granularity) on every file of
-    // each staged chunk, making batch 0 = low event_id range structural.
-    def pinMtime(dir: String, t: Long): Unit = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try s.forEach { f =>
-        java.nio.file.Files.setLastModifiedTime(f,
-          java.nio.file.attribute.FileTime.fromMillis(t))
-      } finally s.close()
-    }
-    val now = System.currentTimeMillis()
-    pinMtime(s"$in/chunk0", now - 120000L)
-    pinMtime(s"$in/chunk1", now - 60000L)
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType)))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[EventIn]
-
+    val src = EventStreams.stagedStream(Seq(
+      ev.filter(col("event_id") <= cut), ev.filter(col("event_id") > cut)))
+      .as[EventIn]
     SessionTimers.withRocksDb(spark) {
-      // r18 (VERDICT r17 item 3): derived state width — each partition
-      // is a per-micro-batch RocksDB commit, so session batch width
-      // (32 at driver settings) is pure fixed cost here.
-      EventStreams.withStreamWidth(src.toDF()) {
-        val q = tracked(spark, src).writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(out)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    }
-    // chunk order: the file source triggers files in modification-time
-    // order and the staged chunks carry EXPLICITLY pinned, strictly
-    // increasing mtimes (see pinMtime above), so batch 0 is the low
-    // event_id range by construction — the ordered-log arrival the ring
-    // semantics need; the spec asserts the end state against a hand
-    // truth independent of this listing detail
-    spark.read.parquet(out)
-      .groupBy("user_id")
+      EventStreams.drainToFiles(tracked(spark, src), "append")
+    }.groupBy("user_id")
       .agg(max(struct(col("n_seen"), col("recent_path"))).as("s"))
       .select(col("user_id"), col("s.n_seen").as("n_seen"),
         col("s.recent_path").as("recent_path"))

@@ -113,14 +113,8 @@ object SessionTimers {
   }
 
   /** Run `body` with the RocksDB provider the new API requires. */
-  def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.getOption(ProviderKey)
-    try { spark.conf.set(ProviderKey, RocksDbProvider); body }
-    finally prev match {
-      case Some(v) => spark.conf.set(ProviderKey, v)
-      case None => spark.conf.unset(ProviderKey)
-    }
-  }
+  def withRocksDb[A](spark: SparkSession)(body: => A): A =
+    EventStreams.withConfs(spark, ProviderKey -> RocksDbProvider)(body)
 
   /** q205: the events log through the timer sessionizer (real engine
     * path — RocksDB store, event-time watermark, the no-data final

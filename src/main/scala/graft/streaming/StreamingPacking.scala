@@ -160,54 +160,20 @@ object StreamingPacking {
     replayTwoBatchesWith(spark, staged, src => splitPacked(spark, src, budget))
 
   /** The shared two-batch replay harness: stage the relation as two
-    * mtime-pinned parquet chunks, drive them through `transform` under
-    * the RocksDB provider, drain via foreachBatch, return the union. */
+    * pos-prefix chunks ([[EventStreams.stagedStream]] pins chunk0 as
+    * batch 0 — packing is the one replay where batch order changes the
+    * RESULT, since every context id in a shard re-bases), drive them
+    * through `transform` under the RocksDB provider, return the drain. */
   private def replayTwoBatchesWith(spark: SparkSession, staged: DataFrame,
       transform: Dataset[DocIn] => DataFrame): DataFrame = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-packstream-")
-    graft.TempDirs.cleanupOnExit(root)
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
     val mid = staged.agg(max("pos")).head.getLong(0) / 2
-    staged.filter(col("pos") <= mid).coalesce(1).write.parquet(s"$in/chunk0")
-    staged.filter(col("pos") > mid).coalesce(1).write.parquet(s"$in/chunk1")
-    // FileStreamSource orders batches by file MTIME with OS-dependent
-    // listing order breaking ties — and both chunks are written within
-    // the same millisecond often enough to tie. Packing is the one
-    // replay where batch order changes the RESULT (every context id in
-    // a shard re-bases), so the prefix order is pinned explicitly:
-    // chunk0 strictly older than chunk1 (r15 review).
-    Seq("chunk0", "chunk1").zipWithIndex.foreach { case (c, i) =>
-      val dir = new java.io.File(s"$in/$c")
-      val t = dir.lastModified() - (1 - i) * 60000L
-      dir.listFiles().foreach(f => f.setLastModified(t))
-      dir.setLastModified(t)
-    }
-    val lt = org.apache.spark.sql.types.LongType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("shard", lt),
-      org.apache.spark.sql.types.StructField("pos", lt),
-      org.apache.spark.sql.types.StructField("doc_id", lt),
-      org.apache.spark.sql.types.StructField("n_tokens", lt)))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[DocIn]
+    val src = EventStreams.stagedStream(Seq(
+      staged.filter(col("pos") <= mid), staged.filter(col("pos") > mid)))
+      .as[DocIn]
     SessionTimers.withRocksDb(spark) {
-      // r18 (VERDICT r17 item 3): derived state width — each partition
-      // is a per-micro-batch RocksDB commit, so session batch width
-      // (32 at driver settings) is pure fixed cost here.
-      EventStreams.withStreamWidth(src.toDF()) {
-        val q = transform(src).writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ck)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(out)
-            ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      EventStreams.drainToFiles(transform(src), "append")
     }
-    spark.read.parquet(out)
   }
 
   /** q247: q245's staged relation (same helper — the arrival order

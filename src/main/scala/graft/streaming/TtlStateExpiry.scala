@@ -105,27 +105,19 @@ object TtlStateExpiry {
 
   /** The two-batch TTL harness behind q228, parametrized so TtlStateSpec
     * can drive BOTH directions (short TTL + gap → expiry; long TTL → the
-    * q212 running-total behavior). Stages the two chunks as files, runs
-    * them as two real micro-batches through the RocksDB provider with
-    * `gapMs` of forced wall clock between them, and returns the RAW
-    * per-batch emissions tagged with `batch_id`. */
+    * q212 running-total behavior). Stages the two chunks with
+    * [[EventStreams.stagedStream]], runs them as two real micro-batches
+    * through the RocksDB provider with `gapMs` of forced wall clock
+    * between them, and returns the RAW per-batch emissions tagged with
+    * `batch_id`. */
   def replayTwoBatches(spark: SparkSession, batch0: DataFrame,
                        batch1: DataFrame, ttl: TTLConfig,
                        gapMs: Long): DataFrame = {
     import spark.implicits._
+    val src = EventStreams.stagedStream(Seq(batch0, batch1)).as[EventIn]
     val root = java.nio.file.Files.createTempDirectory("graft-ttlstate-")
     graft.TempDirs.cleanupOnExit(root)
-    val in = s"$root/in"; val ck = s"$root/ck"; val out = s"$root/out"
-    batch0.coalesce(1).write.parquet(s"$in/chunk0")
-    batch1.coalesce(1).write.parquet(s"$in/chunk1")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType)))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*").as[EventIn]
-
+    val ck = s"$root/ck"; val out = s"$root/out"
     SessionTimers.withRocksDb(spark) {
       // A processing-time-mode stateful query NEVER quiesces: the
       // engine's shouldRunAnotherBatch is unconditionally true (the

@@ -49,9 +49,10 @@ object VectorIngest {
 
   /** q208: the streaming ingest promoted into the oracle gate (the
     * q170/q196/q207 precedent). The corpus replays as FOUR real
-    * micro-batches (four staged files, `maxFilesPerTrigger=1`, split by
-    * vec_id residue) through [[run]] — each batch cell-assigned against
-    * the SAME fixed codebook and appended under its cell directory —
+    * micro-batches (four chunks split by vec_id residue, staged by
+    * [[EventStreams.stagedStream]]) through [[run]] — each batch
+    * cell-assigned against the SAME fixed codebook and appended under
+    * its cell directory —
     * and the accumulated index then serves the exact q33 search
     * ([[searchIndex]]). The oracle is q33's one-shot text: the hash
     * match proves batch-at-a-time ingest builds the SAME index as
@@ -66,15 +67,12 @@ object VectorIngest {
   def ingestReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft-vecingest-")
     graft.TempDirs.cleanupOnExit(root)
-    val in = s"$root/in"; val ck = s"$root/ck"; val indexDir = s"$root/index"
+    val ck = s"$root/ck"; val indexDir = s"$root/index"
     val e = graft.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
-    (0 until nBatches).foreach { b =>
+    val src = EventStreams.stagedStream((0 until nBatches).map { b =>
       e.filter(pmod(col("vec_id"), lit(nBatches)) === b)
-        .coalesce(1).write.parquet(s"$in/chunk$b")
-    }
+    })
     val centroids = graft.similarity.IvfIndex.codebook(spark, sfDir)
-    val src = spark.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*")
     // r18 (VERDICT r17 item 3) — examined and deliberately NOT
     // width-wrapped: this replay is STATELESS (no state store, so no
     // per-partition commit cost to save), and its per-batch foreachBatch

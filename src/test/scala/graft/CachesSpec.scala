@@ -2,11 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.storage.StorageLevel
+
 /** Contract of the [[Caches.memo]] per-key latch (round-5 advice: layout
   * builds must not run under an object monitor that blocks unrelated
   * callers). The observable promises: a build runs at most once per key
   * however many threads race to it; a FAILED build frees the key so a
-  * later caller retries instead of caching the failure. */
+  * later caller retries instead of caching the failure. Shared relations
+  * ride the same latch and are unpersisted by [[Caches.releaseShared]]. */
 class CachesSpec extends SparkSpec {
 
   test("memo: concurrent same-key callers share one build") {
@@ -64,5 +67,24 @@ class CachesSpec extends SparkSpec {
     first.join(); second.join()
     assert(waiterResult === "recovered")
     assert(attempts.get() === 2, "the waiter re-runs the build after the failure")
+  }
+
+  test("releaseShared unpersists a shared relation; the next call rebuilds it") {
+    val builds = new AtomicInteger(0)
+    def rel() = Caches.sharedRelation(spark, sf0001, "caches-spec-shared") {
+      builds.incrementAndGet()
+      spark.range(10).toDF("id")
+    }
+    val first = rel()
+    assert(first.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(rel() eq first, "a second call serves the built relation")
+    assert(builds.get() === 1)
+    Caches.releaseShared()
+    assert(first.storageLevel === StorageLevel.NONE,
+      "releaseShared must unpersist the shared relation")
+    val second = rel()
+    assert(builds.get() === 2, "after the release the relation is rebuilt")
+    assert(second.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(second.count() === 10L)
   }
 }

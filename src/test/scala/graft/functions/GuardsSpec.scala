@@ -64,6 +64,27 @@ class GuardsSpec extends SparkSpec {
     assert(rootMessage(e).contains("spec shift: shift outside [0,30]: 31"))
   }
 
+  test("checkedRange passes in-range values and nulls unchanged") {
+    val df = Seq[java.lang.Long](0L, 7L, Int.MaxValue.toLong, null).toDF("v")
+      .select(Guards.checkedRange(col("v"), 0L, Int.MaxValue.toLong, "spec").as("w"))
+    assert(df.collect().map(r => if (r.isNullAt(0)) null else r.getLong(0))
+      .toSeq == Seq(0L, 7L, Int.MaxValue.toLong, null))
+  }
+
+  test("q192/q198: a part id at 2^31 fails the packed pair key's guard") {
+    // (pk_a << 32) + pk_b stops being bijective once pk reaches 2^31:
+    // the guard on the capped incidence must name the id, not alias it
+    for (bad <- Seq(1L << 31, -1L)) {
+      val bb = Seq((1L, 5L), (1L, bad), (2L, 5L), (2L, bad)).toDF("ck", "pk")
+      val e = intercept[Throwable] {
+        try graft.queries.JoinQueries.itemNeighbors(bb).collect()
+        finally graft.Caches.releaseScoped()
+      }
+      assert(rootMessage(e).contains(
+        s"q192/q198 packed pair key: part id: outside [0,2147483647]: $bad"))
+    }
+  }
+
   test("the q181 guard never fires on the fixture and scores are unchanged") {
     // the guarded query must be transparent on in-bounds data: same
     // result as the raw-shift formulation it replaced

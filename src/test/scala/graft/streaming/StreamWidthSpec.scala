@@ -12,7 +12,9 @@ import graft.SparkSpec
   * directories are listed down to their leaf files, and the names
   * Spark's own path filter hides (`_SUCCESS`, `.crc`, `_spark_metadata`)
   * are not counted. Widths follow the 32 MB-per-partition rule with a
-  * floor of 2; a source the listing cannot size falls back to 8.
+  * floor of 2; a source the listing cannot size falls back to 8 — quietly
+  * for a path that does not exist, with one stderr line naming the path
+  * for any other listing failure.
   */
 class StreamWidthSpec extends SparkSpec {
   private val schema = StructType(Seq(StructField("id", LongType)))
@@ -66,5 +68,45 @@ class StreamWidthSpec extends SparkSpec {
     // the same 100 MB as a visible leaf file is counted: ceil(100/32) = 4
     sparse(s"$dir/chunk1/part-big.parquet", 100)
     assert(widthInside(s"$dir/*") === 4)
+  }
+
+  /** `body`'s result and the stderr lines it printed that mention
+    * `needle`. */
+  private def capturingErr[T](needle: String)(body: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    val out = try body finally System.setErr(prev)
+    (out, buf.toString.linesIterator.filter(_.contains(needle)).toSeq)
+  }
+
+  test("a source the listing cannot size falls back to 8; only a non-missing failure is reported") {
+    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTS").isEmpty,
+      "SPARK_GRAFT_STREAM_PARTS pins the width over the derived one")
+    val dir = staged()
+    // a path gone by the time the width is derived (the stream was
+    // defined while it existed): the documented quiet fallback
+    val gone = spark.readStream.schema(schema).parquet(s"$dir/chunk0")
+    def delete(f: File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(delete)); f.delete(); ()
+    }
+    delete(new File(s"$dir/chunk0"))
+    val (goneWidth, goneLines) = capturingErr("stream width") {
+      EventStreams.withStreamWidth(gone)(spark.conf.get(partsKey).toInt)
+    }
+    assert(goneWidth === 8)
+    assert(goneLines.isEmpty, s"a missing path falls back quietly: $goneLines")
+    // a file system that stops loading after the stream is defined: the
+    // listing fails with something other than a missing path
+    val glob = spark.readStream.schema(schema).parquet(s"$dir/*")
+    val (brokenWidth, brokenLines) = capturingErr("stream width") {
+      EventStreams.withConfs(spark, "fs.file.impl" -> "graft.NoSuchFileSystem",
+          "fs.file.impl.disable.cache" -> "true") {
+        EventStreams.withStreamWidth(glob)(spark.conf.get(partsKey).toInt)
+      }
+    }
+    assert(brokenWidth === 8)
+    assert(brokenLines.size === 1 && brokenLines.head.contains(s"$dir/*"),
+      s"expected one stderr line naming the path, got: $brokenLines")
   }
 }

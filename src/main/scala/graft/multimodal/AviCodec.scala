@@ -196,17 +196,25 @@ object AviCodec {
   def decodeFrame(raf: RandomAccessFile, chunk: FrameChunk): Option[ImageCodec.DecodedImage] =
     ImageCodec.decode(readFrameBytes(raf, chunk))
 
-  /** Decode with container-dims fallback: MJPEG chunks go through
-    * ImageIO; a chunk that ImageIO rejects but whose size is exactly one
-    * uncompressed DIB frame (BI_RGB bottom-up BGR rows, 4-byte row
-    * stride — the '00db' convention) is unpacked raw. Raw frames make
-    * the WRITE side lossless: what [[graft.multimodal.VideoSink]] muxes
-    * with `codec = "raw"` reads back byte-identical, no JPEG loss. */
+  /** Decode one frame against the container's probed dims; see
+    * [[decodeChunk]]. */
   def decodeFrameWithMeta(raf: RandomAccessFile, chunk: FrameChunk,
-                          meta: AviMeta): Option[ImageCodec.DecodedImage] = {
-    val bytes = readFrameBytes(raf, chunk)
-    ImageCodec.decode(bytes).orElse(decodeDib(bytes, meta.width, meta.height))
-  }
+                          meta: AviMeta): Option[ImageCodec.DecodedImage] =
+    decodeChunk(readFrameBytes(raf, chunk), meta)
+
+  /** One frame chunk's bytes to BGR, trying the stream's own codec first.
+    * A `DIB` stream's chunks are uncompressed frames (BI_RGB bottom-up BGR
+    * rows, 4-byte row stride — the '00db' convention) and unpack raw, with
+    * ImageIO as the fallback, so they never probe every registered reader.
+    * Any other stream's chunks go through ImageIO, with the raw unpack as
+    * the fallback for a chunk whose size is exactly one DIB frame. Raw
+    * frames make the WRITE side lossless: what
+    * [[graft.multimodal.VideoSink]] muxes with `codec = "raw"` reads back
+    * byte-identical, no JPEG loss. */
+  def decodeChunk(bytes: Array[Byte], meta: AviMeta): Option[ImageCodec.DecodedImage] =
+    if (meta.handler == "DIB")
+      decodeDib(bytes, meta.width, meta.height).orElse(ImageCodec.decode(bytes))
+    else ImageCodec.decode(bytes).orElse(decodeDib(bytes, meta.width, meta.height))
 
   /** Unpack one BI_RGB device-independent bitmap frame: rows are stored
     * BOTTOM-UP, each padded to a 4-byte boundary, pixels already

@@ -1,8 +1,10 @@
 package graft.multimodal
 
+import java.awt.image.{BufferedImage, DataBufferByte, PixelInterleavedSampleModel}
 import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
@@ -33,8 +35,13 @@ object ImageCodec {
   def decode(bytes: Array[Byte]): Option[DecodedImage] = {
     if (bytes == null || bytes.length == 0) return None
     try {
-      val img = ImageIO.read(new ByteArrayInputStream(bytes))
-      if (img == null) None
+      // an in-memory stream: ImageIO.read(InputStream) caches through a
+      // temp file in java.io.tmpdir, created and deleted per image
+      val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+      // ImageIO.read closes the stream after any read, returned or thrown,
+      // but not when no reader matches (its null return)
+      val img = ImageIO.read(in)
+      if (img == null) { in.close(); None }
       else {
         val w = img.getWidth
         val h = img.getHeight
@@ -48,19 +55,7 @@ object ImageCodec {
             s"[imagecodec] ${w}x$h image exceeds the 2^31-byte buffer limit — treated as unreadable")
           return None
         }
-        // one bulk ARGB fetch (ImageIO converts any source color model),
-        // then repack to interleaved BGR
-        val argb = img.getRGB(0, 0, w, h, null, 0, w)
-        val out = new Array[Byte](w * h * 3)
-        var i = 0
-        while (i < argb.length) {
-          val p = argb(i)
-          out(i * 3) = (p & 0xff).toByte           // B
-          out(i * 3 + 1) = ((p >> 8) & 0xff).toByte  // G
-          out(i * 3 + 2) = ((p >> 16) & 0xff).toByte // R
-          i += 1
-        }
-        Some(DecodedImage(w, h, out))
+        Some(DecodedImage(w, h, bgrPixels(img)))
       }
     } catch {
       // truncated/corrupt container: decode failure, not a task failure —
@@ -68,6 +63,43 @@ object ImageCodec {
       // reference's StopIteration)
       case _: java.io.IOException => None
       case _: RuntimeException => None
+    }
+  }
+
+  /** The image as row-major interleaved BGR bytes. The JDK's readers
+    * decode JPEG, 8-bit RGB PNG and 24-bit BMP into a `TYPE_3BYTE_BGR`
+    * raster whose one backing array already IS that layout; it is returned as-is (the
+    * image is discarded, so nothing else holds it). Every other raster
+    * (another type or colour space, a translated or strided sub-raster,
+    * a shared or offset buffer) takes one bulk ARGB fetch, which
+    * converts any colour model to sRGB, and a repack to BGR. */
+  private[multimodal] def bgrPixels(img: BufferedImage): Array[Byte] = {
+    val w = img.getWidth
+    val h = img.getHeight
+    val raster = img.getRaster
+    val asIs = (img.getType, raster.getSampleModel, raster.getDataBuffer) match {
+      case (BufferedImage.TYPE_3BYTE_BGR, sm: PixelInterleavedSampleModel, db: DataBufferByte)
+          if img.getColorModel.getColorSpace.isCS_sRGB &&
+            sm.getBandOffsets.sameElements(Array(2, 1, 0)) &&
+            sm.getPixelStride == 3 && sm.getScanlineStride == w * 3 &&
+            raster.getSampleModelTranslateX == 0 && raster.getSampleModelTranslateY == 0 &&
+            db.getNumBanks == 1 && db.getOffset == 0 && db.getData.length == w * h * 3 =>
+        db.getData
+      case _ => null
+    }
+    if (asIs != null) asIs
+    else {
+      val argb = img.getRGB(0, 0, w, h, null, 0, w)
+      val out = new Array[Byte](w * h * 3)
+      var i = 0
+      while (i < argb.length) {
+        val p = argb(i)
+        out(i * 3) = (p & 0xff).toByte           // B
+        out(i * 3 + 1) = ((p >> 8) & 0xff).toByte  // G
+        out(i * 3 + 2) = ((p >> 16) & 0xff).toByte // R
+        i += 1
+      }
+      out
     }
   }
 

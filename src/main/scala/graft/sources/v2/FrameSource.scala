@@ -444,11 +444,9 @@ class AviPartitionReader(files: Seq[FrameSource.AviFile], config: FrameSource.Co
           val local = (frame - file.offset).toInt
           if (local >= chunks.length) return false // header lied; stop like EOF
           // MJPEG chunks decode via ImageIO; raw BI_RGB ('00db') chunks
-          // unpack against the container's probed dims — the lossless
-          // codec VideoSink writes
-          val bytes = AviCodec.readFrameBytes(raf, chunks(local))
-          ImageCodec.decode(bytes)
-            .orElse(AviCodec.decodeDib(bytes, fileMeta.width, fileMeta.height)) match {
+          // of a DIB stream unpack against the container's probed dims —
+          // the lossless codec VideoSink writes
+          AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, chunks(local)), fileMeta) match {
             case Some(d) => img = d; return true
             case None if files.length > 1 =>
               // a corpus contains codecs we can't pixel-decode (H.264

@@ -27,7 +27,9 @@ class ContainmentJoinSpec extends SparkSpec {
   private val other = "u01 u02 u03 u04 u05 u06 u07 u08"
 
   private def plantedDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-q160-").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q160-")
+    graft.TempDirs.cleanupOnExit(tmp)
+    val dir = tmp.toString
     Seq((0L, quote, "en", "web", quote.length.toLong),
       (1L, host, "en", "web", host.length.toLong),
       (2L, twinA, "en", "web", twinA.length.toLong),

@@ -66,7 +66,9 @@ class CorpusPlanningSpec extends SparkSpec {
     // dim 0 with pc_q = 1e6, every other dim 0, and the Rayleigh
     // quotient must equal the eigenvalue EXACTLY: num = floor(55·1e6
     // ·1e6) = 5.5e13, den = 1e12 → λ = 55.0 with no rounding anywhere.
-    val dir = java.nio.file.Files.createTempDirectory("graft-q165-").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q165-")
+    graft.TempDirs.cleanupOnExit(tmp)
+    val dir = tmp.toString
     (1 to 5).map { k =>
       val v = Array.fill(64)(0f); v(0) = k.toFloat
       (k.toLong, v, k % 3)

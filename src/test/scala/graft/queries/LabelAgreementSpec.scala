@@ -22,7 +22,9 @@ class LabelAgreementSpec extends SparkSpec {
       (3L, v(0.7), 3), (4L, v(0.6), 3),   // two votes for 3
       (5L, v(0.5), 1),                    // one vote for 1
       (6L, v(0.1), 9))                    // outside the top 5
-    val dir = java.nio.file.Files.createTempDirectory("graft-q164-").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q164-")
+    graft.TempDirs.cleanupOnExit(tmp)
+    val dir = tmp.toString
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     try {

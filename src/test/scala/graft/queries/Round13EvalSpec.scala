@@ -52,7 +52,9 @@ class Round13EvalSpec extends SparkSpec {
     // the law itself; one doc carries the whole corpus (tokenization is
     // per-token, doc boundaries are irrelevant to the frequency table)
     val text = (1 to 32).flatMap(r => Seq.fill(512 / r)(f"w$r%02d")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-q218-").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-q218-")
+    graft.TempDirs.cleanupOnExit(tmp)
+    val dir = tmp.toString
     Seq((0L, text, "en", "web", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -64,7 +66,9 @@ class Round13EvalSpec extends SparkSpec {
 
   test("q218 answers NULL (not NaN/Inf) on degenerate-variance corpora (ADVICE r13 guard)") {
     def dump(text: String): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q218d-").toString
+      val tmp = java.nio.file.Files.createTempDirectory("graft-q218d-")
+      graft.TempDirs.cleanupOnExit(tmp)
+      val dir = tmp.toString
       Seq((0L, text, "en", "web", text.length.toLong))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

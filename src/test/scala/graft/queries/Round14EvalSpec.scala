@@ -20,7 +20,9 @@ class Round14EvalSpec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf0001)
 
   private def dumpDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-r14-").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft-r14-")
+    graft.TempDirs.cleanupOnExit(tmp)
+    val dir = tmp.toString
     rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

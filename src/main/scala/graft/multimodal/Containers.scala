@@ -10,6 +10,14 @@ package graft.multimodal
 object Containers {
   import AviCodec.{AviMeta, FrameChunk}
 
+  /** An incremental container writer ([[AviCodec.Muxer]],
+    * [[Mp4Codec.Muxer]]): the one shape [[VideoSink]]'s drain writes
+    * through. The container is valid only after [[close]]. */
+  trait FrameMuxer {
+    def addFrame(frame: Array[Byte]): Unit
+    def close(): Unit
+  }
+
   /** Container extensions the connector's directory listing admits. */
   val Extensions: Set[String] = Set("avi", "mp4", "m4v", "mov")
 

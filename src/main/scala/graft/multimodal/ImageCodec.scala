@@ -1,10 +1,10 @@
 package graft.multimodal
 
 import java.awt.image.{BufferedImage, DataBufferByte, PixelInterleavedSampleModel}
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import javax.imageio.ImageIO
-import javax.imageio.stream.MemoryCacheImageInputStream
+import javax.imageio.{ImageIO, ImageTypeSpecifier}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions.udf
   *    ways (null for an unrecognized container, IIOException for a
   *    recognized-but-truncated one); both map to None here.
   *
-  * Video containers (MP4/RTSP) remain structurally out of scope — the JDK
-  * has no video codecs — so [[StubCodec]] still stands in for those
-  * (SURVEY.md §7.3); for still images this codec is the real thing.
+  * MJPEG video decodes here too: an AVI ([[AviCodec]]) or MP4
+  * ([[Mp4Codec]]) frame is an ordinary JPEG. Codecs the JDK cannot
+  * decode (H.264) stay metadata-only ([[Containers.PixelDecodable]]).
+  *
+  * [[encodeJpeg]] is the write side's one JPEG encoder: the sink's
+  * `mjpg`/MP4 faces and the query fixtures all encode through it.
   */
 object ImageCodec {
 
@@ -101,6 +104,29 @@ object ImageCodec {
       }
       out
     }
+  }
+
+  /** JPEG-encodes `img` with the writer and default parameters that
+    * `ImageIO.write(img, "jpg", out)` uses, so the bytes are the same,
+    * but through an in-memory stream: `ImageIO.write` to an
+    * `OutputStream` caches through a temp file per call. Throws where
+    * `ImageIO.write` would return false and write nothing: no JPEG
+    * writer takes the image's type (an alpha raster, for one). */
+  def encodeJpeg(img: BufferedImage): Array[Byte] = {
+    val writers = ImageIO.getImageWriters(ImageTypeSpecifier.createFromRenderedImage(img), "jpg")
+    if (!writers.hasNext)
+      throw new IllegalArgumentException(s"no JPEG writer takes a BufferedImage of type ${img.getType}")
+    val writer = writers.next()
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      writer.setOutput(out)
+      writer.write(img)
+    } finally {
+      writer.dispose()
+      out.close() // flushes the cache into `bytes`
+    }
+    bytes.toByteArray
   }
 
   /** Column form: binary → struct(width, height, pixels) or NULL when the

@@ -367,7 +367,7 @@ object Mp4Codec {
     * standard non-faststart shape every player accepts (moov last —
     * exactly what ffmpeg writes without `+faststart`). */
   final class Muxer(path: String, width: Int, height: Int, fps: Int,
-                    codecFourcc: String = "jpeg") {
+                    codecFourcc: String = "jpeg") extends Containers.FrameMuxer {
     require(fps > 0, "fps must be positive")
     require(codecFourcc.length == 4, s"codec fourcc must be 4 chars: '$codecFourcc'")
     private val o = new RandomAccessFile(path, "rw")
@@ -390,8 +390,6 @@ object Mp4Codec {
       // than wrap (the partitioned sink splits output far below this)
       require(o.getFilePointer <= 0xfffffffeL, "container exceeds u32 offsets (4 GB)")
     }
-
-    def frames: Int = n
 
     def close(): Unit = {
       val end = o.getFilePointer

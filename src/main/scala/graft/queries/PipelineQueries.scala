@@ -617,6 +617,16 @@ object PipelineQueries {
         .select("doc_a", "doc_b", "jaccard")
     }
 
+  /** One synthetic 32×24 fixture frame for the q85/q87/q89/q96
+    * containers: pixel (x, y) is the hash of `x * xMul + y * yMul +
+    * frameTerm`, in a `TYPE_INT_RGB` image, JPEG-encoded. */
+  private def fixtureJpeg(xMul: Int, yMul: Int, frameTerm: Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(32, 24, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 24; x <- 0 until 32)
+      img.setRGB(x, y, ((x * xMul + y * yMul + frameTerm) * 2654435761L).toInt & 0xffffff)
+    graft.multimodal.ImageCodec.encodeJpeg(img)
+  }
+
   /** Deterministic MJPEG/AVI fixture for q85, muxed once per session
     * ([[graft.Caches.memo]]): 48 synthetic 32×24 JPEGs written through
     * [[graft.multimodal.AviCodec]]. The container is the INPUT the S2
@@ -628,22 +638,7 @@ object PipelineQueries {
     graft.Caches.memo(s, "avi", "q85_fixture") {
       val dir = java.nio.file.Files.createTempDirectory("graft-q85-avi-")
       graft.TempDirs.cleanupOnExit(dir)
-      val jpegs = (0 until 48).map { i =>
-        val img = new java.awt.image.BufferedImage(32, 24,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < 24) {
-          var x = 0
-          while (x < 32) {
-            img.setRGB(x, y, ((x * 7 + y * 13 + i * 31) * 2654435761L).toInt & 0xffffff)
-            x += 1
-          }
-          y += 1
-        }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", baos)
-        baos.toByteArray
-      }
+      val jpegs = (0 until 48).map(i => fixtureJpeg(7, 13, i * 31))
       val path = dir.resolve("q85.avi").toString
       graft.multimodal.AviCodec.writeMjpeg(path, jpegs, 32, 24, fps = 24)
       path
@@ -658,22 +653,7 @@ object PipelineQueries {
       val dir = java.nio.file.Files.createTempDirectory("graft-q87-avi-")
       graft.TempDirs.cleanupOnExit(dir)
       Seq(5, 7, 3).zipWithIndex.foreach { case (n, c) =>
-        val jpegs = (0 until n).map { i =>
-          val img = new java.awt.image.BufferedImage(32, 24,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < 24) {
-            var x = 0
-            while (x < 32) {
-              img.setRGB(x, y, ((x * 7 + y * 13 + (c * 100 + i) * 31) * 2654435761L).toInt & 0xffffff)
-              x += 1
-            }
-            y += 1
-          }
-          val baos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "jpg", baos)
-          baos.toByteArray
-        }
+        val jpegs = (0 until n).map(i => fixtureJpeg(7, 13, (c * 100 + i) * 31))
         graft.multimodal.AviCodec.writeMjpeg(
           dir.resolve(f"clip_$c%02d.avi").toString, jpegs, 32, 24, fps = 24)
       }
@@ -692,22 +672,7 @@ object PipelineQueries {
     graft.Caches.memo(s, "mp4", "q89_fixture") {
       val dir = java.nio.file.Files.createTempDirectory("graft-q89-mp4-")
       graft.TempDirs.cleanupOnExit(dir)
-      val jpegs = (0 until 36).map { i =>
-        val img = new java.awt.image.BufferedImage(32, 24,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < 24) {
-          var x = 0
-          while (x < 32) {
-            img.setRGB(x, y, ((x * 11 + y * 17 + i * 29) * 2654435761L).toInt & 0xffffff)
-            x += 1
-          }
-          y += 1
-        }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", baos)
-        baos.toByteArray
-      }
+      val jpegs = (0 until 36).map(i => fixtureJpeg(11, 17, i * 29))
       val path = dir.resolve("q89.mp4").toString
       graft.multimodal.Mp4Codec.writeMjpeg(path, jpegs, 32, 24, fps = 25)
       path
@@ -742,22 +707,8 @@ object PipelineQueries {
     graft.Caches.memo(s, "mixed", "q96_fixture") {
       val dir = java.nio.file.Files.createTempDirectory("graft-q96-mixed-")
       graft.TempDirs.cleanupOnExit(dir)
-      def jpegs(tag: Int, n: Int): Seq[Array[Byte]] = (0 until n).map { i =>
-        val img = new java.awt.image.BufferedImage(32, 24,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < 24) {
-          var x = 0
-          while (x < 32) {
-            img.setRGB(x, y, ((x * 13 + y * 19 + (tag * 100 + i) * 37) * 2654435761L).toInt & 0xffffff)
-            x += 1
-          }
-          y += 1
-        }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "jpg", baos)
-        baos.toByteArray
-      }
+      def jpegs(tag: Int, n: Int): Seq[Array[Byte]] =
+        (0 until n).map(i => fixtureJpeg(13, 19, (tag * 100 + i) * 37))
       graft.multimodal.AviCodec.writeMjpeg(
         dir.resolve("clip_00.avi").toString, jpegs(0, 3), 32, 24, fps = 24)
       graft.multimodal.Mp4Codec.writeMjpeg(

@@ -58,14 +58,18 @@ object AviCodecProps extends Properties("AviCodec") {
     }
 
   property("incremental Muxer emits byte-identical containers to the batch writer") =
-    forAllNoShrink(dims, Gen.choose(1, 8), Gen.choose(1, 30)) {
-      case ((w, h), frames, fps) =>
-        val bufs = (0 until frames).map(k =>
-          Array.tabulate(w * h * 3)(i => ((i * 7 + k * 131) % 256).toByte))
+    forAllNoShrink(dims, Gen.choose(1, 8), Gen.choose(1, 30), Gen.oneOf(true, false)) {
+      case ((w, h), frames, fps, raw) =>
+        // raw: BGR frames; MJPEG: opaque payloads, odd length on even k
+        val bufs = (0 until frames).map { k =>
+          val len = if (raw) w * h * 3 else 2 * ((w + h + k * 13) % 40) + 1 + (k % 2)
+          Array.tabulate(len)(i => ((i * 7 + k * 131) % 256).toByte)
+        }
         val a = freshPath()
-        AviCodec.writeRawBgr(a, bufs, w, h, fps)
+        AviReferenceWriter.writeContainer(a,
+          if (raw) bufs.map(AviCodec.encodeDib(_, w, h)) else bufs, w, h, fps, raw)
         val b = freshPath()
-        val m = new AviCodec.Muxer(b, w, h, fps, raw = true)
+        val m = new AviCodec.Muxer(b, w, h, fps, raw)
         bufs.foreach(m.addFrame)
         m.close()
         java.util.Arrays.equals(

@@ -4,6 +4,7 @@ import java.awt.Transparency
 import java.awt.color.ColorSpace
 import java.awt.image.{BufferedImage, ComponentColorModel, DataBuffer, DataBufferByte, Raster}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.file.Files
 
 import javax.imageio.ImageIO
 
@@ -123,18 +124,21 @@ class ImageCodecSpec extends AnyFunSuite {
     assert(got.toSeq !== data.toSeq, "linear samples must go through the sRGB conversion")
   }
 
+  /** The oracle: `ImageIO.write` into a stream. */
+  private def encoded(img: BufferedImage, fmt: String): Array[Byte] = {
+    val baos = new ByteArrayOutputStream()
+    assert(ImageIO.write(img, fmt, baos), s"no $fmt writer")
+    baos.toByteArray
+  }
+
+  private def gradient(w: Int, h: Int, seed: Int): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    for (y <- 0 until h; x <- 0 until w)
+      img.setRGB(x, y, (x * 255 / w) << 16 | (y * 255 / h) << 8 | ((x + y + seed * 40) & 0xff))
+    img
+  }
+
   test("decode is byte-identical to the repack of ImageIO.read: JPEG, PNG, BMP") {
-    def encoded(img: BufferedImage, fmt: String): Array[Byte] = {
-      val baos = new ByteArrayOutputStream()
-      assert(ImageIO.write(img, fmt, baos), s"no $fmt writer")
-      baos.toByteArray
-    }
-    def gradient(w: Int, h: Int, seed: Int): BufferedImage = {
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until h; x <- 0 until w)
-        img.setRGB(x, y, (x * 255 / w) << 16 | (y * 255 / h) << 8 | ((x + y + seed * 40) & 0xff))
-      img
-    }
     val images = Seq(filled(17, 13, BufferedImage.TYPE_3BYTE_BGR),
       filled(17, 13, BufferedImage.TYPE_INT_RGB), gradient(320, 240, 0), gradient(320, 240, 3))
     for (img <- images; fmt <- Seq("jpg", "png", "bmp")) {
@@ -144,5 +148,34 @@ class ImageCodecSpec extends AnyFunSuite {
       assert(got.width === img.getWidth && got.height === img.getHeight)
       assert(got.pixels.toSeq === want.toSeq, s"$fmt ${img.getWidth}x${img.getHeight}")
     }
+  }
+
+  test("encodeJpeg equals ImageIO.write byte for byte, with no cache file behind it") {
+    val images = Seq(gradient(320, 240, 0), filled(17, 13, BufferedImage.TYPE_INT_RGB))
+    val want = images.map(encoded(_, "jpg"))
+    val dir = Files.createTempDirectory("graft_encode_cache")
+    val old = ImageIO.getCacheDirectory
+    try {
+      // a cache directory that is gone: any encode that caches through a
+      // temp file fails here, as ImageIO.write into a stream does
+      ImageIO.setCacheDirectory(dir.toFile)
+      Files.delete(dir)
+      intercept[IllegalArgumentException](
+        ImageIO.write(images.head, "jpg", new ByteArrayOutputStream()))
+      images.zip(want).foreach { case (img, w) =>
+        assert(ImageCodec.encodeJpeg(img).toSeq === w.toSeq,
+          s"type ${img.getType} ${img.getWidth}x${img.getHeight}")
+      }
+      assert(VideoSink.encodeJpeg(rasterBytes(images.head), 320, 240).nonEmpty,
+        "the sink's BGR face encodes through the same path")
+    } finally ImageIO.setCacheDirectory(old)
+  }
+
+  test("encodeJpeg throws on an image no JPEG writer takes, where ImageIO.write writes nothing") {
+    val img = filled(17, 13, BufferedImage.TYPE_INT_ARGB)
+    val baos = new ByteArrayOutputStream()
+    assert(!ImageIO.write(img, "jpg", baos) && baos.size === 0)
+    val e = intercept[IllegalArgumentException](ImageCodec.encodeJpeg(img))
+    assert(e.getMessage.contains("no JPEG writer"))
   }
 }

@@ -81,19 +81,6 @@ class VideoSinkSpec extends SparkSpec {
     assert(VideoSink.saveAvi(dfZero, zero).fps === 25)
   }
 
-  test("incremental Muxer produces the same container the batch writer does") {
-    val frames = (0 until 4).map(i => bgr(i, 8, 6))
-    val a = tmp("batch.avi")
-    AviCodec.writeRawBgr(a, frames, 8, 6, 15)
-    val b = tmp("muxed.avi")
-    val m = new AviCodec.Muxer(b, 8, 6, 15, raw = true)
-    frames.foreach(m.addFrame)
-    m.close()
-    assert(Files.readAllBytes(java.nio.file.Paths.get(a)).toSeq ===
-      Files.readAllBytes(java.nio.file.Paths.get(b)).toSeq,
-      "streamed mux with patched sizes must be byte-identical to the precomputed write")
-  }
-
   test("MP4 face: sink -> connector round-trip preserves count, dims, clock; bind + drop hold") {
     val path = tmp("sink.mp4")
     val stats = VideoSink.saveMp4(framesDf(7, 16, 12, Some(24)), path)

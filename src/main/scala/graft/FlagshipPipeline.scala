@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BBoxOps, LetterboxKernel}
@@ -138,14 +138,22 @@ object FlagshipPipeline {
     val target = 64
     val source = source0.persist() // one decode pass, two consumers (main.py:109-134)
 
+    // every count comes from an Observation on the write that produces
+    // it — no job re-reads an output or re-scans the source to count
+    def counted(df: DataFrame): (DataFrame, Observation) = {
+      val obs = Observation()
+      (df.observe(obs, count(lit(1)).as("n")), obs)
+    }
+    def seen(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
+
     // sink A: record-all (parquet by default; the corpus face muxes
     // partitioned video instead)
     val framesSaved =
       if (recordAll != null) recordAll(source)
       else {
-        source.select("frame_number", "ts_us", "payload")
-          .write.mode("overwrite").parquet(s"$outDir/all")
-        spark.read.parquet(s"$outDir/all").count()
+        val (all, saved) = counted(source.select("frame_number", "ts_us", "payload"))
+        all.write.mode("overwrite").parquet(s"$outDir/all")
+        seen(saved)
       }
 
     // sampled branch: letterbox -> detect -> filter -> NMS -> send
@@ -166,8 +174,9 @@ object FlagshipPipeline {
       }
     })
 
-    val detections = source
-      .filter(col("frame_number") % keyframeInterval === 0)
+    val (keyframes, keyframesSeen) =
+      counted(source.filter(col("frame_number") % keyframeInterval === 0))
+    val detections = keyframes
       .withColumn("resized", letterboxUdf(col("payload"), col("w"), col("h")))
       .select(col("frame_number"), col("ts_us"),
         explode(detectUdf(col("frame_number"), col("resized"))).as("d"))
@@ -189,7 +198,8 @@ object FlagshipPipeline {
 
     // sink B: JSON payloads, confidence rounded to 4dp like the sender
     // (frame_processing.py:236)
-    kept.select(col("frame"), to_json(struct(
+    val (sent, detectionsSent) = counted(kept)
+    sent.select(col("frame"), to_json(struct(
         col("frame").as("frame_number"),
         struct(col("x0"), col("y0"), col("x1"), col("y1"),
           col("class_id"),
@@ -197,11 +207,7 @@ object FlagshipPipeline {
         .as("payload"))
       .write.mode("overwrite").parquet(s"$outDir/sent")
 
-    val stats = RunStats(
-      framesSaved = framesSaved,
-      keyframes = source.filter(col("frame_number") % keyframeInterval === 0).count(),
-      detectionsSent = spark.read.parquet(s"$outDir/sent").count())
     source.unpersist()
-    stats
+    RunStats(framesSaved, seen(keyframesSeen), seen(detectionsSent))
   }
 }

@@ -19,19 +19,10 @@ object Tables {
     // rejects outright (PARQUET_TYPE_ILLEGAL) unless read as long under
     // the legacy conf — and TIMESTAMP(MICROS) without a timezone, which
     // reads as TimestampNTZ. Normalize both to the µs TimestampType every
-    // other engine (incl. the DuckDB oracle) sees; the session zone is
-    // pinned UTC so the NTZ cast relabels without shifting the instant.
+    // other engine (incl. the DuckDB oracle) sees, by the stream's rule.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
-    if (name != "events") df
-    else df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
+    if (name != "events") df else graft.streaming.EventStreams.microsTs(df)
   }
 
   def lineitem(spark: SparkSession, d: String): DataFrame   = apply(spark, d, "lineitem")

@@ -2,8 +2,6 @@ package graft.multimodal
 
 import java.awt.image.BufferedImage
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -33,14 +31,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE container is a sequential artifact (frame order is
   * the format), so the single-file writers drain the sorted relation
-  * through `toLocalIterator` — partition-at-a-time fetch, constant mux
+  * through [[Sinks.ordered]] — partition-at-a-time fetch, constant mux
   * memory, never the whole video resident — exactly as bounded as the
   * reference's own single-threaded writer loop. For parallel output use
   * [[saveAviPartitioned]]: the same drain runs executor-side once PER
-  * RANGE-PARTITION, into its own container (the part-file convention
-  * applied to video); every part is a self-describing AVI and ordered
-  * concatenation of the parts' frames reproduces the full stream
-  * (spec'd).
+  * RANGE-PARTITION, into its own container ([[Sinks.parts]], the
+  * part-file drain [[WavCodec]]'s sink shares); every part is a
+  * self-describing AVI and ordered concatenation of the parts' frames
+  * reproduces the full stream (spec'd).
   */
 object VideoSink {
 
@@ -100,14 +98,12 @@ object VideoSink {
     SaveStats(written, dropped, bw, bh, bfps)
   }
 
-  /** [[drain]] over all of `df` in `frame_number` order, fetched to the
-    * driver a partition at a time. */
+  /** [[drain]] over all of `df` in `frame_number` order
+    * ([[Sinks.ordered]]). */
   private def drainSorted(df: DataFrame, open: Open, encode: Encode): SaveStats = {
     val fps = if (df.columns.contains("fps")) col("fps").cast("double") else lit(null).cast("double")
-    val ordered = df
-      .select(col("frame_number"), col("payload"), col("w"), col("h"), fps.as("fps"))
-      .orderBy("frame_number")
-    drain(ordered.toLocalIterator().asScala, open, encode)
+    val selected = df.select(col("frame_number"), col("payload"), col("w"), col("h"), fps.as("fps"))
+    drain(Sinks.ordered(selected, "frame_number"), open, encode)
   }
 
   /** Writes `df` — columns `(frame_number, payload BGR bytes, w, h[,
@@ -128,28 +124,17 @@ object VideoSink {
     drainSorted(df, new Mp4Codec.Muxer(path, _, _, _), encodeJpeg)
 
   /** Partition-parallel variant: `df` is range-partitioned on
-    * `frame_number` (contiguous frame runs per part, global order =
-    * part order) and each partition drains into its own
-    * `part-NNNNN.avi` executor-side — no driver funnel. Mismatched
-    * frames drop against the PART's first frame; parts bind
-    * [[DefaultFps]]. Returns frames written (accumulator-counted). */
+    * `frame_number` and each non-empty partition drains into its own
+    * `part-NNNNN.avi` executor-side ([[Sinks.parts]]) — no driver
+    * funnel. Mismatched frames drop against the PART's first frame;
+    * parts bind [[DefaultFps]]. Returns frames written. */
   def saveAviPartitioned(df: DataFrame, dir: String, codec: String = "raw",
                          numParts: Int = 0): Long = {
     val encode = aviEncode(codec)
     val raw = codec == "raw"
-    new java.io.File(dir).mkdirs()
     val selected = df.select(col("frame_number"), col("payload"), col("w"), col("h"))
-    // explicit width pins the part count (AQE coalescing may merge
-    // small ranges under the default); 0 = let the planner size it
-    val prepared = (if (numParts > 0)
-        selected.repartitionByRange(numParts, col("frame_number"))
-      else selected.repartitionByRange(col("frame_number")))
-      .sortWithinPartitions("frame_number")
-    val written = prepared.sparkSession.sparkContext.longAccumulator("avi_frames_written")
-    prepared.foreachPartition { (rows: Iterator[Row]) =>
-      val part = f"$dir/part-${org.apache.spark.TaskContext.getPartitionId()}%05d.avi"
-      written.add(drain(rows, new AviCodec.Muxer(part, _, _, _, raw), encode).written)
+    Sinks.parts(selected, dir, "avi", col("frame_number"), "frame_number", numParts) { (rows, part) =>
+      drain(rows, new AviCodec.Muxer(part, _, _, _, raw), encode).written
     }
-    written.value
   }
 }

@@ -1,9 +1,12 @@
 package graft.multimodal
 
-import java.io.{ByteArrayInputStream, DataInputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutput,
+  DataOutputStream, RandomAccessFile}
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, expr, udf}
+
+import Riff.{fourcc, le16, le32, tag, u16, u32}
 
 /** Pure-JVM PCM/WAV audio codec — the REAL decode path for the audio
   * modality (the multimodal surface treated audio as an opaque stub
@@ -26,21 +29,6 @@ object WavCodec {
     * per-channel sample frames (dataBytes / blockAlign). */
   final case class WavMeta(channels: Int, sampleRate: Int,
                            bitsPerSample: Int, nFrames: Long)
-
-  private def u16(in: DataInputStream): Int = {
-    val a = in.read(); val b = in.read()
-    if ((a | b) < 0) throw new java.io.EOFException()
-    a | (b << 8)
-  }
-  private def u32(in: DataInputStream): Long = {
-    val a = u16(in).toLong; val b = u16(in).toLong
-    a | (b << 16)
-  }
-  private def fourcc(in: DataInputStream): String = {
-    val b = new Array[Byte](4)
-    in.readFully(b)
-    new String(b, "US-ASCII")
-  }
 
   private final case class Parsed(meta: WavMeta, data: Array[Byte])
 
@@ -166,43 +154,53 @@ object WavCodec {
     c => f(c)
   }
 
+  /** The canonical header: RIFF/WAVE, a 16-byte PCM 'fmt ' chunk and
+    * the 'data' chunk header — 44 bytes before the first sample. */
+  private val HeaderBytes = 44
+
+  private def checkLayout(channels: Int, bits: Int): Unit = {
+    require(channels > 0, "channels must be positive")
+    require(bits == 16 || bits == 24, s"writer emits 16/24-bit PCM, got $bits")
+  }
+
+  /** The one WAV header layout, declaring `dataLen` bytes of samples. */
+  private def writeHeader(out: DataOutput, sampleRate: Int, channels: Int, bits: Int,
+                          dataLen: Long): Unit = {
+    val blockAlign = channels * bits / 8
+    tag(out, "RIFF"); le32(out, HeaderBytes - 8 + dataLen); tag(out, "WAVE")
+    tag(out, "fmt "); le32(out, 16)
+    le16(out, 1); le16(out, channels)
+    le32(out, sampleRate)
+    le32(out, sampleRate.toLong * blockAlign) // byte rate
+    le16(out, blockAlign); le16(out, bits)
+    tag(out, "data"); le32(out, dataLen)
+  }
+
+  /** The one sample encoder: little-endian, 2 or 3 bytes, range-checked
+    * before anything is written. */
+  private def writeSample(out: DataOutput, s: Int, bits: Int): Unit =
+    if (bits == 16) {
+      require(s >= Short.MinValue && s <= Short.MaxValue, s"sample $s out of 16-bit range")
+      le16(out, s & 0xffff)
+    } else {
+      require(s >= -(1 << 23) && s < (1 << 23), s"sample $s out of 24-bit range")
+      le16(out, s & 0xffff); out.write((s >> 16) & 0xff)
+    }
+
   /** Interleaved PCM writer, 16- or 24-bit, any channel count
     * (fixtures + the audio face of media sinks). `samples` is
     * wire-ordered: frame-major, channel-minor. */
   def writePcm(samples: Array[Int], sampleRate: Int, channels: Int,
                bits: Int): Array[Byte] = {
-    require(channels > 0, "channels must be positive")
-    require(bits == 16 || bits == 24, s"writer emits 16/24-bit PCM, got $bits")
+    checkLayout(channels, bits)
     require(samples.length % channels == 0,
       s"${samples.length} interleaved samples do not fill $channels-channel frames")
-    val bytesPer = bits / 8
-    val dataLen = samples.length * bytesPer
-    val out = new java.io.ByteArrayOutputStream(44 + dataLen)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def tag(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    val blockAlign = channels * bytesPer
-    tag("RIFF"); le32(36L + dataLen); tag("WAVE")
-    tag("fmt "); le32(16)
-    le16(1); le16(channels)
-    le32(sampleRate)
-    le32(sampleRate.toLong * blockAlign) // byte rate
-    le16(blockAlign); le16(bits)
-    tag("data"); le32(dataLen)
-    if (bits == 16)
-      samples.foreach { s =>
-        require(s >= Short.MinValue && s <= Short.MaxValue, s"sample $s out of 16-bit range")
-        le16(s & 0xffff)
-      }
-    else
-      samples.foreach { s =>
-        require(s >= -(1 << 23) && s < (1 << 23), s"sample $s out of 24-bit range")
-        out.write(s & 0xff); out.write((s >> 8) & 0xff); out.write((s >> 16) & 0xff)
-      }
-    out.toByteArray
+    val dataLen = samples.length.toLong * (bits / 8)
+    val bytes = new ByteArrayOutputStream(HeaderBytes + dataLen.toInt)
+    val out = new DataOutputStream(bytes)
+    writeHeader(out, sampleRate, channels, bits, dataLen)
+    samples.foreach(writeSample(out, _, bits))
+    bytes.toByteArray
   }
 
   /** PCM16 mono writer (the q88 fixture shape). */
@@ -210,101 +208,61 @@ object WavCodec {
     writePcm(samples, sampleRate, channels = 1, bits = 16)
 
   /** Incremental WAV writer — the audio analog of the video muxers:
-    * RIFF/fmt headers up front with size placeholders, samples appended
-    * one at a time (constant memory, any stream length), sizes patched
-    * on [[close]]. A partial file is not a valid RIFF until close —
-    * the release semantics every sink in this engine shares. */
+    * the header goes out first declaring an empty data chunk, samples
+    * append one at a time (constant memory, any stream length), and
+    * [[close]] rewrites the header with the real sizes. Until close the
+    * file reads as empty audio — the release semantics every sink in
+    * this engine shares. */
   final class Writer(path: String, sampleRate: Int, channels: Int, bits: Int) {
-    require(channels > 0, "channels must be positive")
-    require(bits == 16 || bits == 24, s"writer emits 16/24-bit PCM, got $bits")
-    private val o = new java.io.RandomAccessFile(path, "rw")
+    checkLayout(channels, bits)
+    private val o = new RandomAccessFile(path, "rw")
     o.setLength(0)
-    private def le16(v: Int): Unit = { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
-    private def le32(v: Long): Unit = {
-      o.write((v & 0xff).toInt); o.write(((v >> 8) & 0xff).toInt)
-      o.write(((v >> 16) & 0xff).toInt); o.write(((v >> 24) & 0xff).toInt)
-    }
-    private def tag(s: String): Unit = o.write(s.getBytes("US-ASCII"))
-    private val blockAlign = channels * bits / 8
-    tag("RIFF")
-    private val riffSizeAt = o.getFilePointer
-    le32(0)
-    tag("WAVE"); tag("fmt "); le32(16)
-    le16(1); le16(channels); le32(sampleRate)
-    le32(sampleRate.toLong * blockAlign)
-    le16(blockAlign); le16(bits)
-    tag("data")
-    private val dataSizeAt = o.getFilePointer
-    le32(0)
+    writeHeader(o, sampleRate, channels, bits, dataLen = 0)
     private var n = 0L
 
-    def addSample(s: Int): Unit = {
-      if (bits == 16) {
-        require(s >= Short.MinValue && s <= Short.MaxValue, s"sample $s out of 16-bit range")
-        le16(s & 0xffff)
-      } else {
-        require(s >= -(1 << 23) && s < (1 << 23), s"sample $s out of 24-bit range")
-        o.write(s & 0xff); o.write((s >> 8) & 0xff); o.write((s >> 16) & 0xff)
-      }
-      n += 1
-    }
+    def addSample(s: Int): Unit = { writeSample(o, s, bits); n += 1 }
 
     def samplesWritten: Long = n
 
     def close(): Unit = {
-      val end = o.getFilePointer
-      o.seek(riffSizeAt); le32(end - 8)
-      o.seek(dataSizeAt); le32(end - dataSizeAt - 4)
+      o.seek(0)
+      writeHeader(o, sampleRate, channels, bits, n * (bits / 8))
       o.close()
     }
   }
 
-  /** The audio face of the K1 record-all sink: drains an ordered
-    * `(sample_idx, sample)` relation into ONE WAV through the
-    * incremental [[Writer]] — partition-at-a-time fetch via
-    * `toLocalIterator`, constant memory, like [[VideoSink.saveAvi]]
-    * (one container is a sequential artifact; sample order IS the
-    * format). Returns samples written. */
-  def saveWav(df: org.apache.spark.sql.DataFrame, path: String,
-              sampleRate: Int, channels: Int = 1, bits: Int = 16): Long = {
-    import org.apache.spark.sql.functions.col
-    val it = df.select(col("sample_idx"), col("sample").cast("int"))
-      .orderBy("sample_idx").toLocalIterator()
+  /** `(sample_idx, sample)` of a sample relation, the sinks' row shape. */
+  private def sampleRows(df: DataFrame): DataFrame =
+    df.select(col("sample_idx"), col("sample").cast("int"))
+
+  /** Writes `rows` (sample in column 1) as one WAV at `path`. */
+  private def writeRows(rows: Iterator[Row], path: String, sampleRate: Int, channels: Int,
+                        bits: Int): Long = {
     val w = new Writer(path, sampleRate, channels, bits)
-    try while (it.hasNext) w.addSample(it.next().getInt(1))
-    finally w.close()
+    try rows.foreach(r => w.addSample(r.getInt(1))) finally w.close()
     w.samplesWritten
   }
 
-  /** Partition-parallel form: range-partitioned on `sample_idx`, each
-    * contiguous run muxes its own `part-NNNNN.wav` executor-side —
-    * ordered concatenation of the parts' samples reproduces the full
-    * stream (the [[VideoSink.saveAviPartitioned]] convention). */
-  def saveWavPartitioned(df: org.apache.spark.sql.DataFrame, dir: String,
+  /** The audio face of the K1 record-all sink: drains a
+    * `(sample_idx, sample)` relation in `sample_idx` order into ONE WAV
+    * through the incremental [[Writer]] ([[Sinks.ordered]], like
+    * [[VideoSink.saveAvi]]: one container is a sequential artifact;
+    * sample order IS the format). Returns samples written. */
+  def saveWav(df: DataFrame, path: String,
+              sampleRate: Int, channels: Int = 1, bits: Int = 16): Long =
+    writeRows(Sinks.ordered(sampleRows(df), "sample_idx"), path, sampleRate, channels, bits)
+
+  /** Partition-parallel form ([[Sinks.parts]], the
+    * [[VideoSink.saveAviPartitioned]] drain): range-partitioned on the
+    * FRAME index `sample_idx div channels`, so no part boundary splits
+    * an interleaved frame, and each contiguous run writes its own
+    * `part-NNNNN.wav` executor-side — ordered concatenation of the
+    * parts' samples reproduces the full stream. */
+  def saveWavPartitioned(df: DataFrame, dir: String,
                          sampleRate: Int, channels: Int = 1, bits: Int = 16,
                          numParts: Int = 0): Long = {
-    import org.apache.spark.sql.functions.col
-    new java.io.File(dir).mkdirs()
-    val selected = df.select(col("sample_idx"), col("sample").cast("int"))
-    val prepared = (if (numParts > 0)
-        selected.repartitionByRange(numParts, col("sample_idx"))
-      else selected.repartitionByRange(col("sample_idx")))
-      .sortWithinPartitions("sample_idx")
-    val written = prepared.sparkSession.sparkContext.longAccumulator("wav_samples_written")
-    prepared.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      var w: Writer = null
-      var path: String = null
-      rows.foreach { r =>
-        if (w == null) {
-          val partId = org.apache.spark.TaskContext.getPartitionId()
-          path = f"$dir/part-$partId%05d.wav"
-          w = new Writer(path, sampleRate, channels, bits)
-        }
-        w.addSample(r.getInt(1))
-        written.add(1L)
-      }
-      if (w != null) w.close()
-    }
-    written.value
+    checkLayout(channels, bits)
+    Sinks.parts(sampleRows(df), dir, "wav", expr(s"sample_idx div $channels"), "sample_idx",
+      numParts)(writeRows(_, _, sampleRate, channels, bits))
   }
 }

@@ -176,15 +176,11 @@ object CurationQueries {
       .withColumn("h", Hash56(col("chunk")))
   }
 
-  /** q99/q221 shard count. 8 is the GATE value (hardwired in both
-    * oracles — the env hook never runs under the driver); the override
-    * exists for the r14 probe ask: shard count scales with loader
-    * workers in a real export, so the q221 exponent is shown at a higher
-    * width too (SPARK_GRAFT_CURRICULUM_SHARDS=64 in the probe run).
-    * Lazy, so a typo'd value surfaces at first query use as a named
-    * NumberFormatException, not an object-init error. */
-  private[queries] lazy val curriculumShards: Long =
-    sys.env.get("SPARK_GRAFT_CURRICULUM_SHARDS").map(_.toLong).getOrElse(8L)
+  /** q99/q221 shard count, hardwired in both oracles and shared by every
+    * query that shards the curriculum export (q245/q247 packing
+    * included). In a real export it scales with loader workers; here it
+    * is a constant, so no query can disagree with its oracle. */
+  private[queries] final val curriculumShards = 8L
 
   /** q93's batch split: the "newly arrived" slice is a fixed residue
     * class so the batch stays ~10% of the corpus at EVERY scale factor

@@ -43,19 +43,23 @@ object EventStreams {
     val physicalTs =
       try spark.read.parquet(sfDir + "/events.parquet").schema("ts").dataType
       catch { case _: org.apache.spark.sql.AnalysisException => TimestampNTZType }
-    val raw = spark.readStream
+    microsTs(spark.readStream
       .schema(eventsSchema(physicalTs))
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    physicalTs match {
-      // TIMESTAMP(NANOS) read as long under the legacy conf → µs
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      // TIMESTAMP(MICROS) without timezone → TimestampNTZ, which
-      // watermarks reject; the session zone is pinned UTC so the cast
-      // relabels without shifting the instant
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+      .parquet(sfDir))
+  }
+
+  /** The one events-`ts` rule, for batch reads ([[graft.Tables]]) and
+    * the stream alike: `df`'s `ts` as µs TimestampType, whichever way
+    * the table shipped it. */
+  private[graft] def microsTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    // TIMESTAMP(NANOS) read as long under the legacy conf → µs
+    case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    // TIMESTAMP(MICROS) without timezone → TimestampNTZ, which
+    // watermarks reject; the session zone is pinned UTC so the cast
+    // relabels without shifting the instant
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => df
   }
 
   /** Runs a (bounded) streaming DataFrame to completion through a FILE
@@ -96,24 +100,9 @@ object EventStreams {
     * results are partition-count-independent either way (every
     * query-path stream re-sorts after the drain).
     *
-    * The rule: SPARK_GRAFT_STREAM_PARTS > width DERIVED from the
-    * stream's file-source bytes ([[derivedParts]]) > [[DefaultStreamParts]].
-    * The env parse is LAZY (not object-init) so a typo'd value surfaces
-    * as a named IllegalArgumentException at the first stream start — an
-    * eager field would wrap it in ExceptionInInitializerError and poison
-    * every later EventStreams touch with a message-less
-    * NoClassDefFoundError. */
-  private lazy val envStreamParts: Option[Int] = {
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map { raw =>
-      val parsed = raw.toIntOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$raw'"))
-      require(parsed > 0, s"SPARK_GRAFT_STREAM_PARTS must be > 0, got $parsed")
-      parsed
-    }
-  }
-  /** Fallback width when neither the env nor a derivable input size is
-    * present. */
+    * The rule ([[widthFor]]): the width DERIVED from the stream's
+    * file-source bytes ([[derivedParts]]), else this fallback, 8. No
+    * setting overrides it. */
   private val DefaultStreamParts = 8
 
   /** Input-volume target per state partition for the DERIVED width
@@ -204,7 +193,7 @@ object EventStreams {
 
   /** The width a given stream should run at — see [[derivedParts]]. */
   private def widthFor(df: DataFrame): Int =
-    envStreamParts.orElse(derivedParts(df)).getOrElse(DefaultStreamParts)
+    derivedParts(df).getOrElse(DefaultStreamParts)
 
   /** Runs `body` with the session's `spark.sql.shuffle.partitions`
     * scoped to [[widthFor]] of `df` — the shared width helper (VERDICT

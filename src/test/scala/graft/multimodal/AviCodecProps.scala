@@ -51,7 +51,7 @@ object AviCodecProps extends Properties("AviCodec") {
           meta.width == w && meta.height == h && meta.fps == fps.toDouble &&
             meta.nFrames == frames.toLong && idx.length == frames &&
             bufs.indices.forall { k =>
-              AviCodec.decodeFrameWithMeta(raf, idx(k), meta)
+              AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, idx(k)), meta)
                 .exists(_.pixels.sameElements(bufs(k)))
             }
         } finally raf.close()
@@ -93,7 +93,7 @@ object AviCodecProps extends Properties("AviCodec") {
         val meta = AviCodec.probe(p)
         val idx = AviCodec.frameIndex(p)
         val raf = new java.io.RandomAccessFile(p, "r")
-        try idx.toSeq.map(c => AviCodec.decodeFrameWithMeta(raf, c, meta).get.pixels)
+        try idx.toSeq.map(c => AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, c), meta).get.pixels)
         finally raf.close()
       }
       val rejoined = decodeAll(lo) ++ decodeAll(hi)

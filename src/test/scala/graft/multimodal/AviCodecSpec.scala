@@ -53,12 +53,13 @@ class AviCodecSpec extends AnyFunSuite {
     AviCodec.writeMjpeg(path, frames, 32, 24, 25)
     val idx = AviCodec.frameIndex(path)
     assert(idx.length === 5)
+    val meta = AviCodec.probe(path)
     val raf = new java.io.RandomAccessFile(path, "r")
     try {
       (0 until 5).foreach { i =>
         assert(AviCodec.readFrameBytes(raf, idx(i)).toSeq === frames(i).toSeq,
           s"raw chunk $i must round-trip exactly (stream copy, no transcode)")
-        val viaAvi = AviCodec.decodeFrame(raf, idx(i)).get
+        val viaAvi = AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, idx(i)), meta).get
         val viaDir = ImageCodec.decode(frames(i)).get
         assert(viaAvi.width === viaDir.width && viaAvi.height === viaDir.height)
         assert(viaAvi.pixels.toSeq === viaDir.pixels.toSeq,
@@ -154,11 +155,13 @@ class AviCodecSpec extends AnyFunSuite {
     AviCodec.writeMjpeg(path, frames, 32, 24, 30)
     val idx = AviCodec.frameIndex(path)
     assert(idx.length === 3, "the corrupt chunk still indexes (the walk reads headers only)")
+    val meta = AviCodec.probe(path)
     val raf = new java.io.RandomAccessFile(path, "r")
+    def decode(i: Int) = AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, idx(i)), meta)
     try {
-      assert(AviCodec.decodeFrame(raf, idx(0)).isDefined)
-      assert(AviCodec.decodeFrame(raf, idx(1)).isEmpty, "garbage frame -> None (ret False)")
-      assert(AviCodec.decodeFrame(raf, idx(2)).isDefined)
+      assert(decode(0).isDefined)
+      assert(decode(1).isEmpty, "garbage frame -> None (ret False)")
+      assert(decode(2).isDefined)
     } finally raf.close()
   }
 }

@@ -97,6 +97,8 @@ class MultimodalSpec extends SparkSpec {
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(single))
     assert(WavCodec.probe(bytes) === WavCodec.WavMeta(1, 8000, 16, 5000L))
     assert(WavCodec.samples(bytes).toSeq === samples)
+    assert(bytes.sameElements(WavReferenceWriter.writePcm(samples.toArray, 8000, 1, 16)),
+      "the sink writes the reference writer's bytes")
 
     // partitioned: ordered part concatenation reproduces the stream
     val parts = dir.resolve("parts").toString
@@ -107,6 +109,24 @@ class MultimodalSpec extends SparkSpec {
     val reassembled = partFiles.toSeq.flatMap(f =>
       WavCodec.samples(Files.readAllBytes(f.toPath)).toSeq)
     assert(reassembled === samples, "part order = sample order (range partitioning)")
+
+    // stereo: parts split between interleaved frames, never inside one
+    val stereo = dir.resolve("stereo").toString
+    assert(WavCodec.saveWavPartitioned(df, stereo, sampleRate = 8000, channels = 2,
+      numParts = 7) === 5000L)
+    val stereoParts = new java.io.File(stereo).listFiles()
+      .filter(_.getName.endsWith(".wav")).sortBy(_.getName).toSeq
+      .map(f => Files.readAllBytes(f.toPath))
+    assert(stereoParts.length > 1)
+    stereoParts.foreach { b =>
+      // the 'data' chunk's size field: bytes 40-43 of the 44-byte header
+      val dataLen = java.nio.ByteBuffer.wrap(b, 40, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      assert(dataLen % 4 === 0, "blockAlign = 2 channels x 2 bytes")
+      assert(WavCodec.probe(b).nFrames * 4 === dataLen.toLong)
+    }
+    assert(stereoParts.flatMap(b => WavCodec.samples(b).toSeq) === samples,
+      "stereo parts reassemble the interleaved stream")
 
     // 24-bit face through the same writer
     val deep = dir.resolve("deep.wav").toString

@@ -122,7 +122,7 @@ class VideoSinkSpec extends SparkSpec {
       val idx = AviCodec.frameIndex(p.toString)
       val raf = new java.io.RandomAccessFile(p, "r")
       val meta = AviCodec.probe(p.toString)
-      try idx.toSeq.map(c => AviCodec.decodeFrameWithMeta(raf, c, meta).get.pixels)
+      try idx.toSeq.map(c => AviCodec.decodeChunk(AviCodec.readFrameBytes(raf, c), meta).get.pixels)
       finally raf.close()
     }
     assert(reassembled.length === 40)

@@ -32,8 +32,6 @@ class StagedStreamSpec extends SparkSpec {
   for (q <- Seq("q212_mapstate_profile", "q213_liststate_recent",
       "q247_packing_stream", "q251_split_stream")) {
     test(s"$q drains through drainToFiles and reports width 2 at sf0.001") {
-      assume(sys.env.get("SPARK_GRAFT_STREAM_PARTS").isEmpty,
-        "SPARK_GRAFT_STREAM_PARTS pins the width over the derived one")
       EventStreams.lastRunStats = None
       assert(graft.SparkEntry.queries(q)(spark, sf0001).count() > 0)
       val stats = EventStreams.lastRunStats.getOrElse(

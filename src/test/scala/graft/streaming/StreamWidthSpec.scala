@@ -47,8 +47,6 @@ class StreamWidthSpec extends SparkSpec {
   }
 
   test("a glob source derives its width from the staged chunks (2), not the fallback (8)") {
-    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTS").isEmpty,
-      "SPARK_GRAFT_STREAM_PARTS pins the width over the derived one")
     val dir = staged()
     val before = spark.conf.get(partsKey)
     assert(widthInside(s"$dir/*") === 2)
@@ -56,8 +54,6 @@ class StreamWidthSpec extends SparkSpec {
   }
 
   test("hidden files under a broad glob are not counted; visible leaf bytes are") {
-    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTS").isEmpty,
-      "SPARK_GRAFT_STREAM_PARTS pins the width over the derived one")
     val dir = staged()
     // 100 MB each: any one of them counted would derive width 4
     sparse(s"$dir/_SUCCESS", 100)
@@ -81,8 +77,6 @@ class StreamWidthSpec extends SparkSpec {
   }
 
   test("a source the listing cannot size falls back to 8; only a non-missing failure is reported") {
-    assume(sys.env.get("SPARK_GRAFT_STREAM_PARTS").isEmpty,
-      "SPARK_GRAFT_STREAM_PARTS pins the width over the derived one")
     val dir = staged()
     // a path gone by the time the width is derived (the stream was
     // defined while it existed): the documented quiet fallback

@@ -1,7 +1,7 @@
 package graft.multimodal
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutput,
-  DataOutputStream, RandomAccessFile}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream,
+  DataInputStream, DataOutput, DataOutputStream, FileOutputStream, RandomAccessFile}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, expr, udf}
@@ -215,8 +215,9 @@ object WavCodec {
     * this engine shares. */
   final class Writer(path: String, sampleRate: Int, channels: Int, bits: Int) {
     checkLayout(channels, bits)
-    private val o = new RandomAccessFile(path, "rw")
-    o.setLength(0)
+    // samples go out through a buffer: the sample encoder writes one
+    // byte at a time, one system call each on an unbuffered file
+    private val o = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     writeHeader(o, sampleRate, channels, bits, dataLen = 0)
     private var n = 0L
 
@@ -224,10 +225,12 @@ object WavCodec {
 
     def samplesWritten: Long = n
 
+    /** Flushes the samples, then rewrites the 44-byte header in place
+      * with the real sizes. */
     def close(): Unit = {
-      o.seek(0)
-      writeHeader(o, sampleRate, channels, bits, n * (bits / 8))
       o.close()
+      val f = new RandomAccessFile(path, "rw")
+      try writeHeader(f, sampleRate, channels, bits, n * (bits / 8)) finally f.close()
     }
   }
 

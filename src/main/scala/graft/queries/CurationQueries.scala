@@ -959,12 +959,10 @@ object CurationQueries {
         root.toString + "/state"
       }
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val width = docs.agg(max("doc_id")).head.getLong(0) / 4 + 1
-      (0L until 4L).foreach { b =>
-        graft.streaming.StreamingLineDedup.processBatch(
-          docs.filter(col("doc_id") >= b * width && col("doc_id") < (b + 1) * width),
-          dir, b)
-      }
+      graft.streaming.EventStreams.idRangeBatches(docs, "doc_id", 4).zipWithIndex
+        .foreach { case (batch, b) =>
+          graft.streaming.StreamingLineDedup.processBatch(batch, dir, b.toLong)
+        }
       graft.streaming.StreamingLineDedup.report(s, dir)
         .select("doc_id", "batch", "n_chunks", "n_dropped", "clean_text")
         .orderBy("doc_id")

@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
   * ('error' = DELETE) are KEPT in the snapshot — a delete must
   * out-version an earlier upsert — and drop only at [[publish]].
   *
-  * State at `stateDir` uses the [[StreamingHeavyHitters]] durability
-  * scheme: versioned dirs `v{batchId}/` committed by an atomic
-  * zero-byte COMMITTED marker created LAST — a crash mid-write leaves
-  * an invisible version and the previous snapshot intact, and a
-  * RETRIED batch finds its own version committed and no-ops
-  * (exactly-once). Superseded versions are pruned best-effort.
+  * State at `stateDir` is a [[VersionedState]] fold: versioned dirs
+  * `v{batchId}/` committed by an atomic marker created LAST — a crash
+  * mid-write leaves an invisible version and the previous snapshot
+  * intact, and a RETRIED batch finds its own version committed and
+  * no-ops (exactly-once).
   *
   * Scale: state is one row per LIVE KEY (dimension-sized, not
   * log-sized); each batch costs one partial-agg'd shuffle of the batch
@@ -37,61 +36,35 @@ import org.apache.spark.sql.functions._
   */
 object CdcApply {
 
-  private def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committed(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val f = fs(spark, stateDir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-      .map(_.getPath)
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, "COMMITTED")))
-      .map(_.getName.drop(1).toLong)
-      .sorted
-  }
-
   /** Apply ONE micro-batch of ops (user_id, event_id, event_type,
     * value) to the standing snapshot, exactly-once under retry. */
   private[streaming] def processBatch(batch: DataFrame, stateDir: String,
                                       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val versions = committed(spark, stateDir)
-    if (versions.contains(batchId)) return // retry of a committed batch
-    val batchLast = batch.groupBy("user_id").agg(
-      max(struct(col("event_id"), col("event_type"), col("value"))).as("o"))
-    val merged = versions.lastOption match {
-      case Some(v) =>
-        val standing = spark.read.parquet(s"$stateDir/v$v/snap")
-        standing.as("a").join(batchLast.as("b"), Seq("user_id"), "full_outer")
-          // greatest skips nulls, so a key present on one side passes
-          // through; present on both, the higher commit id wins
-          .select(col("user_id"), greatest(col("b.o"), col("a.o")).as("o"))
-      case None => batchLast
-    }
-    val vdir = s"$stateDir/v$batchId"
-    merged.write.mode("overwrite").parquet(s"$vdir/snap")
-    val f = fs(spark, stateDir)
-    f.create(new org.apache.hadoop.fs.Path(vdir, "COMMITTED"), false).close()
-    versions.filter(_ < batchId).foreach { v =>
-      try f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$v"), true)
-      catch { case _: java.io.IOException => }
+    VersionedState.fold(spark, stateDir, batchId) { (prev, vdir) =>
+      val batchLast = batch.groupBy("user_id").agg(
+        max(struct(col("event_id"), col("event_type"), col("value"))).as("o"))
+      val merged = prev match {
+        case Some(p) =>
+          val standing = spark.read.parquet(s"$p/snap")
+          standing.as("a").join(batchLast.as("b"), Seq("user_id"), "full_outer")
+            // greatest skips nulls, so a key present on one side passes
+            // through; present on both, the higher commit id wins
+            .select(col("user_id"), greatest(col("b.o"), col("a.o")).as("o"))
+        case None => batchLast
+      }
+      merged.write.mode("overwrite").parquet(s"$vdir/snap")
     }
   }
 
   /** The current table: live keys only (tombstones filtered at read,
     * never during maintenance). */
-  def publish(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = committed(spark, stateDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $stateDir"))
-    spark.read.parquet(s"$stateDir/v$v/snap")
+  def publish(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(s"${VersionedState.latest(spark, stateDir)}/snap")
       .filter(col("o.event_type") =!= "error")
       .select(col("user_id"), col("o.event_id").as("last_event_id"),
         col("o.value").as("value"))
       .orderBy("user_id")
-  }
 
   /** Unbounded form: a change-log stream applied batch-by-batch. */
   def run(ops: DataFrame, stateDir: String,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,13 +30,9 @@ import graft.operators.TextCuration
   * PII).
   *
   * Every stage is the SAME code the batch oracle gate verifies — the
-  * pipeline composes operators, it does not re-implement them.
-  *
-  * Delivery: [[run]] is at-least-once under micro-batch retry (the
-  * [[IncrementalNearDup]] stance; a bounded harness run never
-  * retries); [[runExactlyOnce]] is the idempotent form — every sink
-  * AND the standing index keyed by a `__batch` partition that a replay
-  * overwrites.
+  * pipeline composes operators, it does not re-implement them. Every
+  * sink AND the standing index are keyed by a `__batch` partition that
+  * a replayed micro-batch overwrites, so a retry is exactly-once.
   */
 object CurationPipeline {
 
@@ -49,12 +45,24 @@ object CurationPipeline {
   final case class BatchStats(input: Long, qualityDropped: Long,
                               dupDropped: Long, exported: Long)
 
-  /** Run ONE batch of (doc_id, text) through the full chain.
-    * Package-visible so the spec drives it directly, like
-    * [[IncrementalNearDup.processBatch]]. */
-  private[streaming] def processBatch(batch: DataFrame, indexDir: String,
-                                      outDir: String,
+  /** Run ONE batch of (doc_id, text) through the full chain, every
+    * write keyed by `batchId` ([[VersionedState.overwriteBatch]]): a
+    * replay overwrites its own partitions, and its dedup reads exclude
+    * them, so a retry that crashed after its index write still reaches
+    * the same decisions. Package-visible so the spec drives it
+    * directly, like [[IncrementalNearDup.processBatch]]. */
+  private[streaming] def processBatch(batch: DataFrame, batchId: Long,
+                                      indexDir: String, outDir: String,
                                       minScore: Long = 0L): BatchStats = {
+    // counts come from the writes themselves (the FlagshipPipeline
+    // idiom), not from extra count jobs
+    def counted(df: DataFrame): (DataFrame, Observation) = {
+      val obs = Observation()
+      (df.observe(obs, count(lit(1)).as("n")), obs)
+    }
+    def seen(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
+
+    // the count materializes the scoped persist
     val docs = graft.Caches.scopedPersist(batch.select("doc_id", "text"))
     val input = docs.count()
 
@@ -63,29 +71,29 @@ object CurationPipeline {
       TextCuration.qualityScores(docs)
         .select(col("doc_id"), col("n_tokens"), col("score"),
           (col("score") > minScore).as("kept")))
-    quality.write.mode("append").parquet(s"$outDir/quality")
+    VersionedState.overwriteBatch(quality, batchId, s"$outDir/quality")
     val passed = docs.join(
       quality.filter(col("kept")).select("doc_id"), "doc_id")
 
     // 2. near-dup vs the standing corpus (original text — scrubbing
-    // first could mask a duplicate)
-    val decisions = IncrementalNearDup.dedupBatch(passed, indexDir)
-    decisions.write.mode("append").parquet(s"$outDir/dedup")
+    // first could mask a duplicate). Decisions are one row per passed
+    // doc, so their write counts `passed`.
+    val decisions = IncrementalNearDup.dedupBatch(passed, batchId, indexDir)
+    val (decided, nPassed) = counted(decisions)
+    VersionedState.overwriteBatch(decided, batchId, s"$outDir/dedup")
     val kept = passed.join(
       decisions.filter(col("kept")).select("doc_id"), "doc_id")
 
     // 3. scrub + export, partitioned by the reproducible shard key —
-    // the write-side layout q99 derives
-    val exported = kept.select(col("doc_id"),
+    // the write-side layout q99 derives; a projection of `kept`, so its
+    // write counts `kept`
+    val (exported, nKept) = counted(kept.select(col("doc_id"),
       TextCuration.scrubPii(col("text")).as("clean_text"),
-      (TextCuration.shuffleKey(col("doc_id")) % Shards).as("shard"))
-    exported.write.mode("append").partitionBy("shard")
-      .parquet(s"$outDir/shards")
+      (TextCuration.shuffleKey(col("doc_id")) % Shards).as("shard")))
+    VersionedState.overwriteBatch(exported, batchId, s"$outDir/shards", "shard")
 
-    val nPassed = passed.count()
-    val nKept = kept.count()
     graft.Caches.releaseScoped()
-    BatchStats(input, input - nPassed, nPassed - nKept, nKept)
+    BatchStats(input, input - seen(nPassed), seen(nPassed) - seen(nKept), seen(nKept))
   }
 
   /** q209: the curation flagship promoted into the oracle gate (the
@@ -126,7 +134,7 @@ object CurationPipeline {
       .as[Long].head()
     val stats = (0 until nBatches).map { b =>
       val st = processBatch(docs.filter(pmod(col("doc_id"), lit(nBatches)) === b),
-        s"$root/index", s"$root/out", minScore)
+        b.toLong, s"$root/index", s"$root/out", minScore)
       (b.toLong, st.input, st.qualityDropped, st.dupDropped, st.exported)
     }
     stats.toDF("batch", "n_input", "n_quality_dropped",
@@ -139,62 +147,8 @@ object CurationPipeline {
           checkpointDir: String, minScore: Long = 0L): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexDir, outDir, minScore)
-        ()
-      }
-      .start()
-
-  /** EXACTLY-ONCE form for engines that retry micro-batches (the
-    * `FanOutPipeline.runExactlyOnce` stance): every sink — quality
-    * report, dedup decisions, shard export, and the standing index
-    * itself ([[IncrementalNearDup.dedupBatchIdempotent]]) — is keyed by
-    * a `__batch` partition and a replay OVERWRITES its own partition.
-    * The dedup reads exclude the replayed batch's partition, so a retry
-    * that crashed after its index write still reaches the same
-    * decisions. */
-  private[streaming] def processBatchExactlyOnce(batch: DataFrame, batchId: Long,
-                                                 indexDir: String, outDir: String,
-                                                 minScore: Long = 0L): BatchStats = {
-    val docs = graft.Caches.scopedPersist(batch.select("doc_id", "text"))
-    val input = docs.count()
-
-    def overwrite(df: DataFrame, path: String, parts: String*): Unit =
-      df.withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch" +: parts: _*).parquet(path)
-
-    val quality = graft.Caches.scopedPersist(
-      TextCuration.qualityScores(docs)
-        .select(col("doc_id"), col("n_tokens"), col("score"),
-          (col("score") > minScore).as("kept")))
-    overwrite(quality, s"$outDir/quality")
-    val passed = docs.join(
-      quality.filter(col("kept")).select("doc_id"), "doc_id")
-
-    val decisions = IncrementalNearDup.dedupBatchIdempotent(passed, batchId, indexDir)
-    overwrite(decisions, s"$outDir/dedup")
-    val kept = passed.join(
-      decisions.filter(col("kept")).select("doc_id"), "doc_id")
-
-    val exported = kept.select(col("doc_id"),
-      TextCuration.scrubPii(col("text")).as("clean_text"),
-      (TextCuration.shuffleKey(col("doc_id")) % Shards).as("shard"))
-    overwrite(exported, s"$outDir/shards", "shard")
-
-    val nPassed = passed.count()
-    val nKept = kept.count()
-    graft.Caches.releaseScoped()
-    BatchStats(input, input - nPassed, nPassed - nKept, nKept)
-  }
-
-  /** [[run]] with the exactly-once batch body. */
-  def runExactlyOnce(docs: DataFrame, indexDir: String, outDir: String,
-                     checkpointDir: String, minScore: Long = 0L): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatchExactlyOnce(batch, bid, indexDir, outDir, minScore)
+        processBatch(batch, bid, indexDir, outDir, minScore)
         ()
       }
       .start()

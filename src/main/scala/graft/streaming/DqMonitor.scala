@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * pass (one scan of the batch, no second read), reports are tiny
   * (5 rows per batch), and the gate the batch pipeline applies
   * (quarantine, halt, alert) reads the same rows. Per-batch appends are
-  * at-least-once under retry (the [[IncrementalNearDup]] stance; the
-  * batch-keyed overwrite form upgrades it exactly like
-  * `FanOutPipeline.runExactlyOnce`).
+  * at-least-once under retry; the batch-keyed overwrite
+  * ([[VersionedState.overwriteBatch]]) is the exactly-once form.
   */
 object DqMonitor {
 

@@ -256,6 +256,15 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1").parquet(s"$root/*")
   }
 
+  /** The one id-range micro-batch split of the replay faces: `df` cut
+    * into `n` batches by `key`, width `max(key) / n + 1`, batch b
+    * holding key ∈ [b·width, (b+1)·width) — always `n` batches at any
+    * scale, in key order (one job for the max). */
+  def idRangeBatches(df: DataFrame, key: String, n: Int): Seq[DataFrame] = {
+    val width = df.agg(max(key)).head.getLong(0) / n + 1
+    (0 until n).map(b => df.filter(col(key) >= b * width && col(key) < (b + 1) * width))
+  }
+
   /** [[drainToFiles]] plus the number of input rows the stateful operators
     * dropped as later than the watermark. The count comes from the
     * engine's own `numRowsDroppedByWatermark` metric — an `Observation`

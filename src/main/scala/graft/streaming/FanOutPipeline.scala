@@ -22,14 +22,14 @@ import graft.operators.Letterbox
   * warning, not written. The drop count is taken from an [[Observation]]
   * on the same pass that writes — no second scan, no collect.
   *
-  * Delivery-accounting caveat: the dims bind and the drop counter are
-  * driver-side mutable state over a NON-idempotent append sink, so if
-  * Spark retries a micro-batch after a transient write failure, sink A
-  * rows are re-appended and drops re-counted (and a retried FIRST batch
-  * could re-bind) — at-least-once, where the reference's sequential loop
-  * is exactly-once. The bounded harness runs never retry; when retries
-  * matter, [[runExactlyOnce]] is the idempotent form (per-batch dynamic
-  * partition overwrite; drop counts as per-batch records).
+  * Delivery is exactly-once, like the reference's sequential loop: every
+  * batch writes both sinks and its drop count into its own
+  * `__batch=<id>` partition with dynamic partition overwrite, so a
+  * retried micro-batch REPLACES its previous output instead of
+  * appending a second copy, and the drop total is folded from those
+  * per-batch records at the end. The dims bind is a driver cache
+  * derived deterministically from the batch's min-event_id record, so
+  * a retried first batch rebinds to the identical value.
   */
 object FanOutPipeline {
 
@@ -68,32 +68,6 @@ object FanOutPipeline {
       .map(_.agg(coalesce(sum("dropped"), lit(0L))).head().getLong(0))
       .getOrElse(0L)
 
-  /** Deterministic dims bind from the batch's min-event_id record —
-    * shared by [[run]] and [[runExactlyOnce]] so the bind rule cannot
-    * drift between the at-least-once and exactly-once forms. */
-  private def bindDims(df: org.apache.spark.sql.DataFrame,
-                       wc: Column, hc: Column,
-                       bound: Option[(Long, Long)]): Option[(Long, Long)] =
-    if (bound.nonEmpty || df.isEmpty) bound
-    else {
-      val first = df.orderBy("event_id")
-        .select(wc.cast("long"), hc.cast("long")).head()
-      Some((first.getLong(0), first.getLong(1)))
-    }
-
-  /** Sink B's sampled branch (keyframe filter → letterbox geometry →
-    * JSON payload) — single definition for both run forms. */
-  private def sampledBranch(df: org.apache.spark.sql.DataFrame,
-                            keyframeInterval: Int): org.apache.spark.sql.DataFrame = {
-    val w = (col("event_id") % 1920 + 1).cast("long")
-    val h = (col("event_id") * 7 % 1080 + 1).cast("long")
-    val g = Letterbox.geometry(w, h, 640)
-    df.filter(col("event_id") % keyframeInterval === 0)
-      .select(col("event_id"), g.newW.as("new_w"), g.newH.as("new_h"),
-        to_json(struct(col("event_id"), col("event_type"), col("value")))
-          .as("payload"))
-  }
-
   /** Runs the fan-out to completion over the bounded events stream.
     *
     * @param keyframeInterval every-Nth sampling (reference default 30)
@@ -105,114 +79,67 @@ object FanOutPipeline {
   def run(spark: SparkSession, sfDir: String, outDir: String,
           keyframeInterval: Int = EventStreams.KeyframeInterval,
           dims: (Column, Column) = (lit(1920L), lit(1080L))): FanOutCounts = {
-    val stream = EventStreams.eventsStream(spark, sfDir)
-    val (wc, hc) = dims
-    // Bound once from the first record the sink ever sees, exactly like
-    // the reference's lazy writer init; lives across micro-batches.
-    var bound: Option[(Long, Long)] = None
-    var dropped = 0L
-
-    val query = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val df = batch.persist() // one decode pass shared by both sinks
-        try {
-          // first record by stream position binds the writer's dims
-          bound = bindDims(df.toDF(), wc, hc, bound)
-          // sink A: record-all (FrameSaver analog), mismatched dims dropped
-          val (bw, bh) = bound.getOrElse((0L, 0L))
-          val keep = wc.cast("long") === bw && hc.cast("long") === bh
-          val obs = Observation()
-          df.observe(obs,
-              count(when(!keep, lit(1))).as("dropped")) // count: 0 on empty, never null
-            .filter(keep)
-            .write.mode("append").parquet(s"$outDir/all")
-          val d = obs.get("dropped").asInstanceOf[Long]
-          if (d > 0) {
-            dropped += d
-            System.err.println(s"[fanout] dropped $d frame(s) with dims != ${bw}x$bh")
-          }
-          // sink B: sampled branch -> letterbox projection -> send analog
-          sampledBranch(df.toDF(), keyframeInterval)
-            .write.mode("append").parquet(s"$outDir/sampled")
-        } finally df.unpersist() // a throwing write must not leak the cached batch
-        ()
-      }
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-
-    FanOutCounts(
-      countIfExists(spark, s"$outDir/all"),
-      countIfExists(spark, s"$outDir/sampled"),
-      dropped)
-  }
-
-  /** EXACTLY-ONCE form of [[run]]: both sinks and the drop accounting
-    * are idempotent under micro-batch retries. Every batch writes into
-    * its own `__batch=<id>` partition with dynamic partition overwrite,
-    * so a retried batch REPLACES its previous output instead of
-    * appending a second copy; the drop count is itself an idempotent
-    * per-batch record (folded with a sum at the end) instead of a
-    * driver-side accumulator a retry would double-bump. The dims bind
-    * stays a driver cache, but it is derived deterministically from the
-    * batch's min-event_id record, so a retried first batch rebinds to
-    * the identical value. This closes the at-least-once caveat [[run]]
-    * documents, at the cost of carrying the `__batch` lineage column in
-    * the sink schema (it IS the idempotence key).
-    */
-  def runExactlyOnce(spark: SparkSession, sfDir: String, outDir: String,
-                     keyframeInterval: Int = EventStreams.KeyframeInterval,
-                     dims: (Column, Column) = (lit(1920L), lit(1080L))): FanOutCounts = {
+    // bound once from the first record the sink ever sees, exactly like
+    // the reference's lazy writer init; lives across micro-batches
     var bound: Option[(Long, Long)] = None
     val query = EventStreams.eventsStream(spark, sfDir).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        bound = writeBatchIdempotent(batch.toDF(), bid, outDir, keyframeInterval, dims, bound)
+        bound = writeBatch(batch.toDF(), bid, outDir, keyframeInterval, dims, bound)
         ()
       }
       .start()
     try query.processAllAvailable()
     finally query.stop()
-    val dropped = sumDropsIfExists(spark, s"$outDir/drops")
     FanOutCounts(
       countIfExists(spark, s"$outDir/all"),
       countIfExists(spark, s"$outDir/sampled"),
-      dropped)
+      sumDropsIfExists(spark, s"$outDir/drops"))
   }
 
-  /** One batch's idempotent writes (sink A + sink B + drop record), all
-    * keyed by `__batch` with dynamic partition overwrite. Returns the
+  /** One batch's writes (sink A + sink B + drop record), all keyed by
+    * `__batch` with dynamic partition overwrite. Returns the
     * possibly-newly-bound dims. Package-visible so FanOutSpec can REPLAY
     * a batch and assert nothing duplicates. */
-  private[streaming] def writeBatchIdempotent(
+  private[streaming] def writeBatch(
       batch: org.apache.spark.sql.DataFrame, batchId: Long, outDir: String,
       keyframeInterval: Int, dims: (Column, Column),
       bound0: Option[(Long, Long)]): Option[(Long, Long)] = {
     val spark = batch.sparkSession
     val (wc, hc) = dims
-    val df = batch.persist()
+    val df = batch.persist() // one decode pass shared by both sinks
     // unpersist in a finally: a throwing sink write is the very
-    // transient-failure/retry scenario this function exists for, and it
+    // transient-failure/retry scenario the keying exists for, and it
     // must not leak a cached batch per attempt
     try {
-      val bound = bindDims(df, wc, hc, bound0)
+      // the first record by stream position binds the writer's dims
+      val bound =
+        if (bound0.nonEmpty || df.isEmpty) bound0
+        else {
+          val first = df.orderBy("event_id")
+            .select(wc.cast("long"), hc.cast("long")).head()
+          Some((first.getLong(0), first.getLong(1)))
+        }
+      // sink A: record-all (FrameSaver analog), mismatched dims dropped
       val (bw, bh) = bound.getOrElse((0L, 0L))
       val keep = wc.cast("long") === bw && hc.cast("long") === bh
       val obs = Observation()
-      df.observe(obs, count(when(!keep, lit(1))).as("dropped"))
+      val all = df.observe(obs, count(when(!keep, lit(1))).as("dropped")) // 0 on empty, never null
         .filter(keep)
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$outDir/all")
+      VersionedState.overwriteBatch(all, batchId, s"$outDir/all")
       val d = obs.get("dropped").asInstanceOf[Long]
+      if (d > 0) System.err.println(s"[fanout] dropped $d frame(s) with dims != ${bw}x$bh")
       // the drop count as data, overwritten with its batch on retry
-      spark.range(1)
-        .select(lit(batchId).as("__batch"), lit(d).as("dropped"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$outDir/drops")
-      sampledBranch(df, keyframeInterval)
-        .withColumn("__batch", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch").parquet(s"$outDir/sampled")
+      VersionedState.overwriteBatch(spark.range(1).select(lit(d).as("dropped")), batchId,
+        s"$outDir/drops")
+      // sink B: sampled branch -> letterbox projection -> send analog
+      val w = (col("event_id") % 1920 + 1).cast("long")
+      val h = (col("event_id") * 7 % 1080 + 1).cast("long")
+      val g = Letterbox.geometry(w, h, 640)
+      val sampled = df.filter(col("event_id") % keyframeInterval === 0)
+        .select(col("event_id"), g.newW.as("new_w"), g.newH.as("new_h"),
+          to_json(struct(col("event_id"), col("event_type"), col("value")))
+            .as("payload"))
+      VersionedState.overwriteBatch(sampled, batchId, s"$outDir/sampled")
       bound
     } finally df.unpersist()
   }

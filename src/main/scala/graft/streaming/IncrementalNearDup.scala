@@ -27,15 +27,12 @@ import graft.functions.TextOps
   * corpus, so a third near-copy still matches the FIRST copy (its
   * retained original), and dropped text never costs index space.
   *
-  * Delivery: [[run]] appends (decisions + index) — at-least-once under
-  * micro-batch RETRY, the [[FanOutPipeline.run]] stance, fine for the
-  * bounded harness runs which never retry. [[runExactlyOnce]] is the
-  * idempotent form (VERDICT r10 item 7): decisions AND index rows carry
-  * a `__batch` partition, a replayed batch OVERWRITES its own partition
-  * (dynamic partition overwrite), and the dedup's index reads exclude
-  * the replayed batch's partition — so a retry that crashed after its
-  * index write still reaches the same decisions, and no sink ever holds
-  * two copies of a batch.
+  * Delivery is exactly-once under micro-batch RETRY: decisions AND
+  * index rows carry a `__batch` partition, a replayed batch OVERWRITES
+  * its own partition (dynamic partition overwrite), and the dedup's
+  * index reads exclude the replayed batch's partition — so a retry that
+  * crashed after its index write still reaches the same decisions, and
+  * no sink ever holds two copies of a batch.
   *
   * Reference anchor: the unbounded-source semantics (`frame_reader.py:
   * 158-199`) + BASELINE.json's "design every operator for 100 TB scale"
@@ -47,52 +44,34 @@ object IncrementalNearDup {
   /** q93's verify threshold, shared verbatim. */
   val JaccardThreshold = 0.5
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  /** Whether some batch wrote a slice of the index table at `path`: a
+    * batch that keeps nothing leaves the directory without any
+    * `__batch=` slice, and parquet cannot infer a schema from it. */
+  private def hasSlices(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("__batch="))
   }
 
-  /** Dedup ONE batch of (doc_id, text) against the index at `indexDir`,
-    * append decisions to `outDir` and surviving signatures to the index.
-    * Package-visible so the spec can also drive it directly. */
-  private[streaming] def processBatch(batch: DataFrame, indexDir: String,
-                                      outDir: String): Unit = {
-    dedupBatch(batch, indexDir).write.mode("append").parquet(outDir)
-    graft.Caches.releaseScoped()
-  }
-
-  /** The composable core: dedup `batch` against the index, append the
-    * SURVIVORS' signatures to the index, and return the per-doc
-    * decisions `(doc_id, dup_of, best_jaccard, kept)` — scoped-persisted,
-    * so the caller can fan them into its own sinks before calling
-    * `Caches.releaseScoped()`. Used by both [[processBatch]] and the
-    * composed [[CurationPipeline]]. */
-  private[streaming] def dedupBatch(batch: DataFrame, indexDir: String): DataFrame =
-    dedupCore(batch, indexDir, batchId = None)
-
-  /** IDEMPOTENT form of [[dedupBatch]] for engines that retry
-    * micro-batches: index rows carry a `__batch` partition and a retry
-    * OVERWRITES its own partition (dynamic partition overwrite) instead
-    * of appending twice. The index reads exclude the current batch's
-    * partition, so a retry that crashed AFTER its index write still
-    * computes the same decisions — without the exclusion, the replayed
-    * batch would find its own first-attempt signatures and match every
-    * doc against itself. An index directory is one mode or the other:
-    * rows written by the at-least-once form carry no `__batch` column. */
-  private[streaming] def dedupBatchIdempotent(batch: DataFrame, batchId: Long,
-                                              indexDir: String): DataFrame =
-    dedupCore(batch, indexDir, Some(batchId))
-
-  private def dedupCore(batch: DataFrame, indexDir: String,
-                        batchId: Option[Long]): DataFrame = {
+  /** The composable core: dedup `batch` against the index, write the
+    * SURVIVORS' signatures into the index under `__batch=<batchId>`,
+    * and return the per-doc decisions `(doc_id, dup_of, best_jaccard,
+    * kept)` — scoped-checkpointed, so the caller can fan them into its
+    * own sinks before calling `Caches.releaseScoped()`. Used by both
+    * [[processBatch]] and the composed [[CurationPipeline]].
+    *
+    * A retry OVERWRITES its own index partition instead of appending
+    * twice, and the index reads exclude the current batch's partition:
+    * without the exclusion, a retry that crashed AFTER its index write
+    * would find its own first-attempt signatures and match every doc
+    * against itself. */
+  private[streaming] def dedupBatch(batch: DataFrame, batchId: Long,
+                                    indexDir: String): DataFrame = {
     val spark = batch.sparkSession
     val bandsDir = s"$indexDir/bands"
     val shinglesDir = s"$indexDir/shingles"
-    def readIndex(dir: String): DataFrame = {
-      val df = spark.read.parquet(dir)
-      // a RETRIED batch must not dedup against its own first attempt
-      batchId.fold(df)(b => df.filter(col("__batch") =!= b))
-    }
+    def readIndex(dir: String): DataFrame =
+      spark.read.parquet(dir).filter(col("__batch") =!= batchId)
 
     // batch signatures: the same fused shingle+hash pass as the batch
     // pipeline (positional md5 → distinct 56-bit sets → 16-hash bands)
@@ -105,7 +84,7 @@ object IncrementalNearDup {
       .select(col("band"), col("bucket"), col("doc_id").as("new_id"))
 
     val matches: DataFrame =
-      if (!exists(spark, bandsDir)) {
+      if (!hasSlices(spark, bandsDir)) {
         // first ingest: empty standing corpus, everything is kept
         spark.emptyDataFrame
           .withColumn("new_id", lit(null).cast("long"))
@@ -147,33 +126,18 @@ object IncrementalNearDup {
     val keptBands = probes
       .select(col("band"), col("bucket"), col("new_id").as("doc_id"))
       .join(keptIds, "doc_id")
-    batchId match {
-      case None =>
-        keptSh.write.mode("append").parquet(shinglesDir)
-        keptBands.write.mode("append").parquet(bandsDir)
-      case Some(b) =>
-        // retry-safe: the batch's partition overwrites itself
-        keptSh.withColumn("__batch", lit(b))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(shinglesDir)
-        keptBands.withColumn("__batch", lit(b))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(bandsDir)
-    }
+    VersionedState.overwriteBatch(keptSh, batchId, shinglesDir)
+    VersionedState.overwriteBatch(keptBands, batchId, bandsDir)
     decisions
   }
 
-  /** EXACTLY-ONCE batch body: decisions land in a `__batch`-keyed
-    * partition they overwrite on replay, and the index writes go
-    * through [[dedupBatchIdempotent]] (same keying). Package-visible so
-    * the retried-batch spec drives it directly. */
-  private[streaming] def processBatchExactlyOnce(batch: DataFrame, batchId: Long,
-                                                 indexDir: String,
-                                                 outDir: String): Unit = {
-    val decisions = dedupBatchIdempotent(batch, batchId, indexDir)
-    decisions.withColumn("__batch", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch").parquet(outDir)
+  /** One batch body: decisions land in a `__batch`-keyed partition they
+    * overwrite on replay, and the index writes go through
+    * [[dedupBatch]] (same keying). Package-visible so the retried-batch
+    * spec drives it directly. */
+  private[streaming] def processBatch(batch: DataFrame, batchId: Long,
+                                      indexDir: String, outDir: String): Unit = {
+    VersionedState.overwriteBatch(dedupBatch(batch, batchId, indexDir), batchId, outDir)
     graft.Caches.releaseScoped()
   }
 
@@ -182,18 +146,8 @@ object IncrementalNearDup {
           checkpointDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexDir, outDir)
-      }
-      .start()
-
-  /** [[run]] with the exactly-once batch body. */
-  def runExactlyOnce(docs: DataFrame, indexDir: String, outDir: String,
-                     checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processBatchExactlyOnce(batch, bid, indexDir, outDir)
+        processBatch(batch, bid, indexDir, outDir)
       }
       .start()
 }

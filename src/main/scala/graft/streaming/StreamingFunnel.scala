@@ -24,10 +24,9 @@ import org.apache.spark.sql.functions._
   * boundary ties are harmless. q179 promotes the seam into the oracle
   * gate: N micro-batches through [[advance]] must hash-match q81's
   * one-shot truth. The durable face ([[processBatch]] / [[publish]] /
-  * [[run]]) carries the state across micro-batches under the versioned
-  * COMMITTED-marker scheme ([[StreamingHeavyHitters]] / [[CdcApply]]):
-  * crash-safe, exactly-once under retry — spec'd beside the seam
-  * contract.
+  * [[run]]) carries the state across micro-batches as a
+  * [[VersionedState]] fold: crash-safe, exactly-once under retry —
+  * spec'd beside the seam contract.
   */
 object StreamingFunnel {
 
@@ -74,22 +73,6 @@ object StreamingFunnel {
         coalesce(col("t_purchase_us"), col("np")).as("t_purchase_us"))
   }
 
-  private def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committed(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir)
-    val f = fs(spark, stateDir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-      .map(_.getPath)
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p, "COMMITTED")))
-      .map(_.getName.drop(1).toLong)
-      .sorted
-  }
-
   private def emptyState(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Option[Long], Option[Long], Option[Long])]
@@ -97,37 +80,22 @@ object StreamingFunnel {
   }
 
   /** Durable [[advance]]: one micro-batch folded into the versioned
-    * standing state, exactly-once under retry (the [[CdcApply]] /
-    * [[StreamingHeavyHitters]] scheme — `v{batchId}/` committed by an
-    * atomic zero-byte COMMITTED marker created LAST, so a crash
-    * mid-write leaves an invisible version and the previous state
-    * intact, and a retried batch finds its version committed and
-    * no-ops). */
+    * standing state, exactly-once under retry ([[VersionedState.fold]]). */
   private[streaming] def processBatch(batch: DataFrame, stateDir: String,
                                       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val versions = committed(spark, stateDir)
-    if (versions.contains(batchId)) return // retry of a committed batch
-    val carry = versions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v/state")
-      case None => emptyState(spark)
-    }
-    val vdir = s"$stateDir/v$batchId"
-    advance(batch, carry).write.mode("overwrite").parquet(s"$vdir/state")
-    val f = fs(spark, stateDir)
-    f.create(new org.apache.hadoop.fs.Path(vdir, "COMMITTED"), false).close()
-    versions.filter(_ < batchId).foreach { v =>
-      try f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$v"), true)
-      catch { case _: java.io.IOException => }
+    VersionedState.fold(spark, stateDir, batchId) { (prev, vdir) =>
+      val carry = prev match {
+        case Some(p) => spark.read.parquet(s"$p/state")
+        case None => emptyState(spark)
+      }
+      advance(batch, carry).write.mode("overwrite").parquet(s"$vdir/state")
     }
   }
 
   /** The current per-user funnel state (latest committed version). */
-  def publish(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = committed(spark, stateDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed state under $stateDir"))
-    spark.read.parquet(s"$stateDir/v$v/state").orderBy("user_id")
-  }
+  def publish(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(s"${VersionedState.latest(spark, stateDir)}/state").orderBy("user_id")
 
   /** Unbounded form: a ts-ordered event stream folded batch-by-batch. */
   def run(events: DataFrame, stateDir: String,
@@ -143,17 +111,10 @@ object StreamingFunnel {
     * Each folded state persists scoped so the n-deep join lineage never
     * recomputes earlier batches. */
   def funnelReplay(spark: SparkSession, sfDir: String, n: Int): DataFrame = {
-    import spark.implicits._
     val ev = graft.Tables.events(spark, sfDir)
       .select("user_id", "event_id", "ts", "event_type")
-    val maxId = ev.agg(max("event_id")).head.getLong(0)
-    val width = maxId / n + 1
-    var carry: DataFrame =
-      Seq.empty[(Long, Option[Long], Option[Long], Option[Long])]
-        .toDF("user_id", "t_view_us", "t_click_us", "t_purchase_us")
-    (0 until n).foreach { b =>
-      val batch = ev.filter(col("event_id") >= b * width &&
-        col("event_id") < (b + 1) * width)
+    var carry = emptyState(spark)
+    EventStreams.idRangeBatches(ev, "event_id", n).foreach { batch =>
       // TRUNCATE lineage per step, don't just cache it: a persist
       // chain still embeds every prior step's logical plan, and
       // Catalyst re-analyzes the whole accumulated tree each level —

@@ -31,64 +31,51 @@ import graft.expressions.MisraGries
   *
   * State layout at `sketchDir` (ADVICE r10: the old read-then-overwrite
   * of one live path lost ALL standing state if the writer died between
-  * the overwrite's delete and commit): versioned dirs `v{batchId}/`
-  * each holding `sketch/` (tok, c), `total/` (n) and a COMMITTED marker
-  * created LAST — marker creation is the one atomic step, so a crash
-  * mid-write leaves an uncommitted version that every reader ignores
-  * while the previous committed version stays intact. Keying the
-  * version by micro-batch id also upgrades delivery to EXACTLY-ONCE
-  * under retry: a re-delivered batch finds its own version committed
-  * and no-ops (the [[FanOutPipeline]] batch-keyed idempotence rule).
-  * Committed predecessors are pruned best-effort after each commit;
-  * state on disk is ≤ 2 summary-sized versions.
+  * the overwrite's delete and commit): [[VersionedState]] version dirs
+  * `v{batchId}/` each holding `sketch/` (tok, c) and `total/` (n) — a
+  * crash mid-write leaves an uncommitted version that every reader
+  * ignores while the previous committed version stays intact, and a
+  * re-delivered batch finds its own version committed and no-ops.
+  * State on disk is ≤ 2 summary-sized versions.
   */
 object StreamingHeavyHitters {
 
   val K = 16
 
-  // the versioned-commit layout is the shared [[VersionedState]] contract
-  // (factored out in r15 when StreamingLineDedup adopted the same scheme)
-  private def committed(spark: SparkSession, sketchDir: String): Seq[Long] =
-    VersionedState.committed(spark, sketchDir)
-
   /** Fold ONE micro-batch of (doc_id, text) into the standing sketch,
-    * exactly-once under retry (version keyed by `batchId`). Visible
-    * inside graft so the spec AND the q243 oracle-gated face drive it
-    * directly (the same contract as [[IncrementalNearDup.processBatch]]).
-    * `k` must be constant across a sketchDir's lifetime — the merge
-    * assumes both summaries share the width (q243 folds at q107's
-    * k = 32 into its own directory; the default stays [[K]]). */
+    * exactly-once under retry ([[VersionedState.fold]], version keyed
+    * by `batchId`). Visible inside graft so the spec AND the q243
+    * oracle-gated face drive it directly. `k` must be constant across
+    * a sketchDir's lifetime — the merge assumes both summaries share
+    * the width (q243 folds at q107's k = 32 into its own directory;
+    * the default stays [[K]]). */
   private[graft] def processBatch(batch: DataFrame, sketchDir: String,
                                   batchId: Long, k: Int = K): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val versions = committed(spark, sketchDir)
-    if (VersionedState.isCommitted(spark, sketchDir, batchId, versions))
-      return // retry of a committed batch (explicit or compacted): no-op
-    val agg = new MisraGries(k)
-    val mg = udaf(agg)
-    val toks = batch.select(explode(split(col("text"), " ")).as("tok"))
-    // distributed reduction to ONE summary row; collect is summary-sized
-    val batchSketch: Map[String, Long] =
-      toks.agg(mg(col("tok")).as("sk")).as[Map[String, Long]].head()
-    val batchN = toks.count()
+    VersionedState.fold(spark, sketchDir, batchId) { (prev, vdir) =>
+      val agg = new MisraGries(k)
+      val mg = udaf(agg)
+      val toks = batch.select(explode(split(col("text"), " ")).as("tok"))
+      // distributed reduction to ONE summary row; collect is summary-sized
+      val batchSketch: Map[String, Long] =
+        toks.agg(mg(col("tok")).as("sk")).as[Map[String, Long]].head()
+      val batchN = toks.count()
 
-    val (standing, standingN) = versions.lastOption match {
-      case Some(v) =>
-        val s = spark.read.parquet(s"$sketchDir/v$v/sketch")
-          .as[(String, Long)].collect().toMap
-        val n = spark.read.parquet(s"$sketchDir/v$v/total").as[Long].head()
-        (s, n)
-      case None => (Map.empty[String, Long], 0L)
+      val (standing, standingN) = prev match {
+        case Some(p) =>
+          val s = spark.read.parquet(s"$p/sketch").as[(String, Long)].collect().toMap
+          val n = spark.read.parquet(s"$p/total").as[Long].head()
+          (s, n)
+        case None => (Map.empty[String, Long], 0L)
+      }
+
+      val merged = agg.merge(standing, batchSketch)
+      merged.toSeq.toDF("tok", "c").coalesce(1)
+        .write.mode("overwrite").parquet(s"$vdir/sketch")
+      Seq(standingN + batchN).toDF("n").coalesce(1)
+        .write.mode("overwrite").parquet(s"$vdir/total")
     }
-
-    val merged = agg.merge(standing, batchSketch)
-    val vdir = s"$sketchDir/v$batchId"
-    merged.toSeq.toDF("tok", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$vdir/sketch")
-    Seq(standingN + batchN).toDF("n").coalesce(1)
-      .write.mode("overwrite").parquet(s"$vdir/total")
-    VersionedState.commitAndPrune(spark, sketchDir, batchId, versions)
   }
 
   /** The standing report: candidate tokens with their (under-estimating)
@@ -98,10 +85,9 @@ object StreamingHeavyHitters {
     * the newest COMMITTED version; uncommitted (mid-crash) versions are
     * invisible. */
   def report(spark: SparkSession, sketchDir: String): DataFrame = {
-    val v = committed(spark, sketchDir).lastOption.getOrElse(
-      throw new IllegalStateException(s"no committed sketch version under $sketchDir"))
-    val sketch = spark.read.parquet(s"$sketchDir/v$v/sketch")
-    val total = spark.read.parquet(s"$sketchDir/v$v/total")
+    val v = VersionedState.latest(spark, sketchDir)
+    val sketch = spark.read.parquet(s"$v/sketch")
+    val total = spark.read.parquet(s"$v/total")
     sketch.crossJoin(broadcast(total))
       .select(col("tok"), col("c"), col("n"))
       .orderBy(col("c").desc, col("tok"))

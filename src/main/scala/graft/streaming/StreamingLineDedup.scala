@@ -47,36 +47,34 @@ object StreamingLineDedup {
     * version `v{batchId}` (predecessors prune). */
   def processBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val versions = VersionedState.committed(spark, stateDir)
-    if (VersionedState.isCommitted(spark, stateDir, batchId, versions))
-      return // retry of a committed batch (explicit or compacted): no-op
-    val ch = graft.Caches.scopedPersist(
-      graft.queries.CurationQueries.lineChunks(batch))
-    val standing = versions.lastOption match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v$v/index")
-      case None => spark.range(0).select(col("id").as("h"), col("id").as("nd"))
+    VersionedState.fold(spark, stateDir, batchId) { (prev, vdir) =>
+      val ch = graft.Caches.scopedPersist(
+        graft.queries.CurationQueries.lineChunks(batch))
+      val standing = prev match {
+        case Some(p) => spark.read.parquet(s"$p/index")
+        case None => spark.range(0).select(col("id").as("h"), col("id").as("nd"))
+      }
+      val boiler = standing
+        .filter(col("nd") >= graft.queries.CurationQueries.LineDupMinDocs)
+        .select("h")
+      val kept = ch.join(broadcast(boiler), Seq("h"), "left_anti")
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_kept"),
+          concat_ws(" ",
+            transform(array_sort(collect_list(struct(col("ci"), col("chunk")))),
+              x => x.getField("chunk"))).as("clean_text"))
+      val out = ch.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
+        .join(kept, Seq("doc_id"), "left")
+        .select(col("doc_id"), lit(batchId).as("batch"), col("n_chunks"),
+          (col("n_chunks") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
+          coalesce(col("clean_text"), lit("")).as("clean_text"))
+      out.write.mode("overwrite").parquet(s"$stateDir/out/b$batchId")
+      val batchCounts = ch.select("doc_id", "h").distinct()
+        .groupBy("h").agg(count(lit(1)).as("nd"))
+      standing.unionByName(batchCounts)
+        .groupBy("h").agg(sum(col("nd")).as("nd"))
+        .write.mode("overwrite").parquet(s"$vdir/index")
     }
-    val boiler = standing
-      .filter(col("nd") >= graft.queries.CurationQueries.LineDupMinDocs)
-      .select("h")
-    val kept = ch.join(broadcast(boiler), Seq("h"), "left_anti")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("ci"), col("chunk")))),
-            x => x.getField("chunk"))).as("clean_text"))
-    val out = ch.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"), lit(batchId).as("batch"), col("n_chunks"),
-        (col("n_chunks") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-    out.write.mode("overwrite").parquet(s"$stateDir/out/b$batchId")
-    val batchCounts = ch.select("doc_id", "h").distinct()
-      .groupBy("h").agg(count(lit(1)).as("nd"))
-    standing.unionByName(batchCounts)
-      .groupBy("h").agg(sum(col("nd")).as("nd"))
-      .write.mode("overwrite").parquet(s"$stateDir/v$batchId/index")
-    VersionedState.commitAndPrune(spark, stateDir, batchId, versions)
   }
 
   /** The append-only cleaned ledger: every committed batch's output,

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * `first_bucket < bucket` rule), then the batch's distinct hashes fold
   * into the index. State is the distinct-shingle set: content-sized,
   * the same honest bound as every dedup index here
-  * ([[IncrementalNearDup]]'s postings); a deployed run persists it with
-  * the versioned COMMITTED-marker scheme ([[StreamingHeavyHitters]]),
-  * and the replay face's in-memory fold is the same contract.
+  * ([[IncrementalNearDup]]'s postings); a deployed run persists it as a
+  * [[VersionedState]] fold, and the replay face's in-memory fold is the
+  * same contract.
   *
   * q170 promotes the seam into the oracle gate (the q147 precedent):
   * the corpus replayed as FIVE deterministic doc_id-range micro-batches
@@ -41,20 +41,16 @@ object StreamingNovelty {
   }
 
   /** q170: the corpus split into `n` deterministic doc_id-range batches
-    * (width = max_doc div n + 1 — always n batches at any SF, the q147
-    * fixed-n rule) and folded through [[reportForBatch]]. */
+    * ([[EventStreams.idRangeBatches]] — always n batches at any SF, the
+    * q147 fixed-n rule) and folded through [[reportForBatch]]. */
   def noveltyReplay(spark: SparkSession, sfDir: String, n: Int): DataFrame = {
     import spark.implicits._
     val pos = graft.Caches.scopedPersist(
       graft.queries.PipelineQueries.positionalShingles(spark, sfDir)
         .select(col("doc_id"), explode(col("sp")).as("h")))
-    val maxDoc = pos.agg(max("doc_id")).head.getLong(0)
-    val width = maxDoc / n + 1
     var seen: DataFrame = Seq.empty[Long].toDF("h")
     var reports: Option[DataFrame] = None
-    (0 until n).foreach { b =>
-      val batch = pos.filter(col("doc_id") >= b * width &&
-        col("doc_id") < (b + 1) * width)
+    EventStreams.idRangeBatches(pos, "doc_id", n).zipWithIndex.foreach { case (batch, b) =>
       val (rep, s2) = reportForBatch(batch, seen)
       // materialize the folded index so batch b+1 joins a stable
       // relation instead of re-deriving b unions (the q144 rule:

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * q147 promotes the seam logic into the oracle gate: the events log
   * replayed as four deterministic micro-batches through
   * [[pairsForBatch]] must hash-match q143's one-shot oracle (the
-  * q63/q125 promotion precedent). Durable state for a deployed run uses
-  * the versioned COMMITTED-marker scheme ([[StreamingHeavyHitters]] /
-  * [[CdcApply]]); the spec's in-memory carry is the same contract.
+  * q63/q125 promotion precedent). Durable state for a deployed run is a
+  * [[VersionedState]] fold (as [[StreamingFunnel]]'s durable face does);
+  * the spec's in-memory carry is the same contract.
   */
 object StreamingTransitions {
 
@@ -60,14 +60,10 @@ object StreamingTransitions {
     import spark.implicits._
     val ev = graft.Tables.events(spark, sfDir)
       .select("user_id", "event_id", "event_type")
-    val maxId = ev.agg(max("event_id")).head.getLong(0)
-    val width = maxId / n + 1
     var carry: DataFrame =
       Seq.empty[(Long, Long, String)].toDF("user_id", "last_event_id", "last_type")
     var pairs: Option[DataFrame] = None
-    (0 until n).foreach { b =>
-      val batch = ev.filter(col("event_id") >= b * width &&
-        col("event_id") < (b + 1) * width)
+    EventStreams.idRangeBatches(ev, "event_id", n).foreach { batch =>
       val (p, c) = pairsForBatch(batch, carry)
       carry = c
       pairs = Some(pairs.map(_.unionByName(p)).getOrElse(p))

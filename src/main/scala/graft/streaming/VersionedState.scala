@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
-/** The versioned exactly-once on-disk state layout shared by the
-  * standing-index engines ([[StreamingHeavyHitters]] since r10,
-  * [[StreamingLineDedup]] in r15): state lives in version dirs
+/** The one versioned exactly-once on-disk state layout and commit
+  * protocol, shared by every standing-state engine
+  * ([[StreamingHeavyHitters]], [[StreamingLineDedup]], [[CdcApply]],
+  * [[StreamingFunnel]]; each folds through [[fold]] and reads through
+  * [[latest]]): state lives in version dirs
   * `v{batchId}/` whose contents are whatever the engine writes, made
   * visible by a `COMMITTED` marker created LAST — marker creation is the
   * one atomic step, so a crash mid-write leaves an uncommitted version
@@ -24,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * the marker dirs at or below M delete entirely. The disk bound is
   * therefore one full version + ≤ [[KeepMarkers]] tombstones + one
   * hwm file, CONSTANT in stream length. Soundness of the ≤-hwm rule
-  * rests on the micro-batch delivery contract both engines share
+  * rests on the micro-batch delivery contract every engine shares
   * (FileStreamSource / the replay drivers): batch ids are assigned
   * monotonically and batch b+1 is never attempted before b commits, so
   * any re-delivered id ≤ M was necessarily committed. The NEWEST
@@ -84,6 +87,38 @@ private[graft] object VersionedState {
     * directory listings as the compaction was introduced to provide. */
   def isCommitted(hwm: Long, batchId: Long, markers: Seq[Long]): Boolean =
     batchId <= hwm || markers.contains(batchId)
+
+  /** The one exactly-once micro-batch fold. Lists the markers once;
+    * a batch already committed (explicit marker or ≤ the high-water
+    * mark) returns without doing anything. Otherwise `write` gets the
+    * newest committed version dir (None before the first commit) and
+    * the new version dir `v{batchId}`, and whatever it wrote becomes
+    * visible at [[commitAndPrune]]. `write` must be a function of the
+    * batch and the previous version only, so a retry of a crashed
+    * attempt overwrites the orphan and commits the same state. */
+  def fold(spark: SparkSession, stateDir: String, batchId: Long)
+          (write: (Option[String], String) => Unit): Unit = {
+    val markers = committed(spark, stateDir)
+    if (isCommitted(spark, stateDir, batchId, markers)) return
+    write(markers.lastOption.map(v => s"$stateDir/v$v"), s"$stateDir/v$batchId")
+    commitAndPrune(spark, stateDir, batchId, markers)
+  }
+
+  /** The newest committed version dir: what every reader resolves.
+    * Uncommitted (mid-crash) versions are invisible. */
+  def latest(spark: SparkSession, stateDir: String): String =
+    committed(spark, stateDir).lastOption.map(v => s"$stateDir/v$v").getOrElse(
+      throw new IllegalStateException(s"no committed version under $stateDir"))
+
+  /** The keyed form for append-shaped sinks (a ledger that grows by one
+    * slice per batch rather than a state that is replaced): writes `df`
+    * as batch `batchId`'s `__batch` partition of `path` with dynamic
+    * partition overwrite, so a retried batch replaces its own slice, and
+    * only it, instead of appending a second copy. */
+  def overwriteBatch(df: DataFrame, batchId: Long, path: String, parts: String*): Unit =
+    df.withColumn("__batch", lit(batchId))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch" +: parts: _*).parquet(path)
 
   /** The commit point: atomic zero-byte marker create — everything
     * before it is invisible to readers, everything after it is durable.

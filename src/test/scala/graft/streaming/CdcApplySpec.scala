@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** The streaming face of the q130 MERGE: batched apply must equal the
@@ -74,6 +76,27 @@ class CdcApplySpec extends SparkSpec {
         org.apache.spark.sql.functions.col("value")).as("o"))
       .write.parquet(s"$dir/v7/snap")
     assert(published(dir.toString) === before, "uncommitted snapshots must not serve")
+  }
+
+  /** Every file under `dir`, relative, sorted. */
+  private def listing(dir: java.nio.file.Path): Seq[String] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.map(p => dir.relativize(p).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("a late re-delivery of an older batch no-ops and writes nothing") {
+    val dir = Files.createTempDirectory("graft-cdc-late")
+    graft.TempDirs.cleanupOnExit(dir)
+    CdcApply.processBatch(df(b1), dir.toString, 0L)
+    CdcApply.processBatch(df(b2), dir.toString, 1L)
+    val before = published(dir.toString)
+    val files = listing(dir)
+    // batch 0 again, after batch 1 committed and pruned it: its marker
+    // must still record it as applied
+    CdcApply.processBatch(df(b1), dir.toString, 0L)
+    assert(published(dir.toString) === before, "a late retry must not re-apply")
+    assert(listing(dir) === files, "a late retry must not write a fresh version")
   }
 
   test("the unbounded form folds a file stream into the same snapshot") {

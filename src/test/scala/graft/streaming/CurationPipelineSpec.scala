@@ -118,7 +118,7 @@ class CurationPipelineSpec extends SparkSpec {
       .select("doc_id", "dup_of", "kept").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getBoolean(2)))
     // exactly ONE decision per doc: phase A's committed batch was not
-    // re-read after the restart (a reprocess would re-append 1 and 2)
+    // re-read as a new batch after the restart
     assert(dedup.length === 3, dedup.mkString(","))
     val m = dedup.toMap
     assert(m(1L) === (None, true) && m(2L) === (None, true))
@@ -131,14 +131,14 @@ class CurationPipelineSpec extends SparkSpec {
     val (indexDir, outDir, _) = mkDirs()
     import spark.implicits._
     val b1 = Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text")
-    CurationPipeline.processBatchExactlyOnce(b1, 0L, indexDir, outDir, Long.MinValue)
+    CurationPipeline.processBatch(b1, 0L, indexDir, outDir, Long.MinValue)
     val b2 = Seq((3L, text(1) + " extra"), (4L, text(4))).toDF("doc_id", "text")
-    CurationPipeline.processBatchExactlyOnce(b2, 1L, indexDir, outDir, Long.MinValue)
+    CurationPipeline.processBatch(b2, 1L, indexDir, outDir, Long.MinValue)
     // REPLAY batch 1 — the crash-after-index-write scenario: its first
     // attempt's signatures are already in the index under __batch=1, and
     // the retry must (a) not dedup doc 3 against its own first attempt,
     // (b) overwrite rather than double every sink partition
-    CurationPipeline.processBatchExactlyOnce(b2, 1L, indexDir, outDir, Long.MinValue)
+    CurationPipeline.processBatch(b2, 1L, indexDir, outDir, Long.MinValue)
 
     val dec = spark.read.parquet(s"$outDir/dedup")
       .select("doc_id", "dup_of", "kept").collect()
@@ -162,7 +162,7 @@ class CurationPipelineSpec extends SparkSpec {
     val (indexDir, outDir, _) = mkDirs()
     import spark.implicits._
     val batch = Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text")
-    val stats = CurationPipeline.processBatch(batch, indexDir, outDir,
+    val stats = CurationPipeline.processBatch(batch, 0L, indexDir, outDir,
       minScore = Long.MaxValue)
     assert(stats === CurationPipeline.BatchStats(2, 2, 0, 0))
     // nothing reached the index or the export (an all-empty write may
@@ -184,6 +184,19 @@ class CurationPipelineSpec extends SparkSpec {
     assert(rowsIn(s"$outDir/shards") === 0, "no doc may export")
     // the quality report still covers (and explains) every dropped doc
     assert(spark.read.parquet(s"$outDir/quality").count() === 2)
+  }
+
+  test("a batch that keeps nothing leaves an index the next batch can read") {
+    val (indexDir, outDir, _) = mkDirs()
+    import spark.implicits._
+    // the quality gate drops all of batch 0: the index dirs exist but
+    // hold no batch slice
+    CurationPipeline.processBatch(Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text"),
+      0L, indexDir, outDir, Long.MaxValue)
+    val stats = CurationPipeline.processBatch(
+      Seq((3L, text(1)), (4L, text(4))).toDF("doc_id", "text"),
+      1L, indexDir, outDir, Long.MinValue)
+    assert(stats === CurationPipeline.BatchStats(2, 0, 0, 2))
   }
 
   test("q209: every funnel stage fires on the fixture (no vacuous gate row)") {

@@ -24,13 +24,13 @@ class FanOutSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_fanout_eo").toString
     // mixed dims so the drop path is exercised through the retry too
     val wCol = when(col("event_id") % 7 === 0, 640L).otherwise(1280L)
-    val counts = FanOutPipeline.runExactlyOnce(spark, sf0001, out, 30,
+    val counts = FanOutPipeline.run(spark, sf0001, out, 30,
       dims = (wCol, lit(480L)))
     assert(counts.dropped > 0L, "fixture must exercise the drop path")
     // simulate Spark retrying the (single) micro-batch after a transient
     // failure: replay the same batch id with a fresh (lost) dims bind
     val replayBatch = Tables.events(spark, sf0001)
-    FanOutPipeline.writeBatchIdempotent(replayBatch, 0L, out, 30,
+    FanOutPipeline.writeBatch(replayBatch, 0L, out, 30,
       (wCol, lit(480L)), None)
     val all2 = spark.read.parquet(s"$out/all").count()
     val sampled2 = spark.read.parquet(s"$out/sampled").count()
@@ -43,15 +43,12 @@ class FanOutSpec extends SparkSpec {
 
   test("fan-out over an empty input directory reports zero counts, not an exception") {
     // no input file -> no micro-batch executes -> no sink path ever
-    // exists; both run forms must report FanOutCounts(0,0,0) instead of
+    // exists; the run must report FanOutCounts(0,0,0) instead of
     // throwing on the unconditional read-back
     val emptyIn = Files.createTempDirectory("graft_fanout_emptyin").toString
-    val c1 = FanOutPipeline.run(spark, emptyIn,
-      Files.createTempDirectory("graft_fanout_e1").toString, 30)
-    assert(c1 === FanOutPipeline.FanOutCounts(0L, 0L, 0L))
-    val c2 = FanOutPipeline.runExactlyOnce(spark, emptyIn,
-      Files.createTempDirectory("graft_fanout_e2").toString, 30)
-    assert(c2 === FanOutPipeline.FanOutCounts(0L, 0L, 0L))
+    val c = FanOutPipeline.run(spark, emptyIn,
+      Files.createTempDirectory("graft_fanout_e").toString, 30)
+    assert(c === FanOutPipeline.FanOutCounts(0L, 0L, 0L))
   }
 
   test("sink A binds dims from the first record and drops mismatches") {

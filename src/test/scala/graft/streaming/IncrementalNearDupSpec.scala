@@ -74,8 +74,8 @@ class IncrementalNearDupSpec extends SparkSpec {
     def b1 = Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text")
     def b2 = Seq((3L, text(1) + " extra"), (4L, text(4))).toDF("doc_id", "text")
 
-    IncrementalNearDup.processBatchExactlyOnce(b1, 0L, indexDir, outDir)
-    IncrementalNearDup.processBatchExactlyOnce(b2, 1L, indexDir, outDir)
+    IncrementalNearDup.processBatch(b1, 0L, indexDir, outDir)
+    IncrementalNearDup.processBatch(b2, 1L, indexDir, outDir)
     def decisions() = spark.read.parquet(outDir)
       .select("doc_id", "dup_of", "kept").collect()
       .map(r => (r.getLong(0),
@@ -90,10 +90,10 @@ class IncrementalNearDupSpec extends SparkSpec {
     assert(iBefore === Seq(1L, 2L, 4L), "survivors only, once each")
 
     // the retry failure mode: batch 1 re-delivered AFTER its index and
-    // decision writes committed — the at-least-once form would append a
-    // second copy of everything and (worse) match each doc against its
-    // own first-attempt signatures
-    IncrementalNearDup.processBatchExactlyOnce(b2, 1L, indexDir, outDir)
+    // decision writes committed — an appending body would add a second
+    // copy of everything and (worse) match each doc against its own
+    // first-attempt signatures
+    IncrementalNearDup.processBatch(b2, 1L, indexDir, outDir)
     assert(decisions() === dBefore, "replay must not change or duplicate decisions")
     assert(indexRows() === iBefore, "replay must not duplicate index rows")
   }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -101,5 +103,24 @@ class StreamingFunnelSpec extends SparkSpec {
     val orphan = java.nio.file.Paths.get(dir.toString, "v9", "state")
     java.nio.file.Files.createDirectories(orphan)
     assert(stateOf(StreamingFunnel.publish(spark, dir.toString)) === expected)
+  }
+
+  test("durable face: a late re-delivery of an older batch no-ops and writes nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-funnel-late")
+    graft.TempDirs.cleanupOnExit(dir)
+    def listing(): Seq[String] = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.map(p => dir.relativize(p).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val b0 = log.filter(_._2 < 10 * H)
+    StreamingFunnel.processBatch(ev(b0), dir.toString, 0L)
+    StreamingFunnel.processBatch(ev(log.filter(_._2 >= 10 * H)), dir.toString, 1L)
+    val before = stateOf(StreamingFunnel.publish(spark, dir.toString))
+    val files = listing()
+    // batch 0 again, after batch 1 committed and pruned it
+    StreamingFunnel.processBatch(ev(b0), dir.toString, 0L)
+    assert(stateOf(StreamingFunnel.publish(spark, dir.toString)) === before)
+    assert(listing() === files, "a late retry must not write a fresh version")
   }
 }

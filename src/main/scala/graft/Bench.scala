@@ -219,13 +219,17 @@ object Bench {
     // ran ("signal": "proc_user" | "mxbean" | "none").
     val procStatAvailable = new java.io.File("/proc/stat").exists &&
       new java.io.File("/proc/self/stat").exists
-    def procTicks(): Option[(Long, Long, Long)] = try {
-      val cpuSrc = scala.io.Source.fromFile("/proc/stat")
-      val cpuLine = try cpuSrc.getLines().next() finally cpuSrc.close()
-      val v = cpuLine.trim.split("\\s+")
-      if (v(0) != "cpu") None
-      else {
-        val t = v.drop(1).map(_.toLong)
+    // the whole-system tick vector (user, nice, system, idle, iowait,
+    // irq, softirq, ...) from /proc/stat's aggregate `cpu` line — the one
+    // reader both tick signals (procTicks, kernelTicks) derive from
+    def cpuTicks(): Option[Array[Long]] = try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val line = try src.getLines().next() finally src.close()
+      val v = line.trim.split("\\s+")
+      if (v(0) != "cpu" || v.length < 8) None else Some(v.drop(1).map(_.toLong))
+    } catch { case _: Exception => None }
+    def procTicks(): Option[(Long, Long, Long)] = cpuTicks().flatMap { t =>
+      try {
         val sysUser = t(0) + t(1) // user + nice
         val total = t.sum        // incl. idle/iowait = tick capacity
         val selfSrc = scala.io.Source.fromFile("/proc/self/stat")
@@ -234,8 +238,8 @@ object Bench {
         // utime is overall field 14 → index 11 here
         val f = selfStat.substring(selfStat.lastIndexOf(')') + 2).split("\\s+")
         Some((sysUser, total, f(11).toLong))
-      }
-    } catch { case _: Exception => None }
+      } catch { case _: Exception => None }
+    }
     var prevProc: Option[(Long, Long, Long)] = None
     def mxbeanExternal(): Double = osBeanOpt match {
       case Some(osBean) =>
@@ -272,16 +276,8 @@ object Bench {
     // which is exactly why this is REPORT-ONLY and never a taint or
     // retry input): a reader adjudicating a suspect family can now see
     // whether the window was kernel-busy without re-running anything.
-    def kernelTicks(): Option[(Long, Long)] = try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      val line = try src.getLines().next() finally src.close()
-      val v = line.trim.split("\\s+")
-      if (v(0) != "cpu") None
-      else {
-        val t = v.drop(1).map(_.toLong)
-        Some((t(2) + t(5) + t(6), t.sum)) // system + irq + softirq
-      }
-    } catch { case _: Exception => None }
+    def kernelTicks(): Option[(Long, Long)] =
+      cpuTicks().map(t => (t(2) + t(5) + t(6), t.sum)) // system + irq + softirq
     externalBusy() // prime the tick counters
     val spark = Sessions.local(cpus.toInt)
     // warm-up: JIT + codegen + parquet footer caches, so the first timed

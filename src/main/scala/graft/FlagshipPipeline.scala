@@ -28,7 +28,10 @@ import graft.streaming.EventStreams
   */
 object FlagshipPipeline {
 
-  final case class RunStats(framesSaved: Long, keyframes: Long, detectionsSent: Long)
+  final case class RunStats(framesSaved: Long, keyframes: Long, detectionsSent: Long) {
+    def +(o: RunStats): RunStats = RunStats(framesSaved + o.framesSaved,
+      keyframes + o.keyframes, detectionsSent + o.detectionsSent)
+  }
 
   def run(spark: SparkSession, outDir: String, frames: Long = 3000,
           keyframeInterval: Int = EventStreams.KeyframeInterval): RunStats = {
@@ -122,17 +125,51 @@ object FlagshipPipeline {
         df, s"$outDir/all_avi", codec = "raw", numParts = numParts))
   }
 
+  /** The same fan-out over a STREAMING frame relation — the reference's
+    * live loop (`main.py:109-160`) as micro-batches: each batch runs the
+    * batch body unchanged, writing its own `all/__batch=<id>` and
+    * `sent/__batch=<id>` leaves. `frames` carries the flagship columns
+    * (frame_number, ts_us, payload, w, h) with BGR payloads, e.g. a
+    * `readStream.format("graft-frames")` scan selected as in
+    * [[runFromAvi]]. Runs the stream to completion and returns the
+    * summed per-batch stats; an empty stream runs no batch and returns
+    * zeros. */
+  def runStream(spark: SparkSession, frames: DataFrame, outDir: String,
+                keyframeInterval: Int = EventStreams.KeyframeInterval): RunStats = {
+    val perBatch = scala.collection.concurrent.TrieMap.empty[Long, RunStats]
+    val query = frames.writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        runBatch(batch, id, outDir, keyframeInterval, perBatch)
+      }
+      .start()
+    try query.processAllAvailable()
+    finally query.stop()
+    perBatch.values.foldLeft(RunStats(0, 0, 0))(_ + _)
+  }
+
+  /** One micro-batch of [[runStream]], exactly-once under retry: the
+    * body overwrites the batch's own leaves, and its stats replace the
+    * batch's entry in `perBatch`, so a re-run batch replaces its rows
+    * and its counts instead of adding to them. */
+  private[graft] def runBatch(batch: DataFrame, batchId: Long, outDir: String,
+                              keyframeInterval: Int,
+                              perBatch: scala.collection.mutable.Map[Long, RunStats]): Unit =
+    perBatch(batchId) = runFromSource(batch.sparkSession, batch, outDir, keyframeInterval,
+      channels = 3, leaf = s"/__batch=$batchId")
+
   /** Source-agnostic flagship body: any (frame_number, ts_us, payload,
     * w, h) relation with row-major `channels`-interleaved byte payloads
     * fans out to both sinks. Dimensions are per-ROW (a directory of mixed
     * image sizes letterboxes each to the same square, like the
     * reference). `recordAll` overrides sink A (the default parquet
     * record-all) — the corpus face substitutes the partitioned video
-    * sink; it returns the frames-saved count. */
-  private def runFromSource(spark: SparkSession, source0: org.apache.spark.sql.DataFrame,
+    * sink; it returns the frames-saved count. `leaf` names the sinks'
+    * sub-directory (a micro-batch's `/__batch=<id>`; empty in batch). */
+  private def runFromSource(spark: SparkSession, source0: DataFrame,
                             outDir: String, keyframeInterval: Int,
                             channels: Int,
-                            recordAll: org.apache.spark.sql.DataFrame => Long = null): RunStats = {
+                            recordAll: DataFrame => Long = null,
+                            leaf: String = ""): RunStats = {
     import spark.implicits._
 
     val target = 64
@@ -152,7 +189,7 @@ object FlagshipPipeline {
       if (recordAll != null) recordAll(source)
       else {
         val (all, saved) = counted(source.select("frame_number", "ts_us", "payload"))
-        all.write.mode("overwrite").parquet(s"$outDir/all")
+        all.write.mode("overwrite").parquet(s"$outDir/all$leaf")
         seen(saved)
       }
 
@@ -205,7 +242,7 @@ object FlagshipPipeline {
           col("class_id"),
           round(col("confidence"), 4).as("confidence")).as("detection")))
         .as("payload"))
-      .write.mode("overwrite").parquet(s"$outDir/sent")
+      .write.mode("overwrite").parquet(s"$outDir/sent$leaf")
 
     source.unpersist()
     RunStats(framesSaved, seen(keyframesSeen), seen(detectionsSent))

@@ -6,26 +6,26 @@ import org.apache.spark.sql.functions._
 /** Streaming data-quality monitor — the continuous face of the q121
   * assertion pass: every micro-batch of documents runs through the SAME
   * shared operator ([[graft.operators.TextCuration.dqChecks]] — one
-  * conditional aggregation, five checks) and appends its long-form
+  * conditional aggregation, five checks) and writes its long-form
   * report stamped with the batch id, so the quality history of a feed
   * is a queryable table and an alert is `pass = 0` in the latest batch.
   *
   * This is the deploy shape of ingestion QA: checks run ON the ingest
   * pass (one scan of the batch, no second read), reports are tiny
   * (5 rows per batch), and the gate the batch pipeline applies
-  * (quarantine, halt, alert) reads the same rows. Per-batch appends are
-  * at-least-once under retry; the batch-keyed overwrite
-  * ([[VersionedState.overwriteBatch]]) is the exactly-once form.
+  * (quarantine, halt, alert) reads the same rows. Each batch's report
+  * is its own `__batch` slice ([[VersionedState.overwriteBatch]]), so a
+  * retried micro-batch replaces its report instead of appending a
+  * second copy.
   */
 object DqMonitor {
 
   /** Fold ONE micro-batch's report into the history table. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
                                       outDir: String): Unit = {
-    graft.operators.TextCuration.dqChecks(batch)
+    VersionedState.overwriteBatch(graft.operators.TextCuration.dqChecks(batch)
       .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("append").parquet(outDir)
+      .coalesce(1), batchId, outDir)
   }
 
   /** Unbounded form: a files-source document stream monitored

@@ -35,11 +35,11 @@ object EventStreams {
     * TimestampType read streams through unchanged. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // an empty/not-yet-existing directory (the growing-stream case —
-    // FanOutSpec's empty-input run) has no footer to probe: assume the
-    // current generator's µs-NTZ flavor; files appearing later with a
-    // different unit would need the directory probed at (re)start, which
-    // a bounded harness run never hits
+    // an empty/not-yet-existing directory (the growing-stream case: a
+    // stream started before its first file lands) has no footer to
+    // probe: assume the current generator's µs-NTZ flavor; files
+    // appearing later with a different unit would need the directory
+    // probed at (re)start, which a bounded harness run never hits
     val physicalTs =
       try spark.read.parquet(sfDir + "/events.parquet").schema("ts").dataType
       catch { case _: org.apache.spark.sql.AnalysisException => TimestampNTZType }

@@ -10,17 +10,17 @@ import graft.similarity.Ann
   * similarity index (the embedding analog of [[IncrementalNearDup]]):
   * each micro-batch of (vec_id, embedding) rows is assigned to its
   * nearest cell of a TRAINED codebook ([[Ann.assignCells]], the q33
-  * partitioning pass) and appended to an on-disk index laid out
-  * `PARTITIONED BY (cell)` — so the index grows per batch without ever
-  * touching standing data, and a search opens only the probed cells'
-  * directories.
+  * partitioning pass) and written to an on-disk index laid out
+  * `PARTITIONED BY (__batch, cell)` — so the index grows per batch
+  * without ever touching standing data, and a search opens only the
+  * probed cells' directories.
   *
   * The codebook is trained OFFLINE (the standard IVF practice — cell
   * geometry must stay fixed while the index accumulates, else old
   * assignments go stale; retraining is a rebuild, not an ingest).
   *
   * Scale shape: the assignment pass is a broadcast of k centroids onto
-  * a map-side argmax (no vector shuffle); the append writes each
+  * a map-side argmax (no vector shuffle); the write puts each
   * vector once under its cell directory. The search side
   * ([[searchIndex]]) reuses the exact q33 operator over the read-back
   * index, and the cell equi-join against the broadcast probe list
@@ -30,20 +30,22 @@ import graft.similarity.Ann
   */
 object VectorIngest {
 
-  /** Assign one batch to cells and append it to the index. */
-  private[streaming] def ingestBatch(batch: DataFrame, centroids: DataFrame,
-                                     indexDir: String): Unit =
-    Ann.assignCells(batch, centroids)
-      .select(col("vec_id"), col("nv"), col("nn"), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(indexDir)
+  /** Assign one batch to cells and write it as the batch's own
+    * `__batch` slice of the index, so a retried batch replaces its
+    * vectors instead of adding them twice. */
+  private[streaming] def ingestBatch(batch: DataFrame, batchId: Long,
+                                     centroids: DataFrame, indexDir: String): Unit =
+    VersionedState.overwriteBatch(Ann.assignCells(batch, centroids)
+      .select(col("vec_id"), col("nv"), col("nn"), col("cell")),
+      batchId, indexDir, "cell")
 
   /** Run the ingest over a streaming (vec_id, embedding) source. */
   def run(vectors: DataFrame, centroids: DataFrame, indexDir: String,
           checkpointDir: String): StreamingQuery =
     vectors.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, centroids, indexDir)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        ingestBatch(batch, id, centroids, indexDir)
       }
       .start()
 
@@ -51,8 +53,8 @@ object VectorIngest {
     * q170/q196/q207 precedent). The corpus replays as FOUR real
     * micro-batches (four chunks split by vec_id residue, staged by
     * [[EventStreams.stagedStream]]) through [[run]] — each batch
-    * cell-assigned against the SAME fixed codebook and appended under
-    * its cell directory —
+    * cell-assigned against the SAME fixed codebook and written under
+    * its batch's cell directories —
     * and the accumulated index then serves the exact q33 search
     * ([[searchIndex]]). The oracle is q33's one-shot text: the hash
     * match proves batch-at-a-time ingest builds the SAME index as
@@ -61,7 +63,7 @@ object VectorIngest {
     * the parquet round-trip bit-exactly.
     *
     * Scale: each batch is a broadcast-codebook map-side argmax plus one
-    * partitioned append; the search opens only the probed cells. The
+    * partitioned write; the search opens only the probed cells. The
     * staged-files split is the harness stand-in for a real feed; the
     * per-batch work is identical. */
   def ingestReplay(spark: SparkSession, sfDir: String, nBatches: Int = 4): DataFrame = {

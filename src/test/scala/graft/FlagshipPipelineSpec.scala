@@ -87,35 +87,57 @@ class FlagshipPipelineSpec extends SparkSpec {
     assert(sizes.toSeq === Seq(64 * 48))
   }
 
-  test("flagship from a REAL MJPEG/AVI container equals the image-dir run on the same JPEGs") {
+  // ONE set of 12 JPEG frames (64x48) and the MJPEG/AVI muxing them,
+  // shared by the ingest cross-check and the streaming cases below
+  private val w = 64
+  private val h = 48
+  private lazy val jpegs = (0 until 12).map { i =>
     import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    val w = 64; val h = 48
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    (0 until h).foreach { y =>
+      (0 until w).foreach { x =>
+        val v = (i * 31 + y * w + x) % 256
+        img.setRGB(x, y, (v << 16) | (((v * 3) % 256) << 8) | ((v * 7) % 256))
+      }
+    }
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", baos)
+    baos.toByteArray
+  }
+  private lazy val dir = {
+    val d = Files.createTempDirectory("graft_aviflag_imgs")
+    graft.TempDirs.cleanupOnExit(d)
+    jpegs.zipWithIndex.foreach { case (b, i) =>
+      Files.write(d.resolve(f"frame_$i%04d.jpg"), b)
+    }
+    d
+  }
+  private lazy val avi = {
+    val p = dir.resolve("movie.avi").toString
+    // fps 30 = the image-dir path's synthetic clock, so ts_us agrees too
+    graft.multimodal.AviCodec.writeMjpeg(p, jpegs, w, h, fps = 30)
+    p
+  }
+
+  private def tmpOut(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    graft.TempDirs.cleanupOnExit(d)
+    d.toString
+  }
+
+  /** The flagship columns over the AVI, selected as `runFromAvi` does. */
+  private def flagshipColumns(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("frame_number"), col("ts_us"), col("payload"),
+      col("width").as("w"), col("height").as("h"))
+
+  private def rows(out: String, sub: String, order: String) =
+    spark.read.parquet(s"$out/$sub").drop("__batch").orderBy(order).collect().toSeq
+
+  test("flagship from a REAL MJPEG/AVI container equals the image-dir run on the same JPEGs") {
     // ONE set of JPEG bytes, ingested two ways: numbered files in a
     // directory (S1) and chunks in an AVI container (S2). Decode runs
     // through the same ImageIO path in both, so every downstream stage —
     // letterbox, detector, NMS, both sinks — must produce identical rows.
-    val jpegs = (0 until 12).map { i =>
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-      (0 until h).foreach { y =>
-        (0 until w).foreach { x =>
-          val v = (i * 31 + y * w + x) % 256
-          img.setRGB(x, y, (v << 16) | (((v * 3) % 256) << 8) | ((v * 7) % 256))
-        }
-      }
-      val baos = new java.io.ByteArrayOutputStream()
-      ImageIO.write(img, "jpg", baos)
-      baos.toByteArray
-    }
-    val dir = Files.createTempDirectory("graft_aviflag_imgs")
-    graft.TempDirs.cleanupOnExit(dir)
-    jpegs.zipWithIndex.foreach { case (b, i) =>
-      Files.write(dir.resolve(f"frame_$i%04d.jpg"), b)
-    }
-    val avi = dir.resolve("movie.avi").toString
-    // fps 30 = the image-dir path's synthetic clock, so ts_us agrees too
-    graft.multimodal.AviCodec.writeMjpeg(avi, jpegs, w, h, fps = 30)
-
     val outImg = Files.createTempDirectory("graft_aviflag_outA").toString
     val outAvi = Files.createTempDirectory("graft_aviflag_outB").toString
     val a = FlagshipPipeline.runFromImageDir(spark, dir.toString, outImg, keyframeInterval = 3)
@@ -168,5 +190,50 @@ class FlagshipPipelineSpec extends SparkSpec {
     assert(readBack.map(_.getAs[Array[Byte]](1).toSeq) ===
       original.map(_.getAs[Array[Byte]](1).toSeq),
       "video record-all holds the exact bytes the parquet record-all would")
+  }
+
+  test("runStream at 5 frames per micro-batch equals runFromAvi: stats and sink rows") {
+    val outB = tmpOut("graft_flagstream_b")
+    val batch = FlagshipPipeline.runFromAvi(spark, avi, outB, keyframeInterval = 3)
+    val outS = tmpOut("graft_flagstream_s")
+    val frames = flagshipColumns(spark.readStream.format("graft-frames")
+      .option("path", avi).option("numPartitions", 4).option("ratePerBatch", 5).load())
+    val streamed = FlagshipPipeline.runStream(spark, frames, outS, keyframeInterval = 3)
+    assert(streamed === batch, "per-batch stats must sum to the batch run's")
+    val batches = spark.read.parquet(s"$outS/all").select("__batch").distinct()
+      .as[Long].collect().sorted.toSeq
+    assert(batches === Seq(0L, 1L, 2L), "12 frames at 5 per batch = 3 micro-batches")
+    assert(rows(outS, "all", "frame_number") === rows(outB, "all", "frame_number"),
+      "record-all sink: the batch run's rows, split across __batch leaves")
+    assert(rows(outS, "sent", "payload") === rows(outB, "sent", "payload"),
+      "sender sink: the batch run's JSON payloads")
+  }
+
+  test("re-running a micro-batch with a written batch id leaves rows and stats unchanged") {
+    val source = flagshipColumns(spark.read.format("graft-frames")
+      .option("path", avi).option("numPartitions", 4).load())
+    def slice(b: Long) =
+      source.filter(col("frame_number") >= b * 5 && col("frame_number") < b * 5 + 5)
+    val out = tmpOut("graft_flagstream_replay")
+    val perBatch = scala.collection.mutable.Map.empty[Long, FlagshipPipeline.RunStats]
+    (0L to 2L).foreach(b => FlagshipPipeline.runBatch(slice(b), b, out, 3, perBatch))
+    def total = perBatch.values.reduce(_ + _)
+    val stats = total
+    val (all, sent) = (rows(out, "all", "frame_number"), rows(out, "sent", "payload"))
+    assert(stats === FlagshipPipeline.runFromAvi(spark, avi, tmpOut("graft_flagstream_rb"),
+      keyframeInterval = 3))
+    // a retried batch 1: same id, same frames
+    FlagshipPipeline.runBatch(slice(1), 1L, out, 3, perBatch)
+    assert(total === stats, "a re-run batch replaces its own stats, never adds")
+    assert(rows(out, "all", "frame_number") === all, "record-all leaf overwritten, not appended")
+    assert(rows(out, "sent", "payload") === sent, "sender leaf overwritten, not appended")
+  }
+
+  test("runStream over a stream with no input returns zero stats") {
+    val empty = flagshipColumns(spark.readStream.format("graft-frames")
+      .option("frames", 0).load())
+    val out = tmpOut("graft_flagstream_empty")
+    assert(FlagshipPipeline.runStream(spark, empty, out, keyframeInterval = 3) ===
+      FlagshipPipeline.RunStats(0L, 0L, 0L))
   }
 }

@@ -41,4 +41,20 @@ class DqMonitorSpec extends SparkSpec {
     assert(b1("lang_in_domain") === ((1L, 0L)), "bad lang alerts with its count")
     assert(b1("doc_id_not_null") === ((0L, 1L)), "untouched checks still pass")
   }
+
+  test("a re-run micro-batch replaces its own report: the history is unchanged") {
+    val out = java.nio.file.Files.createTempDirectory("graft-dq-replay-")
+    graft.TempDirs.cleanupOnExit(out)
+    val b0 = Seq((1L, "good text", "en", 9L)).toDF("doc_id", "text", "lang", "n_chars")
+    val b1 = Seq((2L, "bad", "xx", 3L)).toDF("doc_id", "text", "lang", "n_chars")
+    DqMonitor.processBatch(b0, 0L, out.toString)
+    DqMonitor.processBatch(b1, 1L, out.toString)
+    def hist = DqMonitor.history(spark, out.toString)
+      .as[(Long, String, Long, Long)].collect().toSeq
+    val before = hist
+    assert(before.size === 10, "five check rows per batch")
+    // a retried batch 1: same id, same documents
+    DqMonitor.processBatch(b1, 1L, out.toString)
+    assert(hist === before, "a re-run batch must replace its report, not append a second copy")
+  }
 }

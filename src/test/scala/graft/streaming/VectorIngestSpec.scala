@@ -42,10 +42,13 @@ class VectorIngestSpec extends SparkSpec {
       mem.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
 
-    // the on-disk layout is cell-partitioned: one directory per cell,
-    // so a probe opens only its cells' files
+    // the on-disk layout is cell-partitioned within each batch's slice:
+    // one directory per cell, so a probe opens only its cells' files
     val cellDirs = new java.io.File(indexDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).map(_.getName).sorted
+      .filter(f => f.isDirectory && f.getName.startsWith("__batch="))
+      .flatMap(_.listFiles())
+      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).map(_.getName)
+      .distinct.sorted
     assert(cellDirs.nonEmpty && cellDirs.length <= 4, cellDirs.mkString(","))
 
     val queries = all.filter(col("vec_id") < 3)
@@ -103,6 +106,26 @@ class VectorIngestSpec extends SparkSpec {
     // batch would duplicate the even ids
     assert(idx.count() === n)
     assert(idx.select("vec_id").distinct().count() === n)
+    all.unpersist(); centroids.unpersist()
+  }
+
+  test("a re-run micro-batch replaces its own index slice: the index rows are unchanged") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_vec_replay")
+    graft.TempDirs.cleanupOnExit(root)
+    val indexDir = root.resolve("index").toString
+    val all = graft.Tables.embeddings(spark, sf0001).select("vec_id", "embedding").cache()
+    val centroids = Ann.trainCentroids(all, k = 4, iters = 2).cache()
+    def batch(b: Long) = all.filter(col("vec_id") % 2 === b)
+    (0L to 1L).foreach(b => VectorIngest.ingestBatch(batch(b), b, centroids, indexDir))
+    def index = spark.read.parquet(indexDir).select(col("vec_id"), col("cell").cast("long"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    val before = index
+    assert(before.map(_._1) === all.select("vec_id").as[Long].collect().sorted.toSeq,
+      "every vector once before the replay")
+    // a retried batch 1: same id, same vectors
+    VectorIngest.ingestBatch(batch(1L), 1L, centroids, indexDir)
+    assert(index === before, "a re-run batch must replace its slice, not add its vectors again")
     all.unpersist(); centroids.unpersist()
   }
 

@@ -617,6 +617,29 @@ object PipelineQueries {
         .select("doc_a", "doc_b", "jaccard")
     }
 
+  /** The q91/q92 near-dup tail over a `(doc_id, sig)` signature-set
+    * relation: candidates from the shared-element equi-join (bucket sizes
+    * are duplicate-group sizes, never all-pairs), verified by signature
+    * Jaccard ≥ 0.5. Output: (doc_a, doc_b, n_shared, jaccard), sorted. */
+  private def signatureNearDups(sigs: DataFrame): DataFrame = {
+    val exploded = sigs.select(col("doc_id"), explode(col("sig")).as("h"))
+    val cands = exploded.as("a")
+      .join(exploded.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    val inter = size(array_intersect(col("sig_a"), col("sig_b"))).cast("long")
+    cands
+      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
+      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
+      .select(col("doc_a"), col("doc_b"), inter.as("n_shared"),
+        (inter.cast("double") /
+          (size(col("sig_a")) + size(col("sig_b")) - inter).cast("double"))
+          .as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+      .orderBy("doc_a", "doc_b")
+  }
+
   /** One synthetic 32×24 fixture frame for the q85/q87/q89/q96
     * containers: pixel (x, y) is the hash of `x * xMul + y * yMul +
     * frameTerm`, in a `TYPE_INT_RGB` image, JPEG-encoded. */
@@ -2302,24 +2325,8 @@ object PipelineQueries {
       val extras = array(
         (col("doc_id") * 97L + 7L) % 1000000007L + 1000000007L,
         (col("doc_id") * 97L + 38L) % 1000000007L + 1000000007L)
-      val sigs = graft.Caches.scopedPersist(docs.select(col("doc_id"),
-        array_distinct(concat(shared, extras)).as("sig")))
-      val exploded = sigs.select(col("doc_id"), explode(col("sig")).as("h"))
-      val cands = exploded.as("a")
-        .join(exploded.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val inter = size(array_intersect(col("sig_a"), col("sig_b"))).cast("long")
-      cands
-        .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-        .select(col("doc_a"), col("doc_b"), inter.as("n_shared"),
-          (inter.cast("double") /
-            (size(col("sig_a")) + size(col("sig_b")) - inter).cast("double"))
-            .as("jaccard"))
-        .filter(col("jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
+      signatureNearDups(graft.Caches.scopedPersist(docs.select(col("doc_id"),
+        array_distinct(concat(shared, extras)).as("sig"))))
     },
 
     // AUDIO near-dup — the last modality in the dedup matrix (text,
@@ -2381,25 +2388,9 @@ object PipelineQueries {
           explode(array(
             (col("doc_id") * 31L) % 1000000000L + 4000000000L,
             (col("doc_id") * 31L + 17L) % 1000000000L + 4000000000L)).as("h"))
-      val sigs = graft.Caches.scopedPersist(
+      signatureNearDups(graft.Caches.scopedPersist(
         blocks.union(extras)
-          .groupBy("doc_id").agg(collect_set(col("h")).as("sig")))
-      val exploded = sigs.select(col("doc_id"), explode(col("sig")).as("h"))
-      val cands = exploded.as("a")
-        .join(exploded.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val inter = size(array_intersect(col("sig_a"), col("sig_b"))).cast("long")
-      cands
-        .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-        .select(col("doc_a"), col("doc_b"), inter.as("n_shared"),
-          (inter.cast("double") /
-            (size(col("sig_a")) + size(col("sig_b")) - inter).cast("double"))
-            .as("jaccard"))
-        .filter(col("jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
+          .groupBy("doc_id").agg(collect_set(col("h")).as("sig"))))
     },
 
     // The audio CORPUS face (VERDICT r7 item 5): a directory of stereo

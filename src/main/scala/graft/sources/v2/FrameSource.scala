@@ -32,8 +32,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    `numPartitions` readers, so ingest scales horizontally.
   *
   * Options: frames (count), width, height, fps (int), numPartitions,
-  * startEpochUs, ratePerBatch (micro-batch admission for the streaming
-  * face, must be positive).
+  * ratePerBatch (micro-batch admission for the streaming face, must be
+  * positive). Frame timestamps count from [[FrameSource.StartEpochUs]].
   */
 class FrameSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-frames"
@@ -66,8 +66,11 @@ object FrameSource {
     * the files before it in scan order. */
   final case class AviFile(path: String, offset: Long, frames: Long)
 
+  /** `ts_us` of frame 0: 2024-01-01T00:00:00Z. */
+  val StartEpochUs = 1704067200000000L
+
   final case class Config(frames: Long, width: Int, height: Int, fps: Int,
-                          numPartitions: Int, startEpochUs: Long, ratePerBatch: Long,
+                          numPartitions: Int, ratePerBatch: Long,
                           aviFiles: Seq[AviFile] = Nil, fpsExact: Double = 30.0)
   object Config {
     def apply(o: CaseInsensitiveStringMap): Config = {
@@ -133,7 +136,6 @@ object FrameSource {
             height = meta.height,
             fps = math.max(1, math.round(meta.fps).toInt),
             numPartitions = o.getInt("numPartitions", 8),
-            startEpochUs = o.getLong("startEpochUs", 1704067200000000L),
             ratePerBatch = o.getLong("ratePerBatch", 1000L),
             aviFiles = files,
             fpsExact = if (meta.fps > 0) meta.fps else 30.0)
@@ -145,7 +147,6 @@ object FrameSource {
             height = o.getInt("height", 480),
             fps = fps,
             numPartitions = o.getInt("numPartitions", 8),
-            startEpochUs = o.getLong("startEpochUs", 1704067200000000L),
             ratePerBatch = o.getLong("ratePerBatch", 1000L),
             fpsExact = fps.toDouble)
       }
@@ -481,8 +482,8 @@ class AviPartitionReader(files: Seq[FrameSource.AviFile], config: FrameSource.Co
     // takes the double path
     case "ts_us" => () =>
       if (config.fpsExact == config.fps.toDouble)
-        config.startEpochUs + frame * 1000000L / config.fps
-      else config.startEpochUs + (frame * 1e6 / config.fpsExact).toLong
+        FrameSource.StartEpochUs + frame * 1000000L / config.fps
+      else FrameSource.StartEpochUs + (frame * 1e6 / config.fpsExact).toLong
     case "width" => () => img.width
     case "height" => () => img.height
     case "fps" => () => config.fpsExact
@@ -508,19 +509,25 @@ object FrameSourceMetrics {
   val SkippedContainers = "skippedContainers"
   val DroppedFrames = "droppedFrames"
 
-  final class SumMetric(val name0: String, desc: String) extends CustomSumMetric {
-    override def name(): String = name0
-    override def description(): String = desc
-  }
-
-  def supported: Array[CustomMetric] = Array(
-    new SumMetric(SkippedContainers, "containers skipped (unreadable mid-scan)"),
-    new SumMetric(DroppedFrames, "frames dropped with skipped containers"))
+  def supported: Array[CustomMetric] =
+    Array(new SkippedContainersMetric, new DroppedFramesMetric)
 
   def task(metricName: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     override def name(): String = metricName
     override def value(): Long = v
   }
+}
+
+// Top-level with zero-argument constructors: Spark's SQL status listener
+// re-creates each driver-side metric by reflection to aggregate it.
+class SkippedContainersMetric extends CustomSumMetric {
+  override def name(): String = FrameSourceMetrics.SkippedContainers
+  override def description(): String = "containers skipped (unreadable mid-scan)"
+}
+
+class DroppedFramesMetric extends CustomSumMetric {
+  override def name(): String = FrameSourceMetrics.DroppedFrames
+  override def description(): String = "frames dropped with skipped containers"
 }
 
 class FramePartitionReader(config: FrameSource.Config, required: StructType,
@@ -531,7 +538,7 @@ class FramePartitionReader(config: FrameSource.Config, required: StructType,
   // resolve once per reader: which output slot feeds from which field
   private val fieldGens: Array[Long => Any] = required.fieldNames.map {
     case "frame_number" => (f: Long) => f
-    case "ts_us" => (f: Long) => config.startEpochUs + f * 1000000L / config.fps
+    case "ts_us" => (f: Long) => FrameSource.StartEpochUs + f * 1000000L / config.fps
     case "width" => (_: Long) => config.width
     case "height" => (_: Long) => config.height
     case "fps" => (_: Long) => config.fps.toDouble

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Shared streaming plumbing for the events table — the single place
   * that knows the physical schema, the TIMESTAMP(NANOS) workaround, and
-  * how to run a bounded stream to completion.
+  * how to run a bounded stream to completion ([[drainToFiles]]).
   */
 object EventStreams {
 
@@ -61,29 +61,6 @@ object EventStreams {
     case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
     case _ => df
   }
-
-  /** Runs a (bounded) streaming DataFrame to completion through a FILE
-    * sink and reads the result back — the scale-safe drain: results go
-    * executor→disk in parallel, never through the driver. `append` mode
-    * accumulates each batch's new rows; `complete` mode keeps the last
-    * batch's full result (overwrite per batch via `foreachBatch`, the
-    * standard pattern for complete-mode output to files — the plain file
-    * sink is append-only). This is the drain behind every `SparkEntry`
-    * streaming query; [[drain]] (memory sink) remains for update-mode
-    * state inspection in specs. */
-  def drainToFiles(df: DataFrame, mode: String): DataFrame =
-    drainToFilesCounting(df, mode)._1
-
-  /** Engine-reported stats of the most recent [[drainToFilesCounting]]
-    * run in this JVM: micro-batch count, peak stateful-operator state
-    * rows, watermark drops and the effective state width — the
-    * observables the streaming scale specs read (VERDICT r3 item 7).
-    * Captured from the same synchronous progress buffer the drop count
-    * uses. */
-  final case class StreamRunStats(batches: Int, stateRowsMax: Long,
-                                  stateRowsEnd: Long, dropped: Long,
-                                  width: Int = 0)
-  @volatile var lastRunStats: Option[StreamRunStats] = None
 
   /** State-partition width for the query-path streams. A streaming
     * stateful operator's partition count is fixed by
@@ -196,19 +173,17 @@ object EventStreams {
     derivedParts(df).getOrElse(DefaultStreamParts)
 
   /** Runs `body` with the session's `spark.sql.shuffle.partitions`
-    * scoped to [[widthFor]] of `df` — the shared width helper (VERDICT
-    * r17 item 3) for the streamed faces that run their OWN
-    * `writeStream` instead of draining through [[drainToFilesCounting]]
-    * (q207's update-mode fold, q228's processing-time latch — drains
-    * the file drain cannot express). Those faces otherwise inherit the
-    * session's BATCH width (32 at driver settings) as their state-store
-    * partition count, paying a per-micro-batch commit per store per
-    * partition that the derived width already proved unnecessary at the
-    * gate SFs. The width must be set BEFORE `start()` — a stateful
-    * operator's partition count is fixed at first query start and
-    * recorded in the checkpoint — and the previous session width is
-    * restored even when `body` throws, so batch queries never keep
-    * running at stream width. */
+    * scoped to [[widthFor]] of `df` — the width rule for the streamed
+    * faces that run their OWN `writeStream` instead of draining through
+    * [[drainToFiles]] (q228's processing-time latch, which never
+    * quiesces). Those faces otherwise inherit the session's BATCH width
+    * (32 at driver settings) as their state-store partition count,
+    * paying a per-micro-batch commit per store per partition that the
+    * derived width already proved unnecessary at the gate SFs. The width
+    * must be set BEFORE `start()` — a stateful operator's partition count
+    * is fixed at first query start and recorded in the checkpoint — and
+    * the previous session width is restored even when `body` throws, so
+    * batch queries never keep running at stream width. */
   def withStreamWidth[T](df: DataFrame)(body: => T): T =
     withConfs(df.sparkSession, PartsKey -> widthFor(df).toString)(body)
 
@@ -216,11 +191,14 @@ object EventStreams {
 
   /** Runs `body` with each (key, value) set on the session conf, then
     * puts every key back as it was (unset if it was unset), even when
-    * `body` throws — the one set-and-restore scope behind the width,
-    * progress-retention and state-store settings of a stream run. */
+    * `body` throws — the one set-and-restore scope behind the width and
+    * state-store settings of a stream run. */
   private[streaming] def withConfs[T](spark: SparkSession, confs: (String, String)*)
                                      (body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // the explicitly set confs, not `getOption`: a conf left at its
+    // default must go back to unset, not to an explicit copy of the default
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       body
@@ -245,7 +223,7 @@ object EventStreams {
   def stagedStream(chunks: Seq[DataFrame]): DataFrame = {
     require(chunks.nonEmpty, "stagedStream needs at least one chunk")
     val root = java.nio.file.Files.createTempDirectory("graft-staged-")
-    cleanupOnExit(root)
+    graft.TempDirs.cleanupOnExit(root)
     val t0 = System.currentTimeMillis() - 60000L * chunks.size
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       val dir = s"$root/chunk$i"
@@ -265,41 +243,48 @@ object EventStreams {
     (0 until n).map(b => df.filter(col(key) >= b * width && col(key) < (b + 1) * width))
   }
 
-  /** [[drainToFiles]] plus the number of input rows the stateful operators
-    * dropped as later than the watermark. The count comes from the
-    * engine's own `numRowsDroppedByWatermark` metric — an `Observation`
-    * upstream of the aggregation cannot see these drops, because they
-    * happen inside the stateful operator itself. `query.recentProgress`
-    * retains only `spark.sql.streaming.numRecentProgressUpdates` entries
-    * (default 100), which would silently undercount longer multi-batch
-    * runs — the retention is raised for the duration of this run (the
-    * synchronous progress buffer is race-free, unlike a listener whose
-    * events arrive on an async bus).
+  private[streaming] val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private[streaming] val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Whether `df`'s analysed plan holds a `transformWithState` operator —
+    * the one stateful operator whose multiple state variables need the
+    * RocksDB store (the default provider refuses it with
+    * `STATE_STORE_MULTIPLE_COLUMN_FAMILIES`). */
+  private[streaming] def usesTransformWithState(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+
+  /** Runs a bounded streaming DataFrame to completion through a FILE sink
+    * and reads the result back — the one drain behind every `SparkEntry`
+    * streaming query: results go executor→disk in parallel, never through
+    * the driver. `append` mode accumulates each batch's new rows;
+    * `complete` mode keeps the last batch's full result (overwrite per
+    * batch via `foreachBatch`, the standard pattern for complete-mode
+    * output to files — the plain file sink is append-only).
     *
-    * Runs the stream at [[widthFor]] (env > width DERIVED from the
-    * stream's file-source bytes > default; the per-run EFFECTIVE width
-    * is recorded on [[lastRunStats]].width, ADVICE r17); the session's
-    * batch width is restored afterwards (micro-batch planning reads the
-    * conf at start(), so the scoped set binds only this query's state
-    * layout). */
-  def drainToFilesCounting(df: DataFrame, mode: String): (DataFrame, Long) = {
+    * The stream runs at [[widthFor]] and, when its plan holds a
+    * `transformWithState` operator, on the RocksDB state store; both
+    * confs are set inside one [[withConfs]] scope, so the session's
+    * batch width and provider are restored however the run ends
+    * (micro-batch planning reads them at start(), so the scoped set binds
+    * only this query's state layout). Per-batch progress is Spark's own:
+    * a `StreamingQueryListener` on the session sees every batch. */
+  def drainToFiles(df: DataFrame, mode: String): DataFrame = {
     // update-mode would silently duplicate keys through an append parquet
     // write (each state revision appended as a fresh row) — fail fast.
     require(mode == "append" || mode == "complete",
       s"drainToFiles supports append|complete, got '$mode' (update has no file-write analog)")
     val spark = df.sparkSession
     val root = java.nio.file.Files.createTempDirectory("graft_drain")
-    cleanupOnExit(root)
+    // the drained parquet must outlive this call (the returned DataFrame
+    // reads it lazily), so it is deleted at JVM exit
+    graft.TempDirs.cleanupOnExit(root)
     val dir = root.toString + "/out"
     val writeMode = if (mode == "complete") "overwrite" else "append"
-    // the conf sets live INSIDE the restore scope: if start() or stop()
-    // throws, the session must not be left buffering 100k progress
-    // objects per stream — or running batch queries at the streaming
-    // state width — for the rest of a harness run
-    val effectiveWidth = widthFor(df)
-    val dropped = withConfs(spark,
-        "spark.sql.streaming.numRecentProgressUpdates" -> "100000",
-        PartsKey -> effectiveWidth.toString) {
+    val provider =
+      if (usesTransformWithState(df)) Seq(ProviderKey -> RocksDbProvider) else Nil
+    withConfs(spark, (PartsKey -> widthFor(df).toString) +: provider: _*) {
       val query = df.writeStream.outputMode(mode)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode(writeMode).parquet(dir)
@@ -308,52 +293,8 @@ object EventStreams {
         .start()
       try query.processAllAvailable()
       finally query.stop()
-      val perBatch = query.recentProgress
-        .map(p => Option(p.stateOperators).toSeq.flatten)
-        .filter(_.nonEmpty)
-      val ops = perBatch.flatten
-      // stateRowsEnd = state surviving the LAST batch (after the final
-      // watermark advance evicted finalized windows/sessions) — the
-      // number that must stay horizon-bounded on an unbounded stream,
-      // where the peak legitimately includes pre-eviction build-up
-      // peak = max over PER-BATCH SUMS of all stateful operators (a
-      // per-entry max would understate a multi-operator chain's state)
-      lastRunStats = Some(StreamRunStats(
-        batches = query.recentProgress.length,
-        stateRowsMax =
-          if (perBatch.isEmpty) 0L
-          else perBatch.map(_.map(_.numRowsTotal).sum).max,
-        stateRowsEnd = perBatch.lastOption.map(_.map(_.numRowsTotal).sum).getOrElse(0L),
-        dropped = ops.map(_.numRowsDroppedByWatermark).sum,
-        width = effectiveWidth))
-      ops.map(_.numRowsDroppedByWatermark).sum
     }
-    val out =
-      if (new java.io.File(dir).exists) spark.read.parquet(dir)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    (out, dropped)
-  }
-
-  // The drained parquet must outlive this call (the returned DataFrame
-  // reads it lazily), so deletion happens at JVM exit via the shared
-  // graft.TempDirs registry.
-  private def cleanupOnExit(p: java.nio.file.Path): Unit =
-    graft.TempDirs.cleanupOnExit(p)
-
-  /** Runs a (bounded) streaming DataFrame to completion through a memory
-    * sink and returns the MATERIALIZED result; the sink table is dropped
-    * so repeated calls don't leak driver memory. Harness-scale only — the
-    * query-path drain is [[drainToFiles]]; this one stays for update-mode
-    * state inspection in specs (update has no file-write analog). */
-  def drain(df: DataFrame, mode: String): DataFrame = {
-    val spark = df.sparkSession
-    val sink = "graft_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = df.writeStream.outputMode(mode).format("memory").queryName(sink).start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val table = spark.table(sink)
-    val out = spark.createDataFrame(table.collectAsList(), table.schema)
-    spark.catalog.dropTempView(sink)
-    out
+    if (new java.io.File(dir).exists) spark.read.parquet(dir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
   }
 }

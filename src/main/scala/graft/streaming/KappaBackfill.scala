@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Kappa-style backfill→stream unification — the architecture seam every
   * production streaming deployment crosses: history is aggregated once
@@ -52,14 +52,14 @@ object KappaBackfill {
 
   /** The stream's fold: each micro-batch's (user_id, cents) rows folded
     * into the per-user state, which the group-state map seeds from the
-    * backfilled `initial`. Each invocation emits the group's updated
-    * running aggregate. Shared by [[run]] and [[kappaReplay]], so the
-    * seam spec exercises q207's own fold. */
+    * backfilled `initial`. Each touched group emits its updated running
+    * aggregate once per batch — append mode, so the emissions drain
+    * through the file sink. */
   private def fold(spark: SparkSession, tail: Dataset[(Long, Long)],
                    initial: Dataset[(Long, UserState)]): Dataset[UserUpdate] = {
     import spark.implicits._
     tail.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout,
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
           initial.groupByKey(_._1).mapValues(_._2)) {
         (user: Long, rows: Iterator[(Long, Long)], state: GroupState[UserState]) =>
           val prev = state.getOption.getOrElse(UserState(0L, 0L))
@@ -67,26 +67,8 @@ object KappaBackfill {
           rows.foreach { case (_, cents) => n += 1; c += cents }
           val next = UserState(n, c)
           state.update(next)
-          UserUpdate(user, next.n, next.cents)
+          Iterator.single(UserUpdate(user, next.n, next.cents))
       }
-  }
-
-  /** The STREAM half: a files-source of post-cut (user_id, cents) events,
-    * folded into the backfilled state via `initialState` (update output
-    * mode, memory sink `sinkTable`). */
-  def run(spark: SparkSession, inputDir: String,
-          initial: Dataset[(Long, UserState)],
-          checkpoint: String, sinkTable: String): StreamingQuery = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-    fold(spark, spark.readStream.schema(schema).parquet(inputDir).as[(Long, Long)], initial)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .format("memory").queryName(sinkTable)
-      .start()
   }
 
   /** q207: the kappa seam promoted into the oracle gate (the
@@ -104,8 +86,8 @@ object KappaBackfill {
     * match. The cut itself never reaches the oracle text: the whole
     * point of kappa is that the seam is invisible in the result.
     *
-    * Scale: the drain is executor→disk (`foreachBatch` parquet append —
-    * update-mode emissions resolved by the monotone-n argmax, never a
+    * Scale: the drain is executor→disk ([[EventStreams.drainToFiles]],
+    * append-mode emissions resolved by the monotone-n argmax, never a
     * driver-side memory sink); the anti-join backfill is keyed on
     * user_id. State is one row per active user, the same bound the
     * deployed form carries. */
@@ -122,26 +104,7 @@ object KappaBackfill {
     val src = EventStreams.stagedStream((0 to 1).map { h =>
       t.filter(col("half") === h).select("user_id", "cents")
     }).as[(Long, Long)]
-    val root = java.nio.file.Files.createTempDirectory("graft-kappa-replay-")
-    graft.TempDirs.cleanupOnExit(root)
-    val ck = s"$root/ck"; val out = s"$root/out"
-    // update-mode emissions have no file-sink analog, so this replay
-    // drains itself (EventStreams.drainToFiles takes append|complete);
-    // it runs at the shared derived state width — every state partition
-    // is a per-micro-batch store commit.
-    EventStreams.withStreamWidth(src.toDF()) {
-      val q = fold(spark, src, initial).writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (b: Dataset[UserUpdate], _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-
-    val streamed = spark.read.parquet(out)
+    val streamed = EventStreams.drainToFiles(fold(spark, src, initial).toDF(), "append")
       .groupBy("user_id")
       .agg(max(struct(col("n"), col("cents"))).as("s"))
       .select(col("user_id"), col("s.n").as("n_events"), col("s.cents").as("cents"))
@@ -151,13 +114,6 @@ object KappaBackfill {
     val untouched = initDf.join(streamed.select("user_id"), Seq("user_id"), "left_anti")
     streamed.unionByName(untouched).orderBy("user_id")
   }
-
-  /** Post-cut events in the stream's wire shape, for the spec to stage
-    * as micro-batch files. */
-  def tail(spark: SparkSession, dir: String, cutUs: Long): DataFrame =
-    graft.Tables.events(spark, dir)
-      .filter(expr("unix_micros(ts)") > cutUs)
-      .select(col("user_id"), centsCol.as("cents"))
 
   /** The ground truth the seam must reproduce: ONE batch over all
     * history — no cut, no seam. */

@@ -82,9 +82,8 @@ object ListStateRecent {
     val src = EventStreams.stagedStream(Seq(
       ev.filter(col("event_id") <= cut), ev.filter(col("event_id") > cut)))
       .as[EventIn]
-    SessionTimers.withRocksDb(spark) {
-      EventStreams.drainToFiles(tracked(spark, src), "append")
-    }.groupBy("user_id")
+    EventStreams.drainToFiles(tracked(spark, src), "append")
+      .groupBy("user_id")
       .agg(max(struct(col("n_seen"), col("recent_path"))).as("s"))
       .select(col("user_id"), col("s.n_seen").as("n_seen"),
         col("s.recent_path").as("recent_path"))

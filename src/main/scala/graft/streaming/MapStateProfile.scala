@@ -73,9 +73,8 @@ object MapStateProfile {
     val src = EventStreams.stagedStream((0 to 1).map { h =>
       ev.filter(col("half") === h).select("user_id", "event_type")
     }).as[EventIn]
-    SessionTimers.withRocksDb(spark) {
-      EventStreams.drainToFiles(profiled(spark, src), "append")
-    }.groupBy("user_id", "event_type")
+    EventStreams.drainToFiles(profiled(spark, src), "append")
+      .groupBy("user_id", "event_type")
       .agg(max(col("n")).as("n"))
       .orderBy("user_id", "event_type")
   }

@@ -17,9 +17,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * is ONE long per user (bounded by user cardinality, never stream
   * length), and a production deploy would add `TTLConfig` so idle users'
   * counters expire instead of accumulating forever. The engine requires
-  * the RocksDB state store for this operator, so [[streamed]] scopes the
-  * provider conf around the run (start() reads it once; the session's
-  * default store is restored after).
+  * the RocksDB state store for this operator, which
+  * [[EventStreams.drainToFiles]] picks from the plan for the run.
   *
   * Determinism: the quota is defined over event_id order (q152's window
   * key), but the engine does not guarantee intra-key row order within a
@@ -80,9 +79,7 @@ object RateLimitStream {
     import spark.implicits._
     val in = EventStreams.eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_id")).as[EventIn]
-    val out = SessionTimers.withRocksDb(spark) {
-      EventStreams.drainToFiles(limited(spark, in), "append")
-    }
-    out.select("event_id", "user_id", "k", "throttled").orderBy("event_id")
+    EventStreams.drainToFiles(limited(spark, in), "append")
+      .select("event_id", "user_id", "k", "throttled").orderBy("event_id")
   }
 }

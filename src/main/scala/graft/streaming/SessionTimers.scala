@@ -93,13 +93,8 @@ object SessionTimers {
     }
   }
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Wire the processor over a (user_id, ts) stream: event-time
-    * watermark (0s — the fixture log is in order), RocksDB store scoped
-    * around the caller's run like [[RateLimitStream.streamed]]. */
+    * watermark (0s — the fixture log is in order). */
   def sessions(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
     events
@@ -112,9 +107,12 @@ object SessionTimers {
       .toDF()
   }
 
-  /** Run `body` with the RocksDB provider the new API requires. */
+  /** Run `body` with the RocksDB provider the new API requires — for a
+    * `transformWithState` stream run by its own `writeStream`;
+    * [[EventStreams.drainToFiles]] picks the provider from the plan. */
   def withRocksDb[A](spark: SparkSession)(body: => A): A =
-    EventStreams.withConfs(spark, ProviderKey -> RocksDbProvider)(body)
+    EventStreams.withConfs(spark,
+      EventStreams.ProviderKey -> EventStreams.RocksDbProvider)(body)
 
   /** q205: the events log through the timer sessionizer (real engine
     * path — RocksDB store, event-time watermark, the no-data final
@@ -125,10 +123,8 @@ object SessionTimers {
     * event time) passed its idle deadline. */
   def streamedSessions(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = EventStreams.eventsStream(spark, sfDir).select("user_id", "ts")
-    val out = withRocksDb(spark) {
-      EventStreams.drainToFiles(sessions(spark, ev), "append")
-    }
-    out.select("user_id", "start_ms", "end_ms", "n_events", "closed_by")
+    EventStreams.drainToFiles(sessions(spark, ev), "append")
+      .select("user_id", "start_ms", "end_ms", "n_events", "closed_by")
       .orderBy("user_id", "start_ms")
   }
 }

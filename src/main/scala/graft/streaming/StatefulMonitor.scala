@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,9 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (`frame_reader.py:184-190`), maintained per key across micro-batches.
   *
   * The *operator's* state per key is O(1) (three longs), which is what
-  * scales on an unbounded stream; the run-to-completion harness below
-  * drains through a memory sink and is test-scale only — production
-  * attaches a real sink to the update stream instead.
+  * scales on an unbounded stream.
   */
 object StatefulMonitor {
 
@@ -33,42 +32,24 @@ object StatefulMonitor {
     Iterator.single(MonitorOut(key, s.nSeen, s.nKeyframes, s.maxId))
   }
 
-  /** One monitored run: build the typed stream, apply the state machine
-    * in `mode`, drain through `drain`, and keep each key's FINAL state —
-    * both faces emit one row per key per batch and n_seen strictly
-    * increases per key, so the max-n_seen row is the final state under
-    * multi-batch runs too. Single definition so the update and append
-    * faces cannot drift (the parity spec pins them to each other). */
-  private def run(spark: SparkSession, sfDir: String, mode: OutputMode,
-                  drain: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  /** q63: the per-key state machine in append mode, drained through the
+    * executor-parallel FILE sink, keeping each key's FINAL state — one
+    * row per key per batch is emitted and n_seen strictly increases per
+    * key, so the max-n_seen row is the final state under multi-batch
+    * runs too. The final state per key (count / keyframe count / max id)
+    * is fully deterministic whatever the arrival order, so it
+    * hash-matches a batch GROUP BY. */
+  def perUserCountersToFiles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val monitored = EventStreams.eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_id"))
       .as[EventIn]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout)(update)
-    import org.apache.spark.sql.expressions.Window
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
     val w = Window.partitionBy("user_id").orderBy(col("n_seen").desc)
-    drain(monitored.toDF())
+    EventStreams.drainToFiles(monitored.toDF(), "append")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Append-mode face of the per-key state machine, drained through the
-    * executor-parallel FILE sink — the oracle-gated form (q63): the
-    * FINAL state per key (count / keyframe count / max id) is fully
-    * deterministic whatever the arrival order, so it hash-matches a
-    * batch GROUP BY. */
-  def perUserCountersToFiles(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame =
-    run(spark, sfDir, OutputMode.Append, EventStreams.drainToFiles(_, "append"))
-
-  /** Update-mode face (memory-sink drain — spec/state-inspection scale);
-    * returns the final per-user counters. */
-  def perUserCounters(spark: SparkSession, sfDir: String): Dataset[MonitorOut] = {
-    import spark.implicits._
-    run(spark, sfDir, OutputMode.Update, EventStreams.drain(_, "update"))
-      .as[MonitorOut]
   }
 }

@@ -163,7 +163,7 @@ object StreamingPacking {
     * pos-prefix chunks ([[EventStreams.stagedStream]] pins chunk0 as
     * batch 0 — packing is the one replay where batch order changes the
     * RESULT, since every context id in a shard re-bases), drive them
-    * through `transform` under the RocksDB provider, return the drain. */
+    * through `transform`, return the drain. */
   private def replayTwoBatchesWith(spark: SparkSession, staged: DataFrame,
       transform: Dataset[DocIn] => DataFrame): DataFrame = {
     import spark.implicits._
@@ -171,9 +171,7 @@ object StreamingPacking {
     val src = EventStreams.stagedStream(Seq(
       staged.filter(col("pos") <= mid), staged.filter(col("pos") > mid)))
       .as[DocIn]
-    SessionTimers.withRocksDb(spark) {
-      EventStreams.drainToFiles(transform(src), "append")
-    }
+    EventStreams.drainToFiles(transform(src), "append")
   }
 
   /** q247: q245's staged relation (same helper — the arrival order

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * watermark horizon (sessions still open within `delay` of the stream
   * head), not by the total number of sessions ever seen — the property
   * that keeps an unbounded 100 TB stream's state finite. Rows later than
-  * the watermark are dropped by the engine and counted
-  * ([[EventStreams.drainToFilesCounting]]).
+  * the watermark are dropped by the engine (its
+  * `numRowsDroppedByWatermark` progress metric counts them).
   *
   * On the bounded harness stream the final watermark never passes the
   * last `delay` of event time, so trailing open sessions are withheld —

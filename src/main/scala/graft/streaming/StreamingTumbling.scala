@@ -34,8 +34,8 @@ object StreamingTumbling {
     * growing with every distinct window forever, and the sink appends
     * finalized rows instead of rewriting the whole result per batch.
     * Rows arriving later than `delay` behind the max event time are
-    * dropped by the engine and counted ([[EventStreams
-    * .drainToFilesCounting]]).
+    * dropped by the engine (its `numRowsDroppedByWatermark` progress
+    * metric counts them).
     *
     * Input contract: streaming relation with `ts: timestamp` and
     * `value: double`. */

@@ -17,11 +17,12 @@ class Round14dEvalSpec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf0001)
 
   test("q241 ≡ q229 row-for-row, with ≤ 64 rows of stream state") {
-    val streamed = run("q241_hll_stream").collect()
-    val stats = graft.streaming.EventStreams.lastRunStats.get
-    assert(stats.stateRowsEnd <= 64L,
-      s"register state must be bounded by m=64, saw ${stats.stateRowsEnd}")
-    assert(stats.stateRowsMax <= 64L)
+    val (streamed, progress) =
+      graft.streaming.StreamProgress.during(spark)(run("q241_hll_stream").collect())
+    val stateRows = progress.map(_.stateOperators.map(_.numRowsTotal).sum)
+    assert(stateRows.nonEmpty && stateRows.max > 0L, "the register fold keeps state")
+    assert(stateRows.max <= 64L,
+      s"register state must be bounded by m=64, saw per-batch $stateRows")
     val batch = run("q229_hll_distinct").collect()
     assert(streamed.toSeq === batch.toSeq)
   }

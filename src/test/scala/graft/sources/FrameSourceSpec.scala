@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
 
@@ -20,6 +21,17 @@ class FrameSourceSpec extends SparkSpec {
     val p = df.filter(col("frame_number") === 7).select("payload")
       .as[Array[Byte]].head()
     assert(p.toSeq === graft.sources.v2.FrameSource.payloadFor(7L).toSeq)
+  }
+
+  test("every scan metric re-instantiates by reflection with the same name") {
+    // Spark's SQL status listener re-creates driver-side metrics this way
+    val config = v2.FrameSource.Config(new CaseInsensitiveStringMap(java.util.Map.of()))
+    val metrics = new v2.FrameScan(config, v2.FrameSource.schema, 0L, 10L)
+      .supportedCustomMetrics()
+    assert(metrics.map(_.name()).toSet === Set("skippedContainers", "droppedFrames"))
+    metrics.foreach { m =>
+      assert(m.getClass.getDeclaredConstructor().newInstance().name() === m.name())
+    }
   }
 
   test("column pruning reaches the connector (payload never generated)") {

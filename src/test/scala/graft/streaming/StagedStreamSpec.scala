@@ -6,9 +6,9 @@ import graft.SparkSpec
 
 /** [[EventStreams.stagedStream]] is the one staged micro-batch replay
   * path: micro-batch i carries exactly chunk i, and the replays that
-  * drain through [[EventStreams.drainToFiles]] report their run on
-  * [[EventStreams.lastRunStats]] at the derived state width (2 at the
-  * gate SFs: every staged replay's input is far below 32 MB).
+  * drain through [[EventStreams.drainToFiles]] run at the derived state
+  * width (2 at the gate SFs: every staged replay's input is far below
+  * 32 MB), as Spark's own progress reports it.
   */
 class StagedStreamSpec extends SparkSpec {
 
@@ -32,12 +32,13 @@ class StagedStreamSpec extends SparkSpec {
   for (q <- Seq("q212_mapstate_profile", "q213_liststate_recent",
       "q247_packing_stream", "q251_split_stream")) {
     test(s"$q drains through drainToFiles and reports width 2 at sf0.001") {
-      EventStreams.lastRunStats = None
-      assert(graft.SparkEntry.queries(q)(spark, sf0001).count() > 0)
-      val stats = EventStreams.lastRunStats.getOrElse(
-        fail(s"$q did not run through EventStreams.drainToFiles"))
-      assert(stats.width === 2)
-      assert(stats.batches >= 2, "two staged chunks replay as at least two micro-batches")
+      val (n, progress) = StreamProgress.during(spark) {
+        graft.SparkEntry.queries(q)(spark, sf0001).count()
+      }
+      assert(n > 0)
+      assert(progress.size >= 2, "two staged chunks replay as at least two micro-batches")
+      val widths = progress.flatMap(_.stateOperators.map(_.numShufflePartitions)).toSet
+      assert(widths === Set(2L), s"state width per batch: $widths")
     }
   }
 }

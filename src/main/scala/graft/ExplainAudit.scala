@@ -16,9 +16,10 @@ object ExplainAudit {
         // ONE persisted dense-id relation (a second rangepartitioning
         // exchange per branch = the round-2 4x regression resurfacing)
         "q24_union_reassembly",
-        "q30_minhash_banding", "q32_embedding_knn", "q44_asof_join",
+        "q30_minhash_banding", "q32_embedding_knn",
         "q50_revenue_by_nation", "q56_seeded_segments", "q57_embedding_neardup_srp",
-        // round-5 scale-architecture additions: native as-of exec node,
+        // round-5 scale-architecture additions: native as-of exec node
+        // (q44 runs the same query, so q70 stands for both),
         // double-bloom anti-join, shuffle-free bucketed SMJ, max_by
         // compaction (no Window), partition-pruned scan (PartitionFilters),
         // runtime DPP subquery

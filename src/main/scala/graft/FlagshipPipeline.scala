@@ -10,21 +10,26 @@ import graft.streaming.EventStreams
   * composed end-to-end from graft operators:
   *
   * {{{
-  *   graft-frames source (DataSourceV2, §S1-S4)
+  *   frame source (image dir, container, corpus or stream; BGR rows)
   *     ├─ sink A: record-all           (FrameSaver, main.py:113)
   *     └─ every-Nth keyframe filter    (main.py:116)
-  *          → letterbox pixel kernel   (FrameResizer, main.py:122)
-  *          → stub detector flatMap    (ObjectDetector, main.py:125)
-  *          → conf/class filters       (frame_processing.py:93,103)
-  *          → NMS                      (YOLO-internal post-processing)
+  *          → per keyframe row:
+  *              letterbox pixel kernel (FrameResizer, main.py:122)
+  *              → stub detector        (ObjectDetector, main.py:125)
+  *              → conf/class filters   (frame_processing.py:93,103)
+  *              → per-class NMS        (YOLO-internal post-processing)
+  *          → explode                  (one row per kept box)
   *          → JSON payload sink B      (FrameSender, main.py:134)
   * }}}
   *
   * One cached pass feeds both consumers (§4.1 "single sequential pass
-  * shared by both sinks"). The detector is a deterministic stand-in
-  * (model weights unavailable — SURVEY.md §7.3 non-goals): it derives
-  * boxes from payload bytes, preserving the exact relational shape
-  * (flatMap → threshold → IN-list → NMS) a real model plugs into.
+  * shared by both sinks"). NMS runs inside each keyframe's row, as YOLO
+  * runs it per image: `frame_number` is a key of every source face (the
+  * connector's global index, the image directory's dense id, a stream's
+  * disjoint batches), so one frame is one row and no box ever needs a
+  * regroup. The detector is a deterministic stand-in (model weights
+  * unavailable — SURVEY.md §7.3 non-goals): [[detect]] derives boxes
+  * from payload bytes, and a real model replaces that one function.
   */
 object FlagshipPipeline {
 
@@ -33,24 +38,35 @@ object FlagshipPipeline {
       keyframes + o.keyframes, detectionsSent + o.detectionsSent)
   }
 
-  def run(spark: SparkSession, outDir: String, frames: Long = 3000,
-          keyframeInterval: Int = EventStreams.KeyframeInterval): RunStats = {
-    val srcW = 64
-    val srcH = 48
-    // payload sized as a real frame buffer (srcW*srcH grayscale bytes;
-    // the connector stub emits 64 B, so inflate deterministically)
-    val frameBufUdf = udf((f: Long) =>
-      Array.tabulate(srcW * srcH)(i => ((f * 31 + i) % 256 - 128).toByte))
-    val source = spark.read.format("graft-frames")
-      .option("frames", frames).option("width", srcW).option("height", srcH)
-      .option("numPartitions", 8)
-      .load()
-      .withColumn("payload", frameBufUdf(col("frame_number")))
-      .withColumn("w", lit(srcW)).withColumn("h", lit(srcH))
-    runFromSource(spark, source, outDir, keyframeInterval, channels = 1)
+  /** Letterbox side of the detector input. */
+  private[graft] val Target = 64
+  /** Interleaved BGR: every source face decodes to 3 channels. */
+  private val Channels = 3
+
+  /** Stub detector over one letterboxed keyframe: 0..3 boxes, each with
+    * its class id, derived from buffer stats. Stats sample the image
+    * CENTER (first channel = B) — the letterbox pad rows are black. */
+  private[graft] def detect(frame: Long, resized: Array[Byte]): Seq[(BBoxOps.Box, Int)] = {
+    val c = (Target * Target / 2 + Target / 2) * Channels
+    (0 until (resized(c) + 256) % 4).map { i =>
+      val x0 = (frame * 13 + i * 97) % (Target - 20)
+      val y0 = (frame * 29 + i * 53) % (Target - 20)
+      (BBoxOps.Box(frame, frame * 10 + i, x0, y0, x0 + 12 + i, y0 + 12 + i,
+        ((resized(c + i + 1) + 256) % 256) / 255.0), ((frame + i) % 5).toInt)
+    }
   }
 
-  /** The same fan-out fed from an S1 image DIRECTORY — the reference's
+  /** YOLO's post-processing on one frame's detections: confidence ≥ 0.4
+    * and class ∈ {0, 1, 2} (frame_processing.py:93,103), then greedy NMS
+    * within each class (YOLO suppresses within a class, not across). */
+  private def postProcess(dets: Seq[(BBoxOps.Box, Int)]): Seq[(BBoxOps.Box, Int)] =
+    dets.filter { case (b, cls) => b.confidence >= 0.4 && Set(0, 1, 2)(cls) }
+      .groupBy(_._2).toSeq
+      .flatMap { case (cls, ds) =>
+        BBoxOps.greedyNms(ds.map(_._1), iouThreshold = 0.5).map(_ -> cls)
+      }
+
+  /** The fan-out fed from an S1 image DIRECTORY — the reference's
     * primary demo path (`main.py:74-86`: a folder of numbered frames).
     * [[graft.sources.Sources.imageDir]] supplies the ordering (digit run
     * in the stem, nulls last) and the stop-on-first-unreadable cut, so a
@@ -77,7 +93,7 @@ object FlagshipPipeline {
         expr("1704067200000000 + frame_number * 1000000 div 30").as("ts_us"),
         col("decoded.pixels").as("payload"),
         col("decoded.width").as("w"), col("decoded.height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval, channels = 3)
+    runFromSource(spark, source, outDir, keyframeInterval)
   }
 
   /** The same fan-out fed from a REAL video container — the reference's
@@ -98,7 +114,7 @@ object FlagshipPipeline {
       .load()
       .select(col("frame_number"), col("ts_us"), col("payload"),
         col("width").as("w"), col("height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval, channels = 3)
+    runFromSource(spark, source, outDir, keyframeInterval)
   }
 
   /** The full D1 fan-out over a CONTAINER CORPUS with a VIDEO record-all
@@ -120,7 +136,7 @@ object FlagshipPipeline {
       .load()
       .select(col("frame_number"), col("ts_us"), col("payload"),
         col("width").as("w"), col("height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval, channels = 3,
+    runFromSource(spark, source, outDir, keyframeInterval,
       recordAll = df => graft.multimodal.VideoSink.saveAviPartitioned(
         df, s"$outDir/all_avi", codec = "raw", numParts = numParts))
   }
@@ -155,24 +171,21 @@ object FlagshipPipeline {
                               keyframeInterval: Int,
                               perBatch: scala.collection.mutable.Map[Long, RunStats]): Unit =
     perBatch(batchId) = runFromSource(batch.sparkSession, batch, outDir, keyframeInterval,
-      channels = 3, leaf = s"/__batch=$batchId")
+      leaf = s"/__batch=$batchId")
 
   /** Source-agnostic flagship body: any (frame_number, ts_us, payload,
-    * w, h) relation with row-major `channels`-interleaved byte payloads
-    * fans out to both sinks. Dimensions are per-ROW (a directory of mixed
-    * image sizes letterboxes each to the same square, like the
-    * reference). `recordAll` overrides sink A (the default parquet
-    * record-all) — the corpus face substitutes the partitioned video
-    * sink; it returns the frames-saved count. `leaf` names the sinks'
-    * sub-directory (a micro-batch's `/__batch=<id>`; empty in batch). */
+    * w, h) relation with row-major BGR-interleaved byte payloads, one
+    * row per frame, fans out to both sinks. Dimensions are per-ROW (a
+    * directory of mixed image sizes letterboxes each to the same square,
+    * like the reference). `recordAll` overrides sink A (the default
+    * parquet record-all) — the corpus face substitutes the partitioned
+    * video sink; it returns the frames-saved count. `leaf` names the
+    * sinks' sub-directory (a micro-batch's `/__batch=<id>`; empty in
+    * batch). */
   private def runFromSource(spark: SparkSession, source0: DataFrame,
                             outDir: String, keyframeInterval: Int,
-                            channels: Int,
                             recordAll: DataFrame => Long = null,
                             leaf: String = ""): RunStats = {
-    import spark.implicits._
-
-    val target = 64
     val source = source0.persist() // one decode pass, two consumers (main.py:109-134)
 
     // every count comes from an Observation on the write that produces
@@ -193,45 +206,16 @@ object FlagshipPipeline {
         seen(saved)
       }
 
-    // sampled branch: letterbox -> detect -> filter -> NMS -> send
-    val letterboxUdf = udf((p: Array[Byte], w: Int, h: Int) =>
-      LetterboxKernel.letterbox(p, w, h, target, channels))
-    val detectUdf = udf((frame: Long, p: Array[Byte]) => {
-      // stub detector: 0..3 boxes derived from buffer stats; a real model
-      // replaces this lambda and nothing else changes. Stats sample the
-      // image CENTER (first channel = B for BGR) — the letterbox pad
-      // rows are black.
-      val c = (target * target / 2 + target / 2) * channels
-      val n = ((p(c) + 256) % 4)
-      (0 until n).map { i =>
-        val x0 = ((frame * 13 + i * 97) % (target - 20)).toInt
-        val y0 = ((frame * 29 + i * 53) % (target - 20)).toInt
-        (i, x0, y0, x0 + 12 + i, y0 + 12 + i,
-          ((p(c + i + 1) + 256) % 256) / 255.0, ((frame + i) % 5).toInt)
-      }
-    })
-
+    // sampled branch: letterbox -> detect -> filter -> NMS inside each
+    // keyframe row, then one row per kept box
+    val keptUdf = udf((frame: Long, p: Array[Byte], w: Int, h: Int) =>
+      postProcess(detect(frame, LetterboxKernel.letterbox(p, w, h, Target, Channels))))
     val (keyframes, keyframesSeen) =
       counted(source.filter(col("frame_number") % keyframeInterval === 0))
-    val detections = keyframes
-      .withColumn("resized", letterboxUdf(col("payload"), col("w"), col("h")))
-      .select(col("frame_number"), col("ts_us"),
-        explode(detectUdf(col("frame_number"), col("resized"))).as("d"))
-      .select(col("frame_number").as("frame"),
-        (col("frame_number") * 10 + col("d._1")).as("box_id"),
-        col("d._2").cast("long").as("x0"), col("d._3").cast("long").as("y0"),
-        col("d._4").cast("long").as("x1"), col("d._5").cast("long").as("y1"),
-        col("d._6").as("confidence"), col("d._7").as("class_id"))
-      .filter(col("confidence") >= 0.4 && col("class_id").isin(0, 1, 2))
-
-    // per-class NMS (YOLO suppresses within a class, not across): pack
-    // (frame, class) into the group key, then unpack for the sink
-    val perClassKey = detections
-      .withColumn("frame", col("frame") * 5 + col("class_id"))
-      .drop("class_id")
-    val kept = BBoxOps.nms(spark, perClassKey, iouThreshold = 0.5)
-      .withColumn("class_id", col("frame") % 5)
-      .withColumn("frame", expr("frame div 5")) // integer div: no 2^53 double cliff
+    val kept = keyframes
+      .select(explode(keptUdf(col("frame_number"), col("payload"), col("w"), col("h")))
+        .as("d"))
+      .select(col("d._1.*"), col("d._2").as("class_id"))
 
     // sink B: JSON payloads, confidence rounded to 4dp like the sender
     // (frame_processing.py:236)

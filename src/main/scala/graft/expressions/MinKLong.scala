@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed bounded min-k aggregator over integer priorities — the exact
@@ -38,7 +38,10 @@ class MinKLong(k: Int) extends Aggregator[(Long, Long), Seq[(Long, Long)], Seq[(
 
   override def finish(r: Seq[(Long, Long)]): Seq[(Long, Long)] = trim(r)
 
-  override def bufferEncoder: Encoder[Seq[(Long, Long)]] =
+  // derived once, on the driver that builds the aggregator: Spark asks
+  // for the encoders again inside tasks, and TypeTag reflection on an
+  // executor thread is not thread-safe
+  override val bufferEncoder: Encoder[Seq[(Long, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
 
   override def outputEncoder: Encoder[Seq[(Long, Long)]] = bufferEncoder

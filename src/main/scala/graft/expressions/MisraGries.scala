@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Misra–Gries frequent-items sketch as a typed partial aggregate — the
@@ -59,7 +59,10 @@ class MisraGries(k: Int) extends Aggregator[String, Map[String, Long], Map[Strin
 
   override def finish(m: Map[String, Long]): Map[String, Long] = m
 
-  override def bufferEncoder: Encoder[Map[String, Long]] =
+  // derived once, on the driver that builds the aggregator: Spark asks
+  // for the encoders again inside tasks, and TypeTag reflection on an
+  // executor thread is not thread-safe
+  override val bufferEncoder: Encoder[Map[String, Long]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
 
   override def outputEncoder: Encoder[Map[String, Long]] = bufferEncoder

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed bounded top-k aggregator (the §2.5 UDAF surface).
@@ -38,7 +38,10 @@ class TopK(k: Int) extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(
 
   override def finish(r: Seq[(Double, Long)]): Seq[(Double, Long)] = trim(r)
 
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
+  // derived once, on the driver that builds the aggregator: Spark asks
+  // for the encoders again inside tasks, and TypeTag reflection on an
+  // executor thread is not thread-safe
+  override val bufferEncoder: Encoder[Seq[(Double, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
 
   override def outputEncoder: Encoder[Seq[(Double, Long)]] = bufferEncoder

@@ -1,25 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** As-of join: for every left row, the single latest right row of the
   * same key with `right.ts <= left.ts` — the canonical stream-processing
   * lookup (sensor/telemetry enrichment) that Spark has no native operator
-  * for.
+  * for. Right rows at the left row's own timestamp are visible to it;
+  * ties among right rows sharing (key, ts) resolve to the greatest
+  * `rightOrder`, making "latest" deterministic.
   *
-  * Per the preference order (compose > custom plan), this is the
-  * composition form: tag both sides, union, and take a running
-  * `last(payload, ignoreNulls)` over a window partitioned by key and
-  * ordered by (ts, side, order-col). One shuffle per side, merge happens
-  * inside each key partition — the same dataflow a dedicated sort-merge
-  * as-of operator would produce, with Catalyst/Tungsten running it.
-  *
-  * Right rows sort before left rows at equal timestamps (side 0 < 1), so
-  * a same-instant right row is visible to its left row; ties among right
-  * rows resolve by `rightOrder` ascending, making "latest" deterministic.
+  * Executed by the NATIVE operator ([[graft.plans.AsOfJoinPlan]] →
+  * AsOfJoinExec): both sides co-partitioned on the key and sorted, then
+  * one sort-merge walk — no tagged union, no window state. The composed
+  * union + keyed-window form it replaced is frozen in `src/test`
+  * (`AsOfReferenceJoin`) as the reference `AsOfJoinSpec` compares against.
   */
 object AsOfJoin {
 
@@ -28,43 +23,11 @@ object AsOfJoin {
     *                   and the payload columns to carry over
     * @param rightOrder tie-break among right rows sharing (key, ts);
     *                   the greatest value wins
-    * @return left rows + nullable right payload columns */
-  def lastAtOrBefore(left: DataFrame, right: DataFrame,
-                     key: String, ts: String, rightOrder: String): DataFrame = {
-    val payloadCols = right.columns.filterNot(c => c == key || c == ts).toSeq
-    val payloadType = StructType(payloadCols.map(c => right.schema(c)).toArray)
-    val leftCols = left.columns.toSeq
-    val leftType = StructType(left.schema.fields)
-
-    val rTagged = right.select(
-      col(key), col(ts), lit(0).as("__side"),
-      col(rightOrder).as("__ord"),
-      struct(payloadCols.map(col): _*).as("__payload"),
-      lit(null).cast(leftType).as("__lrow"))
-    val lTagged = left.select(
-      col(key), col(ts), lit(1).as("__side"),
-      lit(null).cast(right.schema(rightOrder).dataType).as("__ord"),
-      lit(null).cast(payloadType).as("__payload"),
-      struct(leftCols.map(col): _*).as("__lrow"))
-
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(ts).asc, col("__side").asc, col("__ord").asc_nulls_last)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    rTagged.unionAll(lTagged)
-      .withColumn("__last", last(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(
-        (leftCols.map(c => col(s"__lrow.$c").as(c)) ++
-          payloadCols.map(c => col(s"__last.$c").as(c))): _*)
-  }
-
-  /** [[lastAtOrBefore]] through the NATIVE operator
-    * ([[graft.plans.AsOfJoinPlan]] → AsOfJoinExec): identical semantics
-    * and column contract, but executed as a dedicated sort-merge walk —
-    * no tagged union, no window state. Installs the planner strategy +
-    * pushdown rule on the session (idempotent) and hands the resolved
-    * child plans to the custom logical node. */
+    * @return left rows + nullable right payload columns
+    *
+    * Installs the planner strategy + pushdown rule on the session
+    * (idempotent) and hands the resolved child plans to the custom
+    * logical node. */
   def lastAtOrBeforeNative(left: DataFrame, right: DataFrame,
                            key: String, ts: String, rightOrder: String): DataFrame = {
     val spark = left.sparkSession

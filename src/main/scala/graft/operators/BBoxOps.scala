@@ -25,33 +25,33 @@ object BBoxOps {
   final case class Box(frame: Long, box_id: Long, x0: Long, y0: Long,
                        x1: Long, y1: Long, confidence: Double)
 
-  /** Greedy non-max suppression, per frame: walk boxes by descending
-    * confidence, keep a box iff its IoU with every already-kept box is
-    * below `iouThreshold`.
-    *
-    * Inherently sequential *within* a frame but embarrassingly parallel
-    * *across* frames → `groupByKey(frame).flatMapGroups`, the idiomatic
-    * Spark shape for per-group sequential algorithms. State per group is
-    * just the kept boxes (bounded by detections-per-frame, tiny). */
+  /** Greedy non-max suppression over one group of boxes: walk them by
+    * descending confidence (ties: smaller `box_id` first), keep a box iff
+    * its IoU with every already-kept box is below `iouThreshold`. The one
+    * greedy walk: the flagship runs it inside each keyframe's row, and
+    * [[nms]] runs it per frame group. */
+  def greedyNms(boxes: Seq[Box], iouThreshold: Double): Seq[Box] =
+    boxes.sortBy(b => (-b.confidence, b.box_id)).foldLeft(Vector.empty[Box]) { (kept, b) =>
+      val overlaps = kept.exists { k =>
+        val iw = math.max(math.min(b.x1, k.x1) - math.max(b.x0, k.x0), 0L)
+        val ih = math.max(math.min(b.y1, k.y1) - math.max(b.y0, k.y0), 0L)
+        val inter = iw * ih
+        val union = (b.x1 - b.x0) * (b.y1 - b.y0) + (k.x1 - k.x0) * (k.y1 - k.y0) - inter
+        inter.toDouble / union >= iouThreshold
+      }
+      if (overlaps) kept else kept :+ b
+    }
+
+  /** [[greedyNms]] per frame over a relation of boxes whose frames span
+    * rows: inherently sequential *within* a frame but embarrassingly
+    * parallel *across* frames → `groupByKey(frame).flatMapGroups`, the
+    * idiomatic Spark shape for per-group sequential algorithms. State per
+    * group is just the kept boxes (bounded by detections-per-frame). */
   def nms(spark: SparkSession, boxes: DataFrame, iouThreshold: Double): DataFrame = {
     import spark.implicits._
     boxes.as[Box]
       .groupByKey(_.frame)
-      .flatMapGroups { (_, it) =>
-        val sorted = it.toIndexedSeq.sortBy(b => (-b.confidence, b.box_id))
-        val kept = scala.collection.mutable.ArrayBuffer.empty[Box]
-        for (b <- sorted) {
-          val overlaps = kept.exists { k =>
-            val iw = math.max(math.min(b.x1, k.x1) - math.max(b.x0, k.x0), 0L)
-            val ih = math.max(math.min(b.y1, k.y1) - math.max(b.y0, k.y0), 0L)
-            val inter = iw * ih
-            val union = (b.x1 - b.x0) * (b.y1 - b.y0) + (k.x1 - k.x0) * (k.y1 - k.y0) - inter
-            inter.toDouble / union >= iouThreshold
-          }
-          if (!overlaps) kept += b
-        }
-        kept
-      }
+      .flatMapGroups((_, it) => greedyNms(it.toIndexedSeq, iouThreshold))
       .toDF()
   }
 

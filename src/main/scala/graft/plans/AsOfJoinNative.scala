@@ -11,13 +11,13 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native as-of join: the §2.5(c) whole-operator chain — a custom
   * `LogicalPlan` + optimizer `Rule` + `SparkStrategy` + `SparkPlan` —
-  * for the one operator the composed form (operators/AsOfJoin: union +
-  * keyed cumulative window) pays real overhead on: the window
-  * materializes a tagged union of BOTH sides and runs `last(ignoreNulls)`
-  * over every row, while a dedicated sort-merge walk streams each side
-  * once and keeps O(1) state per key.
+  * for the one operator the composed form (union + keyed cumulative
+  * window, frozen in `src/test` as `AsOfReferenceJoin`) pays real
+  * overhead on: the window materializes a tagged union of BOTH sides
+  * and runs `last(ignoreNulls)` over every row, while a dedicated
+  * sort-merge walk streams each side once and keeps O(1) state per key.
   *
-  * Semantics (identical to [[graft.operators.AsOfJoin.lastAtOrBefore]]):
+  * Semantics (the composed form's, row for row — `AsOfJoinSpec`):
   * for every left row, the single right row of the same key with
   * `right.ts <= left.ts`, latest (ts, rightOrder) winning; left rows
   * with no match keep null payload. NULL keys group together (matching

@@ -110,7 +110,7 @@ object SpatialQueries {
         |  TRUE AS within_3rsd FROM events""".stripMargin,
     // Greedy NMS as a recursive CTE: one walk row per (frame, rank); the
     // kept-box list rides along as recursion state. Rank order matches
-    // BBoxOps.nms exactly ((-confidence, box_id)); recursion depth is
+    // BBoxOps.greedyNms exactly ((-confidence, box_id)); recursion depth is
     // bounded by detections-per-frame (50), frames advance independently.
     "q37_nms" ->
       """WITH RECURSIVE boxes AS (

@@ -16,6 +16,22 @@ import graft.operators.AsOfJoin
 object TemporalQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** q44/q70: every event with its user's latest purchase at-or-before
+    * it, through the NATIVE as-of operator (operators/AsOfJoin →
+    * plans/AsOfJoinNative: custom LogicalPlan -> optimizer Rule ->
+    * SparkStrategy -> sort-merge-walk SparkPlan, no tagged union).
+    * AsOfJoinSpec pins it row for row against the composed union +
+    * keyed-window form frozen in src/test. */
+  private def latestPurchaseAsOf(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.events(s, d)
+    val left = e.select("event_id", "user_id", "ts")
+    val right = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"),
+        col("event_id").as("purchase_id"), col("value").as("purchase_value"))
+    AsOfJoin.lastAtOrBeforeNative(left, right, "user_id", "ts", "purchase_id")
+      .orderBy("event_id")
+  }
+
   val queries: Map[String, Q] = Map(
     // Sliding 2-minute window, 1-minute slide: every event lands in two
     // windows; Spark's window() generator expands them, the aggregation
@@ -185,33 +201,13 @@ object TemporalQueries {
     },
 
     // As-of join: each event enriched with the user's latest purchase
-    // at-or-before it (telemetry-lookup shape; operator composed in
-    // operators/AsOfJoin — union + keyed cumulative window).
-    "q44_asof_join" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      val left = e.select("event_id", "user_id", "ts")
-      val right = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      AsOfJoin.lastAtOrBefore(left, right, "user_id", "ts", "purchase_id")
-        .orderBy("event_id")
-    },
+    // at-or-before it (telemetry-lookup shape).
+    "q44_asof_join" -> latestPurchaseAsOf _,
 
-    // The same as-of semantics through the NATIVE operator chain
-    // (plans/AsOfJoinNative: custom LogicalPlan -> optimizer Rule ->
-    // SparkStrategy -> sort-merge-walk SparkPlan). Oracled identically
-    // to q44, so the two forms are cross-checked by the gate itself;
-    // AsOfJoinSpec additionally asserts row-level parity and the
-    // PlanAudit pins the exec node + left-filter pushdown.
-    "q70_asof_native" -> { (s, d) =>
-      val e = Tables.events(s, d)
-      val left = e.select("event_id", "user_id", "ts")
-      val right = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      AsOfJoin.lastAtOrBeforeNative(left, right, "user_id", "ts", "purchase_id")
-        .orderBy("event_id")
-    },
+    // The same as-of query as q44, kept as the PlanAudit fixture of the
+    // native operator chain: PlanAuditSpec pins the exec node +
+    // left-filter pushdown on it.
+    "q70_asof_native" -> latestPurchaseAsOf _,
 
     // TIMER-CLOSED SESSIONS (q205) — q40's sessionization through the
     // registerTimer / handleExpiredTimer half of Spark 4's new state
@@ -393,8 +389,7 @@ object TemporalQueries {
         |  ON f.user_id = d.user_id AND f.ts_us >= d.v_from AND f.ts_us < d.v_to
         |ORDER BY f.event_id""".stripMargin,
     "q44_asof_join" -> AsOfOracleSql,
-    // composed and native as-of forms share one oracle: the gate itself
-    // cross-checks the two implementations against the same SQL truth.
+    // q44 and q70 are one as-of query: one oracle
     "q70_asof_native" -> AsOfOracleSql,
     // q205: gaps-and-islands sessions + the exact close rule — every
     // non-trailing session is 'gap'; a trailing session is 'timer' iff

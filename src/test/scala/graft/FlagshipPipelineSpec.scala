@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.LetterboxKernel
+import graft.operators.{BBoxOps, LetterboxKernel}
 
 class FlagshipPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -67,26 +67,6 @@ class FlagshipPipelineSpec extends SparkSpec {
       "BGR channel order must mirror cv2.imread")
   }
 
-  test("flagship pipeline: record-all sink, sampled branch, NMS'd JSON payloads") {
-    val out = Files.createTempDirectory("graft_flagship").toString
-    val stats = FlagshipPipeline.run(spark, out, frames = 1500)
-    assert(stats.framesSaved === 1500L)
-    assert(stats.keyframes === 50L) // every 30th of 1500
-    assert(stats.detectionsSent > 0L)
-    assert(stats.detectionsSent <= stats.keyframes * 3, "at most 3 boxes/frame survive")
-    // sink B payloads are valid JSON carrying the sender's fields
-    val sent = spark.read.parquet(s"$out/sent")
-    val parsed = sent
-      .select(get_json_object(col("payload"), "$.frame_number").cast("long").as("f"),
-        get_json_object(col("payload"), "$.detection.confidence").cast("double").as("c"))
-    assert(parsed.filter(col("f").isNull || col("c").isNull).count() === 0L)
-    assert(parsed.filter(col("c") < 0.4).count() === 0L, "confidence threshold held")
-    // record-all payloads are full frame buffers
-    val sizes = spark.read.parquet(s"$out/all")
-      .select(length(col("payload"))).distinct().as[Int].collect()
-    assert(sizes.toSeq === Seq(64 * 48))
-  }
-
   // ONE set of 12 JPEG frames (64x48) and the MJPEG/AVI muxing them,
   // shared by the ingest cross-check and the streaming cases below
   private val w = 64
@@ -132,6 +112,49 @@ class FlagshipPipelineSpec extends SparkSpec {
 
   private def rows(out: String, sub: String, order: String) =
     spark.read.parquet(s"$out/$sub").drop("__batch").orderBy(order).collect().toSeq
+
+  test("flagship over AVI: record-all sink, sampled branch, NMS'd JSON payloads") {
+    val out = tmpOut("graft_flagship")
+    val stats = FlagshipPipeline.runFromAvi(spark, avi, out, keyframeInterval = 3)
+    assert(stats.framesSaved === 12L)
+    assert(stats.keyframes === 4L) // every 3rd of 12
+    assert(stats.detectionsSent > 0L)
+    assert(stats.detectionsSent <= stats.keyframes * 3, "at most 3 boxes/frame survive")
+    // sink B payloads are valid JSON carrying the sender's fields
+    def field(path: String) = get_json_object(col("payload"), path)
+    val parsed = spark.read.parquet(s"$out/sent").select(
+      field("$.frame_number").cast("long").as("frame"),
+      field("$.detection.class_id").cast("int").as("class_id"),
+      field("$.detection.x0").cast("long").as("x0"), field("$.detection.y0").cast("long").as("y0"),
+      field("$.detection.x1").cast("long").as("x1"), field("$.detection.y1").cast("long").as("y1"),
+      field("$.detection.confidence").cast("double").as("confidence"))
+    assert(parsed.filter(parsed.columns.map(col(_).isNull).reduce(_ || _)).count() === 0L)
+    assert(parsed.filter(col("confidence") < 0.4).count() === 0L, "confidence threshold held")
+    // record-all payloads are full BGR frame buffers
+    val sizes = spark.read.parquet(s"$out/all")
+      .select(length(col("payload"))).distinct().as[Int].collect()
+    assert(sizes.toSeq === Seq(w * h * 3))
+
+    // parity with the exchange-based form: the detector's pre-NMS boxes,
+    // filtered and keyed frame * 5 + class, through the BBoxOps.nms face
+    val packed = flagshipColumns(spark.read.format("graft-frames").option("path", avi).load())
+      .filter(col("frame_number") % 3 === 0)
+      .select("frame_number", "payload", "w", "h").collect().toSeq
+      .flatMap { r =>
+        val f = r.getLong(0)
+        val resized = LetterboxKernel.letterbox(r.getAs[Array[Byte]](1), r.getInt(2), r.getInt(3),
+          FlagshipPipeline.Target, 3)
+        FlagshipPipeline.detect(f, resized).collect {
+          case (b, cls) if b.confidence >= 0.4 && Set(0, 1, 2)(cls) => b.copy(frame = f * 5 + cls)
+        }
+      }
+    val viaFace = BBoxOps.nms(spark, packed.toDF(), iouThreshold = 0.5)
+      .select(expr("frame div 5").as("frame"), expr("cast(frame % 5 as int)").as("class_id"),
+        col("x0"), col("y0"), col("x1"), col("y1"), round(col("confidence"), 4).as("confidence"))
+    val expected = viaFace.as[(Long, Int, Long, Long, Long, Long, Double)].collect()
+    assert(expected.length.toLong === stats.detectionsSent)
+    assert(parsed.as[(Long, Int, Long, Long, Long, Long, Double)].collect().toSet === expected.toSet)
+  }
 
   test("flagship from a REAL MJPEG/AVI container equals the image-dir run on the same JPEGs") {
     // ONE set of JPEG bytes, ingested two ways: numbered files in a

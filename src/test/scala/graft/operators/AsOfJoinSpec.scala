@@ -24,7 +24,7 @@ class AsOfJoinSpec extends SparkSpec {
       ("B", t(40), 301L, 3.5)
     ).toDF("user_id", "ts", "purchase_id", "purchase_value")
 
-    val got = AsOfJoin.lastAtOrBefore(left, right, "user_id", "ts", "purchase_id")
+    val got = AsOfReferenceJoin.lastAtOrBefore(left, right, "user_id", "ts", "purchase_id")
       .select("event_id", "purchase_id")
       .as[(Long, Option[Long])].collect().toMap
     assert(got(1L) === None)
@@ -54,7 +54,7 @@ class AsOfJoinSpec extends SparkSpec {
     val left = e.select("event_id", "user_id", "ts")
     val right = e.filter($"event_type" === "purchase")
       .select($"user_id", $"ts", $"event_id".as("purchase_id"), $"value".as("purchase_value"))
-    val composed = AsOfJoin.lastAtOrBefore(left, right, "user_id", "ts", "purchase_id")
+    val composed = AsOfReferenceJoin.lastAtOrBefore(left, right, "user_id", "ts", "purchase_id")
       .orderBy("event_id").collect().toSeq
     val native = AsOfJoin.lastAtOrBeforeNative(left, right, "user_id", "ts", "purchase_id")
       .orderBy("event_id").collect().toSeq

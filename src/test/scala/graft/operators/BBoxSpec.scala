@@ -7,13 +7,14 @@ import graft.SparkSpec
 class BBoxSpec extends SparkSpec {
   import spark.implicits._
 
-  private val boxes = Seq(
+  private val fixture = Seq(
     //               frame, id,  x0,  y0,  x1,  y1, conf
     BBoxOps.Box(0L, 1L, 0L, 0L, 100L, 100L, 0.9),
     BBoxOps.Box(0L, 2L, 10L, 10L, 110L, 110L, 0.8), // IoU with 1 ~ 0.68 -> suppressed
     BBoxOps.Box(0L, 3L, 200L, 200L, 300L, 300L, 0.7), // disjoint -> kept
     BBoxOps.Box(1L, 4L, 0L, 0L, 50L, 50L, 0.5) // other frame -> untouched
-  ).toDF()
+  )
+  private val boxes = fixture.toDF()
 
   test("iou: known overlaps") {
     val got = boxes.as("a").join(boxes.as("b"),
@@ -33,6 +34,14 @@ class BBoxSpec extends SparkSpec {
     val kept = BBoxOps.nms(spark, boxes, 0.5)
       .select("box_id").as[Long].collect().toSet
     assert(kept === Set(1L, 3L, 4L))
+    // the kernel the face runs, on the frame-0 group alone
+    assert(BBoxOps.greedyNms(fixture.filter(_.frame == 0L), 0.5).map(_.box_id) === Seq(1L, 3L))
+    // a confidence tie walks the smaller box_id first, as q37's oracle
+    // ranks (confidence DESC, box_id): box 6 is kept, its twin 7 dropped
+    val tie = Seq(BBoxOps.Box(5L, 7L, 0L, 0L, 40L, 40L, 0.6),
+      BBoxOps.Box(5L, 6L, 2L, 2L, 42L, 42L, 0.6))
+    assert(BBoxOps.greedyNms(tie, 0.5).map(_.box_id) === Seq(6L))
+    assert(BBoxOps.greedyNms(Seq.empty, 0.5).isEmpty)
   }
 
   test("nms invariant on real-shaped data: kept boxes are mutually below threshold") {
@@ -49,5 +58,9 @@ class BBoxSpec extends SparkSpec {
       .filter(col("iou") >= 0.5)
       .count()
     assert(violations === 0L)
+    // the face equals the kernel applied per frame
+    val perFrame = synth.as[BBoxOps.Box].collect().toSeq.groupBy(_.frame).values
+      .flatMap(BBoxOps.greedyNms(_, 0.5)).toSet
+    assert(kept.as[BBoxOps.Box].collect().toSet === perFrame)
   }
 }

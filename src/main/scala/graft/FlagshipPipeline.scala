@@ -11,7 +11,7 @@ import graft.streaming.EventStreams
   *
   * {{{
   *   frame source (image dir, container, corpus or stream; BGR rows)
-  *     ├─ sink A: record-all           (FrameSaver, main.py:113)
+  *     ├─ sink A: record-all video     (FrameSaver, main.py:113)
   *     └─ every-Nth keyframe filter    (main.py:116)
   *          → per keyframe row:
   *              letterbox pixel kernel (FrameResizer, main.py:122)
@@ -23,13 +23,21 @@ import graft.streaming.EventStreams
   * }}}
   *
   * One cached pass feeds both consumers (§4.1 "single sequential pass
-  * shared by both sinks"). NMS runs inside each keyframe's row, as YOLO
-  * runs it per image: `frame_number` is a key of every source face (the
-  * connector's global index, the image directory's dense id, a stream's
-  * disjoint batches), so one frame is one row and no box ever needs a
-  * regroup. The detector is a deterministic stand-in (model weights
-  * unavailable — SURVEY.md §7.3 non-goals): [[detect]] derives boxes
-  * from payload bytes, and a real model replaces that one function.
+  * shared by both sinks"). Sink A is the same on every face: raw
+  * (lossless) partitioned AVI through
+  * [[graft.multimodal.VideoSink.saveAviPartitioned]], which keeps frame
+  * order and the exact BGR bytes. Each part binds the reference's
+  * `DEFAULT_FPS` = 25, so the saved clock is not the source's `ts_us`;
+  * a frame whose dims differ from its part's first frame drops and is
+  * not counted as saved (frame_processing.py:171-178).
+  *
+  * NMS runs inside each keyframe's row, as YOLO runs it per image:
+  * `frame_number` is a key of every source face (the connector's global
+  * index, the image directory's dense id, a stream's disjoint batches),
+  * so one frame is one row and no box ever needs a regroup. The
+  * detector is a deterministic stand-in (model weights unavailable —
+  * SURVEY.md §7.3 non-goals): [[detect]] derives boxes from payload
+  * bytes, and a real model replaces that one function.
   */
 object FlagshipPipeline {
 
@@ -87,46 +95,22 @@ object FlagshipPipeline {
         derived = Seq("decoded" ->
           graft.multimodal.ImageCodec.decodeUdf(col("content"))),
         unreadable = col("decoded").isNull)
-      .select(col("frame_number"),
-        // same 30 fps synthetic clock as the connector stub: image files
-        // carry no timestamps (integer div — no 2^53 double cliff)
-        expr("1704067200000000 + frame_number * 1000000 div 30").as("ts_us"),
-        col("decoded.pixels").as("payload"),
+      .select(col("frame_number"), col("decoded.pixels").as("payload"),
         col("decoded.width").as("w"), col("decoded.height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval)
+    runFromSource(source, outDir, keyframeInterval)
   }
 
-  /** The same fan-out fed from a REAL video container — the reference's
+  /** The same fan-out fed from REAL video containers — the reference's
     * primary production path (`main.py:88-96`: point the pipeline at an
-    * `.mp4`/RTSP url). Here the container is MJPEG/AVI, decoded
-    * entirely in-JVM ([[graft.multimodal.AviCodec]]: RIFF chunk walk →
-    * per-frame JPEG → ImageIO → BGR), flowing through the S2
-    * DataSourceV2 connector — container-probed metadata, partition-
-    * parallel decode, pushdown/pruning intact. The payload bytes are
-    * byte-identical to decoding the same JPEGs from an S1 image
-    * directory, so the two ingest paths are cross-checkable
-    * (FlagshipPipelineSpec pins that equality). */
-  def runFromAvi(spark: SparkSession, aviPath: String, outDir: String,
-                 keyframeInterval: Int = EventStreams.KeyframeInterval): RunStats = {
-    val source = spark.read.format("graft-frames")
-      .option("path", aviPath)
-      .option("numPartitions", 4)
-      .load()
-      .select(col("frame_number"), col("ts_us"), col("payload"),
-        col("width").as("w"), col("height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval)
-  }
-
-  /** The full D1 fan-out over a CONTAINER CORPUS with a VIDEO record-all
-    * sink (VERDICT r7 item 6): the directory scans as one relation
-    * through the connector, and sink A re-muxes the decoded frames into
-    * partitioned AVI files via
-    * [[graft.multimodal.VideoSink.saveAviPartitioned]] — executor-side,
-    * contiguous frame runs per part, no driver funnel — instead of the
-    * parquet record-all. Raw (lossless) codec, so the saved video holds
-    * the exact BGR bytes the parquet sink would have; the spec pins
-    * count/bytes parity by scanning the parts back through the same
-    * connector. */
+    * `.mp4`/RTSP url). `corpusDir` is one container file or a directory
+    * of them, scanned as one relation with a global frame index through
+    * the S2 `graft-frames` connector: container-probed metadata,
+    * partition-parallel in-JVM decode ([[graft.multimodal.AviCodec]]:
+    * RIFF chunk walk → per-frame JPEG → ImageIO → BGR), pushdown and
+    * pruning intact. The payload bytes are byte-identical to decoding
+    * the same JPEGs from an S1 image directory, so the ingest paths are
+    * cross-checkable (FlagshipPipelineSpec pins that equality).
+    * `numParts` is both the scan's and sink A's partition count. */
   def runFromCorpus(spark: SparkSession, corpusDir: String, outDir: String,
                     keyframeInterval: Int = EventStreams.KeyframeInterval,
                     numParts: Int = 4): RunStats = {
@@ -134,20 +118,18 @@ object FlagshipPipeline {
       .option("path", corpusDir)
       .option("numPartitions", numParts)
       .load()
-      .select(col("frame_number"), col("ts_us"), col("payload"),
+      .select(col("frame_number"), col("payload"),
         col("width").as("w"), col("height").as("h"))
-    runFromSource(spark, source, outDir, keyframeInterval,
-      recordAll = df => graft.multimodal.VideoSink.saveAviPartitioned(
-        df, s"$outDir/all_avi", codec = "raw", numParts = numParts))
+    runFromSource(source, outDir, keyframeInterval, numParts)
   }
 
   /** The same fan-out over a STREAMING frame relation — the reference's
     * live loop (`main.py:109-160`) as micro-batches: each batch runs the
     * batch body unchanged, writing its own `all/__batch=<id>` and
     * `sent/__batch=<id>` leaves. `frames` carries the flagship columns
-    * (frame_number, ts_us, payload, w, h) with BGR payloads, e.g. a
+    * (frame_number, payload, w, h) with BGR payloads, e.g. a
     * `readStream.format("graft-frames")` scan selected as in
-    * [[runFromAvi]]. Runs the stream to completion and returns the
+    * [[runFromCorpus]]. Runs the stream to completion and returns the
     * summed per-batch stats; an empty stream runs no batch and returns
     * zeros. */
   def runStream(spark: SparkSession, frames: DataFrame, outDir: String,
@@ -170,22 +152,18 @@ object FlagshipPipeline {
   private[graft] def runBatch(batch: DataFrame, batchId: Long, outDir: String,
                               keyframeInterval: Int,
                               perBatch: scala.collection.mutable.Map[Long, RunStats]): Unit =
-    perBatch(batchId) = runFromSource(batch.sparkSession, batch, outDir, keyframeInterval,
+    perBatch(batchId) = runFromSource(batch, outDir, keyframeInterval,
       leaf = s"/__batch=$batchId")
 
-  /** Source-agnostic flagship body: any (frame_number, ts_us, payload,
-    * w, h) relation with row-major BGR-interleaved byte payloads, one
-    * row per frame, fans out to both sinks. Dimensions are per-ROW (a
-    * directory of mixed image sizes letterboxes each to the same square,
-    * like the reference). `recordAll` overrides sink A (the default
-    * parquet record-all) — the corpus face substitutes the partitioned
-    * video sink; it returns the frames-saved count. `leaf` names the
+  /** Source-agnostic flagship body: any (frame_number, payload, w, h)
+    * relation with row-major BGR-interleaved byte payloads, one row per
+    * frame, fans out to both sinks. Dimensions are per-ROW (a directory
+    * of mixed image sizes letterboxes each to the same square, like the
+    * reference). Sink A writes `numParts` range parts. `leaf` names the
     * sinks' sub-directory (a micro-batch's `/__batch=<id>`; empty in
     * batch). */
-  private def runFromSource(spark: SparkSession, source0: DataFrame,
-                            outDir: String, keyframeInterval: Int,
-                            recordAll: DataFrame => Long = null,
-                            leaf: String = ""): RunStats = {
+  private def runFromSource(source0: DataFrame, outDir: String, keyframeInterval: Int,
+                            numParts: Int = 4, leaf: String = ""): RunStats = {
     val source = source0.persist() // one decode pass, two consumers (main.py:109-134)
 
     // every count comes from an Observation on the write that produces
@@ -196,15 +174,10 @@ object FlagshipPipeline {
     }
     def seen(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 
-    // sink A: record-all (parquet by default; the corpus face muxes
-    // partitioned video instead)
-    val framesSaved =
-      if (recordAll != null) recordAll(source)
-      else {
-        val (all, saved) = counted(source.select("frame_number", "ts_us", "payload"))
-        all.write.mode("overwrite").parquet(s"$outDir/all$leaf")
-        seen(saved)
-      }
+    // sink A: record-all, muxed into partitioned raw AVI; it returns
+    // the frames it wrote
+    val framesSaved = graft.multimodal.VideoSink.saveAviPartitioned(
+      source, s"$outDir/all$leaf", codec = "raw", numParts)
 
     // sampled branch: letterbox -> detect -> filter -> NMS inside each
     // keyframe row, then one row per kept box

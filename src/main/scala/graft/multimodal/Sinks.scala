@@ -20,10 +20,17 @@ private[multimodal] object Sinks {
     * (contiguous runs per part, global order = part order), sorted on
     * `sortKey` within each part, and every NON-EMPTY partition writes
     * `dir/part-NNNNN.ext` executor-side through `write(rows, path)`,
-    * which returns how many records it wrote. Returns their total. */
+    * which returns how many records it wrote. Returns their total.
+    * The write replaces the directory's earlier `part-*.ext` files (and
+    * nothing else in it), so a rewrite with fewer non-empty partitions
+    * leaves no stale part behind. */
   def parts(df: DataFrame, dir: String, ext: String, rangeKey: Column, sortKey: String,
             numParts: Int)(write: (Iterator[Row], String) => Long): Long = {
-    new java.io.File(dir).mkdirs()
+    val d = new java.io.File(dir)
+    d.mkdirs()
+    Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && f.getName.startsWith("part-") && f.getName.endsWith(s".$ext"))
+      .foreach(_.delete())
     // explicit width pins the part count (AQE coalescing may merge
     // small ranges under the default); 0 = let the planner size it
     val prepared = (if (numParts > 0) df.repartitionByRange(numParts, rangeKey)

@@ -38,10 +38,12 @@ object SessionTimers {
 
   class SessionProcessor extends StatefulProcessor[Long, EventIn, SessionOut] {
     @transient private var sess: ValueState[SessState] = _
+    // built on the driver and serialized with the processor: `init` runs
+    // on executor threads, where TypeTag reflection is not thread-safe
+    private val stateEncoder = Encoders.product[SessState]
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[SessState]("sess",
-        Encoders.product[SessState], TTLConfig.NONE)
+      sess = getHandle.getValueState[SessState]("sess", stateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[EventIn],
         timerValues: TimerValues): Iterator[SessionOut] = {

@@ -56,10 +56,12 @@ object StreamingPacking {
   class PackProcessor(budget: Long)
       extends StatefulProcessor[Long, DocIn, SpanOut] {
     @transient private var st: ValueState[PackState] = _
+    // built on the driver and serialized with the processor: `init` runs
+    // on executor threads, where TypeTag reflection is not thread-safe
+    private val stateEncoder = Encoders.product[PackState]
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PackState]("pack",
-        Encoders.product[PackState], TTLConfig.NONE)
+      st = getHandle.getValueState[PackState]("pack", stateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[DocIn],
         timerValues: TimerValues): Iterator[SpanOut] = {

@@ -32,7 +32,7 @@ class FlagshipPipelineSpec extends SparkSpec {
     // 10 numbered REAL PNG frames; frame 7 is a TRUNCATED PNG (valid
     // signature, torn mid-stream) -> ImageIO decode fails -> the S1 scan
     // must END there: frames 0..6 flow, 7..9 never
-    (0 until 10).foreach { i =>
+    val pngs = (0 until 10).map { i =>
       val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
       (0 until h).foreach { y =>
         (0 until w).foreach { x =>
@@ -45,6 +45,7 @@ class FlagshipPipelineSpec extends SparkSpec {
       val bytes = baos.toByteArray
       Files.write(dir.resolve(f"frame_$i%04d.png"),
         if (i == 7) bytes.take(48) else bytes)
+      bytes
     }
     val out = Files.createTempDirectory("graft_imgflag_out").toString
     val stats = FlagshipPipeline.runFromImageDir(spark, dir.toString, out,
@@ -52,17 +53,15 @@ class FlagshipPipelineSpec extends SparkSpec {
     assert(stats.framesSaved === 7L, "scan truncates at the first undecodable frame")
     assert(stats.keyframes === 4L) // frames 0,2,4,6
     assert(stats.detectionsSent <= 4L * 3)
-    // sink A holds the DECODED BGR buffers (w*h*3) of the surviving prefix
-    val sizes = spark.read.parquet(s"$out/all")
-      .select(length(col("payload"))).distinct().as[Int].collect()
-    assert(sizes.toSeq === Seq(w * h * 3), "payloads are decoded 3-channel BGR")
-    val framesSeen = spark.read.parquet(s"$out/all")
-      .select("frame_number").as[Long].collect().sorted
-    assert(framesSeen.toSeq === (0L to 6L))
+    // sink A's video holds the DECODED BGR buffers (w*h*3) of the
+    // surviving prefix, in frame order, byte for byte
+    val saved = frames(s"$out/all")
+    assert(saved.length === 7, "frames 0..6 saved, none past the cut")
+    assert(saved.forall(_.length == w * h * 3), "payloads are decoded 3-channel BGR")
+    assert(saved === pngs.take(7).map(graft.multimodal.ImageCodec.decode(_).get.pixels.toSeq))
     // decoded content round-trips: frame 0's pixel (x=1,y=0) was RGB
     // (1,3,7) -> BGR bytes (7,3,1) at offset 3
-    val p0 = spark.read.parquet(s"$out/all").filter(col("frame_number") === 0)
-      .select("payload").as[Array[Byte]].head()
+    val p0 = saved.head
     assert((p0(3) & 0xff, p0(4) & 0xff, p0(5) & 0xff) === ((7, 3, 1)),
       "BGR channel order must mirror cv2.imread")
   }
@@ -94,7 +93,6 @@ class FlagshipPipelineSpec extends SparkSpec {
   }
   private lazy val avi = {
     val p = dir.resolve("movie.avi").toString
-    // fps 30 = the image-dir path's synthetic clock, so ts_us agrees too
     graft.multimodal.AviCodec.writeMjpeg(p, jpegs, w, h, fps = 30)
     p
   }
@@ -105,17 +103,39 @@ class FlagshipPipelineSpec extends SparkSpec {
     d.toString
   }
 
-  /** The flagship columns over the AVI, selected as `runFromAvi` does. */
+  /** The flagship columns over the AVI, selected as `runFromCorpus` does. */
   private def flagshipColumns(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("frame_number"), col("ts_us"), col("payload"),
+    df.select(col("frame_number"), col("payload"),
       col("width").as("w"), col("height").as("h"))
 
   private def rows(out: String, sub: String, order: String) =
     spark.read.parquet(s"$out/$sub").drop("__batch").orderBy(order).collect().toSeq
 
+  /** Every frame's decoded BGR payload in a container file or directory
+    * of them, scanned through `graft-frames`, in frame order: the
+    * source clip, or sink A's part AVIs scanned back. */
+  private def frames(path: String): Seq[Seq[Byte]] =
+    spark.read.format("graft-frames").option("path", path).load()
+      .select("frame_number", "payload").as[(Long, Array[Byte])].collect()
+      .sortBy(_._1).map(_._2.toSeq).toSeq
+
+  /** The AVI's decoded frames: what sink A must save from any face. */
+  private lazy val aviFrames = frames(avi)
+
+  /** Sink A's `all/__batch=<id>` leaves as (id, path), in NUMERIC id
+    * order: a path sort puts `__batch=10` before `__batch=2`. */
+  private def batchLeaves(out: String): Seq[(Long, String)] =
+    new java.io.File(s"$out/all").listFiles().toSeq.map(_.getName)
+      .collect { case n @ s"__batch=$id" => (id.toLong, s"$out/all/$n") }
+      .sortBy(_._1)
+
+  /** The stream face's saved frames: the leaves' scans, in batch order. */
+  private def streamedFrames(out: String): Seq[Seq[Byte]] =
+    batchLeaves(out).flatMap { case (_, leaf) => frames(leaf) }
+
   test("flagship over AVI: record-all sink, sampled branch, NMS'd JSON payloads") {
     val out = tmpOut("graft_flagship")
-    val stats = FlagshipPipeline.runFromAvi(spark, avi, out, keyframeInterval = 3)
+    val stats = FlagshipPipeline.runFromCorpus(spark, avi, out, keyframeInterval = 3)
     assert(stats.framesSaved === 12L)
     assert(stats.keyframes === 4L) // every 3rd of 12
     assert(stats.detectionsSent > 0L)
@@ -130,10 +150,10 @@ class FlagshipPipelineSpec extends SparkSpec {
       field("$.detection.confidence").cast("double").as("confidence"))
     assert(parsed.filter(parsed.columns.map(col(_).isNull).reduce(_ || _)).count() === 0L)
     assert(parsed.filter(col("confidence") < 0.4).count() === 0L, "confidence threshold held")
-    // record-all payloads are full BGR frame buffers
-    val sizes = spark.read.parquet(s"$out/all")
-      .select(length(col("payload"))).distinct().as[Int].collect()
-    assert(sizes.toSeq === Seq(w * h * 3))
+    // record-all video holds the full BGR frame buffers, in frame order
+    val saved = frames(s"$out/all")
+    assert(saved.forall(_.length == w * h * 3))
+    assert(saved === aviFrames, "sink A saves the source decode byte for byte")
 
     // parity with the exchange-based form: the detector's pre-NMS boxes,
     // filtered and keyed frame * 5 + class, through the BBoxOps.nms face
@@ -164,14 +184,16 @@ class FlagshipPipelineSpec extends SparkSpec {
     val outImg = Files.createTempDirectory("graft_aviflag_outA").toString
     val outAvi = Files.createTempDirectory("graft_aviflag_outB").toString
     val a = FlagshipPipeline.runFromImageDir(spark, dir.toString, outImg, keyframeInterval = 3)
-    val b = FlagshipPipeline.runFromAvi(spark, avi, outAvi, keyframeInterval = 3)
+    val b = FlagshipPipeline.runFromCorpus(spark, avi, outAvi, keyframeInterval = 3)
     assert(a === b, "RunStats must agree across ingest paths")
     assert(b.framesSaved === 12L && b.keyframes === 4L)
 
-    def sinkRows(out: String, sub: String) = spark.read.parquet(s"$out/$sub")
-      .orderBy("frame_number").collect().toSeq
-    assert(sinkRows(outImg, "all") === sinkRows(outAvi, "all"),
-      "record-all sink: identical decoded BGR payloads and timestamps")
+    assert(aviFrames === jpegs.map(graft.multimodal.ImageCodec.decode(_).get.pixels.toSeq),
+      "the container scan decodes the JPEGs the image directory holds")
+    assert(frames(s"$outImg/all") === aviFrames,
+      "image-dir record-all video: the decoded BGR payloads, in frame order")
+    assert(frames(s"$outAvi/all") === aviFrames,
+      "container record-all video: the decoded BGR payloads, in frame order")
     def sentRows(out: String) = spark.read.parquet(s"$out/sent")
       .orderBy("payload").collect().toSeq
     assert(sentRows(outImg) === sentRows(outAvi),
@@ -187,47 +209,35 @@ class FlagshipPipelineSpec extends SparkSpec {
     graft.multimodal.AviCodec.writeMjpeg(
       corpus.resolve("part_01.avi").toString, jpegs.drop(7), w, h, fps = 30)
     val outDir = Files.createTempDirectory("graft_aviflag_outC").toString
-    val c = FlagshipPipeline.runFromAvi(spark, corpus.toString, outDir, keyframeInterval = 3)
+    val c = FlagshipPipeline.runFromCorpus(spark, corpus.toString, outDir, keyframeInterval = 3)
     assert(c === b, "RunStats must agree for the split-corpus ingest")
-    assert(sinkRows(outAvi, "all") === sinkRows(outDir, "all"),
+    assert(frames(s"$outDir/all") === aviFrames,
       "corpus-directory ingest must be indistinguishable from the single container")
     assert(sentRows(outAvi) === sentRows(outDir))
 
-    // fourth face (VERDICT r7 item 6): the full fan-out over the same
-    // corpus with the record-all sink muxing PARTITIONED VIDEO through
-    // saveAviPartitioned instead of parquet — stats must agree with the
-    // S1/S2 runs, and scanning the emitted parts back through the
-    // connector must reproduce every decoded BGR payload byte-for-byte
-    // (raw codec = lossless)
+    // the same corpus at another sink width: 3 range parts instead of 4
+    // hold the same frames (raw codec = lossless)
     val outVid = Files.createTempDirectory("graft_aviflag_outD").toString
     val d = FlagshipPipeline.runFromCorpus(spark, corpus.toString, outVid,
       keyframeInterval = 3, numParts = 3)
-    assert(d === b, "RunStats must agree when the record-all sink writes video")
-    val readBack = spark.read.format("graft-frames")
-      .option("path", s"$outVid/all_avi").load()
-      .select("frame_number", "payload").orderBy("frame_number").collect().toSeq
-    val original = spark.read.parquet(s"$outImg/all")
-      .select("frame_number", "payload").orderBy("frame_number").collect().toSeq
-    assert(readBack.map(_.getLong(0)) === original.map(_.getLong(0)),
-      "part AVIs must cover the same dense frame range")
-    assert(readBack.map(_.getAs[Array[Byte]](1).toSeq) ===
-      original.map(_.getAs[Array[Byte]](1).toSeq),
-      "video record-all holds the exact bytes the parquet record-all would")
+    assert(d === b, "RunStats must not depend on the part count")
+    assert(frames(s"$outVid/all") === aviFrames,
+      "part AVIs reassemble to the decoded frames, whatever the part count")
   }
 
-  test("runStream at 5 frames per micro-batch equals runFromAvi: stats and sink rows") {
+  test("runStream at 5 frames per micro-batch equals runFromCorpus: stats and sink rows") {
     val outB = tmpOut("graft_flagstream_b")
-    val batch = FlagshipPipeline.runFromAvi(spark, avi, outB, keyframeInterval = 3)
+    val batch = FlagshipPipeline.runFromCorpus(spark, avi, outB, keyframeInterval = 3)
     val outS = tmpOut("graft_flagstream_s")
-    val frames = flagshipColumns(spark.readStream.format("graft-frames")
+    val input = flagshipColumns(spark.readStream.format("graft-frames")
       .option("path", avi).option("numPartitions", 4).option("ratePerBatch", 5).load())
-    val streamed = FlagshipPipeline.runStream(spark, frames, outS, keyframeInterval = 3)
+    val streamed = FlagshipPipeline.runStream(spark, input, outS, keyframeInterval = 3)
     assert(streamed === batch, "per-batch stats must sum to the batch run's")
-    val batches = spark.read.parquet(s"$outS/all").select("__batch").distinct()
-      .as[Long].collect().sorted.toSeq
-    assert(batches === Seq(0L, 1L, 2L), "12 frames at 5 per batch = 3 micro-batches")
-    assert(rows(outS, "all", "frame_number") === rows(outB, "all", "frame_number"),
-      "record-all sink: the batch run's rows, split across __batch leaves")
+    assert(batchLeaves(outS).map(_._1) === Seq(0L, 1L, 2L),
+      "12 frames at 5 per batch = 3 micro-batches")
+    assert(batchLeaves(outS).map { case (_, leaf) => frames(leaf).length } === Seq(5, 5, 2))
+    assert(streamedFrames(outS) === aviFrames,
+      "record-all video: the decoded frames, split across __batch leaves in order")
     assert(rows(outS, "sent", "payload") === rows(outB, "sent", "payload"),
       "sender sink: the batch run's JSON payloads")
   }
@@ -242,13 +252,15 @@ class FlagshipPipelineSpec extends SparkSpec {
     (0L to 2L).foreach(b => FlagshipPipeline.runBatch(slice(b), b, out, 3, perBatch))
     def total = perBatch.values.reduce(_ + _)
     val stats = total
-    val (all, sent) = (rows(out, "all", "frame_number"), rows(out, "sent", "payload"))
-    assert(stats === FlagshipPipeline.runFromAvi(spark, avi, tmpOut("graft_flagstream_rb"),
+    val (leaf1, sent) = (frames(s"$out/all/__batch=1"), rows(out, "sent", "payload"))
+    assert(stats === FlagshipPipeline.runFromCorpus(spark, avi, tmpOut("graft_flagstream_rb"),
       keyframeInterval = 3))
+    assert(streamedFrames(out) === aviFrames)
     // a retried batch 1: same id, same frames
     FlagshipPipeline.runBatch(slice(1), 1L, out, 3, perBatch)
     assert(total === stats, "a re-run batch replaces its own stats, never adds")
-    assert(rows(out, "all", "frame_number") === all, "record-all leaf overwritten, not appended")
+    assert(frames(s"$out/all/__batch=1") === leaf1, "record-all leaf overwritten, not appended")
+    assert(streamedFrames(out) === aviFrames)
     assert(rows(out, "sent", "payload") === sent, "sender leaf overwritten, not appended")
   }
 

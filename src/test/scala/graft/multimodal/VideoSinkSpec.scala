@@ -130,4 +130,21 @@ class VideoSinkSpec extends SparkSpec {
       assert(p.toSeq === bgr(i, 8, 6).toSeq, s"frame $i exact after reassembly")
     }
   }
+
+  test("partitioned sink: a rewrite with fewer parts leaves no stale part behind") {
+    val dir = Files.createTempDirectory("graft_vsink_rewrite")
+    graft.TempDirs.cleanupOnExit(dir)
+    val other = dir.resolve("notes.txt")
+    Files.write(other, "kept".getBytes)
+    assert(VideoSink.saveAviPartitioned(framesDf(40, 8, 6, None), dir.toString, numParts = 4) === 40L)
+    val second = (0 until 10).map(i => (i.toLong, bgr(i + 100, 8, 6), 8, 6))
+      .toDF("frame_number", "payload", "w", "h")
+    assert(VideoSink.saveAviPartitioned(second, dir.toString, numParts = 1) === 10L)
+    val back = spark.read.format("graft-frames").option("path", dir.toString).load()
+    assert(back.count() === 10L, "only the second write's frames scan back")
+    val payloads = back.select("frame_number", "payload").as[(Long, Array[Byte])]
+      .collect().sortBy(_._1).map(_._2.toSeq).toSeq
+    assert(payloads === (0 until 10).map(i => bgr(i + 100, 8, 6).toSeq))
+    assert(Files.exists(other), "files that are not parts stay")
+  }
 }

@@ -129,6 +129,25 @@ object Bench {
     isTainted(loadStart, endExternalBusy, anyKeptRepHot) ||
       isBandTainted(repTotals, totalMin, totalMax)
 
+  /** The untimed warm-up of the timing mains ([[QueryBench]] shares it):
+    * JIT + codegen + parquet footer caches, so the first timed query
+    * isn't charged for JVM start-up. Events must go through Tables
+    * (TIMESTAMP(NANOS) needs the nanosAsLong conf — a raw spark.read
+    * here throws and silently skips the warm-up). All three hot tables
+    * warm (round 11): rep-1 cold footer/page reads on
+    * documents/embeddings were the main honest contribution to the
+    * min/max band the isBandTainted rule now polices — warming them
+    * keeps an honest run's band well under the 1.5 line. */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.range(100000).selectExpr("sum(id)").count()
+      Tables.events(spark, sfDir).count()
+      Tables.documents(spark, sfDir).count()
+      Tables.embeddings(spark, sfDir).count()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -280,29 +299,15 @@ object Bench {
       cpuTicks().map(t => (t(2) + t(5) + t(6), t.sum)) // system + irq + softirq
     externalBusy() // prime the tick counters
     val spark = Sessions.local(cpus.toInt)
-    // warm-up: JIT + codegen + parquet footer caches, so the first timed
-    // query isn't charged for JVM start-up. Events must go through
-    // Tables (TIMESTAMP(NANOS) needs the nanosAsLong conf — a raw
-    // spark.read here throws and silently skips the warm-up). All three
-    // hot tables warm (round 11): rep-1 cold footer/page reads on
-    // documents/embeddings were the main honest contribution to the
-    // min/max band the isBandTainted rule now polices — warming them
-    // keeps an honest run's band well under the 1.5 line.
-    try {
-      spark.range(100000).selectExpr("sum(id)").count()
-      Tables.events(spark, sfDir).count()
-      Tables.documents(spark, sfDir).count()
-      Tables.embeddings(spark, sfDir).count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
-    }
+    warmTables(spark, sfDir)
     // methodology: each query runs `reps` times in-process and reports the
     // MEDIAN (plus a min/max band), so one GC pause or cold parquet read
     // can't swing the committed number (VERDICT r2 item 1). .count() is
     // the driver's original harness action (kept for baseline
     // comparability). Persist lifetimes are governed by graft.Caches:
-    // every scoped relation a query created is released after each rep
-    // (reps time real work, not residual cache hits), while the explicit
+    // each rep runs in one Caches.scoped block, so every scoped relation
+    // the query created is released after the rep (reps time real work,
+    // not residual cache hits), while the explicit
     // shared q30/q31/q60 trio persists for the session — the same policy
     // Verify uses. A failed rep reports the query as -1 so crashes can't
     // masquerade as fast runs.
@@ -335,11 +340,11 @@ object Bench {
       externalBusy() // close the preceding window; this build starts fresh
       val t0 = System.nanoTime()
       val t =
-        try { f; (System.nanoTime() - t0) / 1e9 }
+        try Caches.scoped { f; (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
           System.err.println(s"[bench] shared-relation build failed: ${e.getMessage}")
           -1.0
-        } finally Caches.releaseScoped()
+        }
       val ext = externalBusy()
       if (t >= 0 && isHotWindow(ext)) {
         anyKeptRepHot = true
@@ -359,20 +364,20 @@ object Bench {
     // (BENCH_r10's contending process evaded every sampled window).
     var maxMidLoad = 0.0
     val runs: Seq[(String, Seq[Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      SparkEntry.select(Nil).map { case (name, fn) =>
         maxMidLoad = math.max(maxMidLoad, loadAvg())
         // one measurement: (seconds or -1, external CPU share in window)
         def rep(): (Double, Double) = {
           externalBusy() // close the preceding window
           val t0 = System.nanoTime()
           val t =
-            try {
+            try Caches.scoped {
               fn(spark, sfDir).count()
               (System.nanoTime() - t0) / 1e9
             } catch { case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
               -1.0
-            } finally Caches.releaseScoped()
+            }
           (t, externalBusy())
         }
         val times = (1 to reps).map { _ =>

@@ -10,27 +10,36 @@ import org.apache.spark.storage.StorageLevel
   * Two lifetimes, nothing else:
   *
   *  - '''scoped''' — a build side or self-join input that exists for ONE
-  *    query. Registered here by the operator that persists it; the caller
-  *    that runs queries back-to-back ([[Bench]], [[Verify]],
-  *    [[QueryBench]], QueriesSpec's golden loop) calls [[releaseScoped]]
-  *    after each query's action, so retained relations can't accumulate
-  *    across a 60-query session and compete for storage memory (the
-  *    round-2 bench regression mechanism). The registry assumes queries
-  *    run ONE AT A TIME per JVM — a concurrent harness would release
-  *    another query's live build side; none of the harness mains nor the
-  *    (sequential) test suites do that.
+  *    query. Registered here by the operator that persists it
+  *    ([[scopedPersist]]) and unpersisted when the enclosing [[scoped]]
+  *    block exits, so retained relations can't accumulate across a
+  *    254-query session and compete for storage memory (the round-2
+  *    bench regression mechanism). Every harness main, spec and
+  *    micro-batch body runs its query inside `Caches.scoped { … }`.
+  *    Scopes nest: an inner scope (a batch body run inside a query)
+  *    releases only the relations registered since it was entered, and
+  *    the enclosing query's persists stay until its own scope exits. The
+  *    registry assumes queries run ONE AT A TIME per JVM — a concurrent
+  *    harness would release another query's live build side; none of the
+  *    harness mains nor the (sequential) test suites do that.
   *  - '''shared''' — a relation deliberately reused by SEVERAL queries in
   *    one session (the q30→q31→q60 dedup trio). Compute-once by key, so
   *    the reuse is explicit in code rather than an accident of
   *    plan-matched cache hits; released only at session end
   *    ([[releaseShared]]).
   *
+  * A local checkpoint is neither: `unpersist` does not free checkpoint
+  * blocks (the ContextCleaner does, once the RDD is garbage), so an
+  * operator calls `localCheckpoint(eager = true)` itself and registers
+  * nothing here.
+  *
   * Keys include the session (identity) and the data dir, so tests running
   * several sessions or SFs in one JVM never cross-wire relations.
   */
 object Caches {
 
-  private val scoped = mutable.ArrayBuffer.empty[DataFrame]
+  // scoped relations in registration order; each scope releases its tail
+  private val scopedRels = mutable.ArrayBuffer.empty[DataFrame]
   // relations persisted by sharedRelation — unpersisted by releaseShared
   // (or once their session stops); the memo entry serves them
   private val shared = mutable.ArrayBuffer.empty[DataFrame]
@@ -70,30 +79,24 @@ object Caches {
     try df.unpersist(blocking = false)
     catch { case _: Throwable => () }
 
-  /** Persist `df` for the duration of the current query. */
+  /** Persist `df` until the innermost enclosing [[scoped]] block exits. */
   def scopedPersist(df: DataFrame): DataFrame = synchronized {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    scoped += p
+    scopedRels += p
     p
   }
 
-  /** EAGERLY materialize `df` as a local checkpoint and register it for
-    * [[releaseScoped]]. Unlike [[scopedPersist]], the result is immune
-    * to CacheManager PATH INVALIDATION: appending to a parquet path the
-    * plan reads (the standing-index pattern — compute decisions FROM the
-    * index, then append survivors TO it) recaches a persisted plan and
-    * silently re-evaluates it against the refreshed file listing, so a
-    * later action sees the batch's own appends (a doc "matching itself"
-    * was the observed failure). A local checkpoint is a materialized RDD
-    * with the lineage truncated — every later action replays the
-    * snapshot taken BEFORE the append. The eager checkpoint runs a job
-    * at the call, and [[releaseScoped]] only drops the reference: its
-    * unpersist does not free checkpoint blocks, the ContextCleaner does
-    * once the RDD is garbage. */
-  def scopedCheckpoint(df: DataFrame): DataFrame = synchronized {
-    val p = df.localCheckpoint(eager = true)
-    scoped += p
-    p
+  /** Runs `body` as one scope: unpersists exactly the scoped relations
+    * registered since the scope was entered, also when `body` throws.
+    * An inner scope leaves the enclosing scope's relations cached. */
+  def scoped[T](body: => T): T = {
+    val mark = synchronized(scopedRels.length)
+    try body
+    finally synchronized {
+      // a `releaseScoped` inside `body` may already have emptied the tail
+      while (scopedRels.length > mark)
+        unpersistQuietly(scopedRels.remove(scopedRels.length - 1))
+    }
   }
 
   /** Compute-once relation shared across queries of one (session, dir),
@@ -102,7 +105,7 @@ object Caches {
     * Materialized EAGERLY: a shared build may internally register scoped
     * persists (RowIds' sorted intermediate) whose two-pass consistency
     * holds only while they are cached. Returning a lazy plan would let a
-    * caller construct it, releaseScoped(), and materialize later with
+    * caller construct it, leave its scope, and materialize later with
     * the intermediate gone — re-running the range sort independently in
     * each subtree. Counting here pins materialization inside the build's
     * own scoped-persist window. Nested builds (verified_pairs builds
@@ -131,7 +134,7 @@ object Caches {
     * job. The lock guards only the map lookups: a concurrent caller of
     * the same key waits on a per-key latch and re-checks (retrying if
     * the first build failed); a caller of a different key (or of
-    * scopedPersist/releaseScoped) never blocks behind the build. The
+    * scopedPersist/scoped) never blocks behind the build. The
     * build runs at most once per key. */
   def memo[T](spark: SparkSession, dir: String, name: String)(build: => T): T = {
     val key = sessionKey(spark, name, dir)
@@ -167,11 +170,12 @@ object Caches {
     }
   }
 
-  /** Unpersist every scoped relation registered since the last release.
+  /** Unpersist every scoped relation, whichever scope registered it —
+    * for a caller that runs queries back-to-back without [[scoped]].
     * Safe against already-stopped sessions (specs stop theirs). */
   def releaseScoped(): Unit = synchronized {
-    scoped.foreach(unpersistQuietly)
-    scoped.clear()
+    scopedRels.foreach(unpersistQuietly)
+    scopedRels.clear()
   }
 
   /** Unpersist the shared relations too — session end only. Memoized

@@ -2,7 +2,7 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Golden-hash regression harness (SURVEY.md §5.2.5): a canonical md5 of
@@ -32,6 +32,13 @@ object GoldenHash {
     }
     md.digest().map("%02x".format(_)).mkString
   }
+
+  /** One query's golden: [[hashDf]] of `fn`'s result in its own
+    * [[Caches.scoped]] block — the one computation behind both
+    * [[GoldenGen]] and the spec that checks the committed goldens. */
+  def golden(spark: SparkSession, dir: String,
+             fn: (SparkSession, String) => DataFrame): String =
+    Caches.scoped(hashDf(fn(spark, dir)))
 }
 
 /** Regenerates the committed goldens. Run after intentional semantic
@@ -41,10 +48,8 @@ object GoldenGen {
     val out = if (args.nonEmpty) args(0) else "src/test/resources/goldens.properties"
     val sfDir = "/root/testdata/sf0.001"
     val spark = Sessions.local(4)
-    val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val h = s"$name=${GoldenHash.hashDf(fn(spark, sfDir))}"
-      Caches.releaseScoped() // per-query release, same as the harness mains
-      h
+    val lines = SparkEntry.select(Nil).map { case (name, fn) =>
+      s"$name=${GoldenHash.golden(spark, sfDir, fn)}"
     }
     val f = new java.io.File(out)
     f.getParentFile.mkdirs()

@@ -19,4 +19,23 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Runs `body` with each (key, value) set on the session conf, then
+    * puts every key back as it was (unset if it was unset), even when
+    * `body` throws — the one set-and-restore conf scope (stream width,
+    * state-store provider, and the specs' conf overrides). */
+  private[graft] def withConfs[T](spark: SparkSession, confs: (String, String)*)
+                                 (body: => T): T = {
+    // the explicitly set confs, not `getOption`: a conf left at its
+    // default must go back to unset, not to an explicit copy of the default
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

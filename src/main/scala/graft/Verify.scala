@@ -1,22 +1,19 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * Run:  sbt "runMain graft.Verify <sfDir> <outDir> [prefix,prefix,...]"
+  * — the optional prefixes narrow the dump for local iteration
+  * ([[SparkEntry.select]]); with none, every query is dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [prefix,prefix,...]")
+    val Array(sfDir, outDir) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // dev-only narrowing for local iteration (the driver never sets it):
-    // SPARK_GRAFT_ONLY=q75,q76 dumps just those queries.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(keys) => SparkEntry.queries.filter { case (n, _) =>
-        keys.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -38,8 +35,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // each query runs in one Caches.scoped block, so its internal
+    // persists (self-join build sides) are released before the next one;
+    // the explicit shared dedup-trio relations stay for the session (same
+    // policy as Bench)
     selected.foreach { case (name, fn) =>
-      try {
+      try Caches.scoped {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // metadata-only count from the just-written footer (no recompute);
@@ -51,11 +52,6 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries register their internal persists (self-join build sides)
-      // as scoped in graft.Caches — release them here so caches don't
-      // accumulate across 60 queries. The explicit shared dedup-trio
-      // relations stay for the session (same policy as Bench).
-      Caches.releaseScoped()
     }
     println(s"[verify] DONE ${selected.size} queries dumped")
     Caches.releaseShared()

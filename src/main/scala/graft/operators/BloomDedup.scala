@@ -140,8 +140,8 @@ object BloomDedup {
     * branch and sizes the reverse filter), and on the non-empty path
     * the reverse bloom build — and registers a scoped persist for the
     * candidate set. Callers that only want to INSPECT the plan
-    * (ExplainAudit) still pay the builds, must `Caches.releaseScoped()`
-    * afterwards, and should note that on a dup-free input the returned
+    * (ExplainAudit) still pay the builds, must call it inside a
+    * `Caches.scoped` block, and should note that on a dup-free input the returned
     * plan is just `definiteNew` — the verify branch is genuinely absent,
     * not optimized away. Size `expectedItems` from a real corpus count
     * (see the class doc); a constant saturates at scale. */

@@ -1036,10 +1036,10 @@ object PipelineQueries {
           // eager: this runs a Spark job when the DataFrame is BUILT, so
           // even a plan-only caller (`ExplainAudit q165`) executes the
           // corpus pass. The blocks are not registered with graft.Caches,
-          // and `Caches.releaseScoped()` could not free them anyway
-          // (unpersist does not touch checkpoint blocks) — only the
-          // ContextCleaner does, once the RDD is garbage. Fine for a
-          // 2080-row triangle; do not copy onto a large relation.
+          // whose scopes could not free them anyway (unpersist does not
+          // touch checkpoint blocks) — only the ContextCleaner does, once
+          // the RDD is garbage. Fine for a 2080-row triangle; do not copy
+          // onto a large relation.
           .localCheckpoint(true)
       val gram = tri.unionByName(tri.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("g")))
@@ -1748,13 +1748,14 @@ object PipelineQueries {
             remaining.join(ms, col("vec_id") === col("a_id"), "left")
               .withColumn("msim", coalesce(col("m"), lit(-1000000L)))
           }
-        val best = graft.Caches.scopedCheckpoint(withMsim
+        val best = withMsim
           .withColumn("mmr10", lit(7L) * col("rel") - lit(3L) * col("msim"))
           .orderBy(col("mmr10").desc, col("vec_id"))
           .limit(1)
           .select(lit(step.toLong).as("rank"), col("vec_id"),
             col("rel").as("rel_ppm"), col("msim").as("msim_ppm"),
-            col("mmr10")))
+            col("mmr10"))
+          .localCheckpoint(eager = true)
         selected = if (selected == null) best else selected.unionByName(best)
       }
       selected.orderBy("rank")

@@ -65,12 +65,4 @@ object CdcApply {
       .select(col("user_id"), col("o.event_id").as("last_event_id"),
         col("o.value").as("value"))
       .orderBy("user_id")
-
-  /** Unbounded form: a change-log stream applied batch-by-batch. */
-  def run(ops: DataFrame, stateDir: String,
-          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ops.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) => processBatch(b, stateDir, id) }
-      .start()
 }

@@ -53,7 +53,7 @@ object CurationPipeline {
     * directly, like [[IncrementalNearDup.processBatch]]. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
                                       indexDir: String, outDir: String,
-                                      minScore: Long = 0L): BatchStats = {
+                                      minScore: Long = 0L): BatchStats = graft.Caches.scoped {
     // counts come from the writes themselves (the FlagshipPipeline
     // idiom), not from extra count jobs
     def counted(df: DataFrame): (DataFrame, Observation) = {
@@ -92,7 +92,6 @@ object CurationPipeline {
       (TextCuration.shuffleKey(col("doc_id")) % Shards).as("shard")))
     VersionedState.overwriteBatch(exported, batchId, s"$outDir/shards", "shard")
 
-    graft.Caches.releaseScoped()
     BatchStats(input, input - seen(nPassed), seen(nPassed) - seen(nKept), seen(nKept))
   }
 

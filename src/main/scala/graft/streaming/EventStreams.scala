@@ -185,28 +185,9 @@ object EventStreams {
     * the previous session width is restored even when `body` throws, so
     * batch queries never keep running at stream width. */
   def withStreamWidth[T](df: DataFrame)(body: => T): T =
-    withConfs(df.sparkSession, PartsKey -> widthFor(df).toString)(body)
+    graft.Sessions.withConfs(df.sparkSession, PartsKey -> widthFor(df).toString)(body)
 
   private val PartsKey = "spark.sql.shuffle.partitions"
-
-  /** Runs `body` with each (key, value) set on the session conf, then
-    * puts every key back as it was (unset if it was unset), even when
-    * `body` throws — the one set-and-restore scope behind the width and
-    * state-store settings of a stream run. */
-  private[streaming] def withConfs[T](spark: SparkSession, confs: (String, String)*)
-                                     (body: => T): T = {
-    // the explicitly set confs, not `getOption`: a conf left at its
-    // default must go back to unset, not to an explicit copy of the default
-    val set = spark.conf.getAll
-    val prev = confs.map { case (k, _) => k -> set.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** The one staged micro-batch replay source. Writes each chunk as one
     * parquet file under a fresh temp root, stamps the files with strictly
@@ -265,8 +246,8 @@ object EventStreams {
     *
     * The stream runs at [[widthFor]] and, when its plan holds a
     * `transformWithState` operator, on the RocksDB state store; both
-    * confs are set inside one [[withConfs]] scope, so the session's
-    * batch width and provider are restored however the run ends
+    * confs are set inside one [[graft.Sessions.withConfs]] scope, so the
+    * session's batch width and provider are restored however the run ends
     * (micro-batch planning reads them at start(), so the scoped set binds
     * only this query's state layout). Per-batch progress is Spark's own:
     * a `StreamingQueryListener` on the session sees every batch. */
@@ -284,7 +265,7 @@ object EventStreams {
     val writeMode = if (mode == "complete") "overwrite" else "append"
     val provider =
       if (usesTransformWithState(df)) Seq(ProviderKey -> RocksDbProvider) else Nil
-    withConfs(spark, (PartsKey -> widthFor(df).toString) +: provider: _*) {
+    graft.Sessions.withConfs(spark, (PartsKey -> widthFor(df).toString) +: provider: _*) {
       val query = df.writeStream.outputMode(mode)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode(writeMode).parquet(dir)

@@ -56,9 +56,11 @@ object IncrementalNearDup {
   /** The composable core: dedup `batch` against the index, write the
     * SURVIVORS' signatures into the index under `__batch=<batchId>`,
     * and return the per-doc decisions `(doc_id, dup_of, best_jaccard,
-    * kept)` — scoped-checkpointed, so the caller can fan them into its
-    * own sinks before calling `Caches.releaseScoped()`. Used by both
-    * [[processBatch]] and the composed [[CurationPipeline]].
+    * kept)` — eagerly local-checkpointed, so the caller can fan them into
+    * its own sinks after the index write. Call it inside a
+    * `Caches.scoped` block, which releases the batch's persisted
+    * signatures. Used by both [[processBatch]] and the composed
+    * [[CurationPipeline]].
     *
     * A retry OVERWRITES its own index partition instead of appending
     * twice, and the index reads exclude the current batch's partition:
@@ -107,18 +109,18 @@ object IncrementalNearDup {
           .agg(min("corpus_id").as("dup_of"), max("jaccard").as("best_jaccard"))
       }
 
-    // scopedCheckpoint, NOT scopedPersist: the decisions plan READS the
+    // a local checkpoint, NOT scopedPersist: the decisions plan READS the
     // index paths this method then APPENDS to, and Spark's CacheManager
     // invalidates (recaches) any cached plan over a written path — a
     // merely-persisted decisions would silently re-evaluate against the
     // post-append listing on the caller's next action, matching each doc
     // against its own just-indexed signature. The eager checkpoint
     // freezes the pre-append answer.
-    val decisions = graft.Caches.scopedCheckpoint(
-      batch.select("doc_id")
-        .join(matches, col("doc_id") === col("new_id"), "left")
-        .select(col("doc_id"), col("dup_of"), col("best_jaccard"),
-          col("new_id").isNull.as("kept")))
+    val decisions = batch.select("doc_id")
+      .join(matches, col("doc_id") === col("new_id"), "left")
+      .select(col("doc_id"), col("dup_of"), col("best_jaccard"),
+        col("new_id").isNull.as("kept"))
+      .localCheckpoint(eager = true)
 
     // only SURVIVORS join the standing corpus
     val keptIds = decisions.filter(col("kept")).select("doc_id")
@@ -136,10 +138,10 @@ object IncrementalNearDup {
     * [[dedupBatch]] (same keying). Package-visible so the retried-batch
     * spec drives it directly. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
-                                      indexDir: String, outDir: String): Unit = {
-    VersionedState.overwriteBatch(dedupBatch(batch, batchId, indexDir), batchId, outDir)
-    graft.Caches.releaseScoped()
-  }
+                                      indexDir: String, outDir: String): Unit =
+    graft.Caches.scoped {
+      VersionedState.overwriteBatch(dedupBatch(batch, batchId, indexDir), batchId, outDir)
+    }
 
   /** Run the incremental dedup over a streaming (doc_id, text) source. */
   def run(docs: DataFrame, indexDir: String, outDir: String,

@@ -113,7 +113,7 @@ object SessionTimers {
     * `transformWithState` stream run by its own `writeStream`;
     * [[EventStreams.drainToFiles]] picks the provider from the plan. */
   def withRocksDb[A](spark: SparkSession)(body: => A): A =
-    EventStreams.withConfs(spark,
+    graft.Sessions.withConfs(spark,
       EventStreams.ProviderKey -> EventStreams.RocksDbProvider)(body)
 
   /** q205: the events log through the timer sessionizer (real engine

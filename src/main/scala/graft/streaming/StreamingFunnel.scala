@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * strictly larger ts. Equal-ts events never qualify (strict '>'), so
   * boundary ties are harmless. q179 promotes the seam into the oracle
   * gate: N micro-batches through [[advance]] must hash-match q81's
-  * one-shot truth. The durable face ([[processBatch]] / [[publish]] /
-  * [[run]]) carries the state across micro-batches as a
+  * one-shot truth. The durable face ([[processBatch]] / [[publish]])
+  * carries the state across micro-batches as a
   * [[VersionedState]] fold: crash-safe, exactly-once under retry —
   * spec'd beside the seam contract.
   */
@@ -96,14 +96,6 @@ object StreamingFunnel {
   /** The current per-user funnel state (latest committed version). */
   def publish(spark: SparkSession, stateDir: String): DataFrame =
     spark.read.parquet(s"${VersionedState.latest(spark, stateDir)}/state").orderBy("user_id")
-
-  /** Unbounded form: a ts-ordered event stream folded batch-by-batch. */
-  def run(events: DataFrame, stateDir: String,
-          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) => processBatch(b, stateDir, id) }
-      .start()
 
   /** q179: the events log split into `n` deterministic event_id-range
     * micro-batches and folded through [[advance]]; the final per-user

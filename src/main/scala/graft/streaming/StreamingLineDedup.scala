@@ -44,10 +44,11 @@ object StreamingLineDedup {
     * fold its chunk counts in, exactly-once under retry. Output rows
     * (doc_id, batch, n_chunks, n_dropped, clean_text) land in the
     * permanent ledger `out/b{batchId}`; the updated index becomes
-    * version `v{batchId}` (predecessors prune). */
+    * version `v{batchId}` (predecessors prune). The batch's persisted
+    * chunks are released when the fold returns ([[graft.Caches.scoped]]). */
   def processBatch(batch: DataFrame, stateDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    VersionedState.fold(spark, stateDir, batchId) { (prev, vdir) =>
+    graft.Caches.scoped(VersionedState.fold(spark, stateDir, batchId) { (prev, vdir) =>
       val ch = graft.Caches.scopedPersist(
         graft.queries.CurationQueries.lineChunks(batch))
       val standing = prev match {
@@ -74,7 +75,7 @@ object StreamingLineDedup {
       standing.unionByName(batchCounts)
         .groupBy("h").agg(sum(col("nd")).as("nd"))
         .write.mode("overwrite").parquet(s"$vdir/index")
-    }
+    })
   }
 
   /** The append-only cleaned ledger: every committed batch's output,

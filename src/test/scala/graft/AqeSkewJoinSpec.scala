@@ -40,15 +40,6 @@ class AqeSkewJoinSpec extends SparkSpec {
     here ++ kids.flatMap(collectAll(_)(pf))
   }
 
-  private def withConfs[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("a deliberately hot join key: AQE splits the skewed partition (skew=true), result exact") {
     // left: 50k rows on ONE key + 10k spread over 100 keys, padded so the
     // hot partition's bytes dwarf the median; right: one row per key.
@@ -63,7 +54,7 @@ class AqeSkewJoinSpec extends SparkSpec {
     val right = spark.range(0, 101).select(col("id").as("k"),
       concat(lit("dim_"), col("id")).as("name"))
 
-    val (rows, plan) = withConfs(
+    val (rows, plan) = Sessions.withConfs(spark,
       // thresholds scaled to test-sized data; factor/advisory semantics
       // are the production defaults' — a partition is skewed when it
       // exceeds factor x median AND the byte floor, and splits into
@@ -106,7 +97,7 @@ class AqeSkewJoinSpec extends SparkSpec {
       .select(
         when(col("id") < 50000, lit(0L)).otherwise(col("id") % 100 + 1).as("k"),
         (col("id") % 7919).as("v"))
-    val (got, plan) = withConfs(
+    val (got, plan) = Sessions.withConfs(spark,
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "262144",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "131072",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",

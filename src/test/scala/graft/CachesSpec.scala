@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.storage.StorageLevel
 
-/** Contract of the [[Caches.memo]] per-key latch (round-5 advice: layout
+/** Contract of [[Caches.scoped]] (scopes nest; a throwing body still
+  * releases) and of the [[Caches.memo]] per-key latch (round-5 advice: layout
   * builds must not run under an object monitor that blocks unrelated
   * callers). The observable promises: a build runs at most once per key
   * however many threads race to it; a FAILED build frees the key so a
@@ -86,5 +87,33 @@ class CachesSpec extends SparkSpec {
     assert(builds.get() === 2, "after the release the relation is rebuilt")
     assert(second.storageLevel === StorageLevel.MEMORY_AND_DISK)
     assert(second.count() === 10L)
+  }
+
+  test("scoped: an inner scope releases only its own persist") {
+    val outer = Caches.scoped {
+      val p = Caches.scopedPersist(spark.range(11).selectExpr("id AS outer_k"))
+      val inner = Caches.scoped {
+        val q = Caches.scopedPersist(spark.range(12).selectExpr("id AS inner_k"))
+        assert(q.storageLevel === StorageLevel.MEMORY_AND_DISK)
+        q
+      }
+      assert(inner.storageLevel === StorageLevel.NONE, "the inner scope releases its persist")
+      assert(p.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "the outer persist stays cached until the outer scope exits")
+      p
+    }
+    assert(outer.storageLevel === StorageLevel.NONE, "the outer scope releases its persist")
+  }
+
+  test("scoped: a body that throws still releases its persists and rethrows") {
+    var p: org.apache.spark.sql.DataFrame = null
+    val e = intercept[IllegalStateException] {
+      Caches.scoped {
+        p = Caches.scopedPersist(spark.range(13).selectExpr("id AS thrown_k"))
+        throw new IllegalStateException("planted")
+      }
+    }
+    assert(e.getMessage === "planted")
+    assert(p.storageLevel === StorageLevel.NONE)
   }
 }

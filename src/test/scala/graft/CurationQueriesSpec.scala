@@ -20,9 +20,8 @@ class CurationQueriesSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf0001)
 
   test("q75 duplicated-span report equals a plain-Scala recount") {
-    val got = run("q75_duplicated_spans")
-      .as[(Long, Long, Long, Double)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q75_duplicated_spans")
+      .as[(Long, Long, Long, Double)].collect().toSeq)
 
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "text").as[(Long, String)].collect()
@@ -44,8 +43,7 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q76 quantized top-10 equals a plain-Scala int8 quantization") {
-    val got = run("q76_quantized_similarity").as[(Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q76_quantized_similarity").as[(Long, Long)].collect().toSeq)
 
     val rows = Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
@@ -70,10 +68,9 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q77 semantic-dedup report is internally consistent and matches a within-cell brute force") {
-    val got = run("q77_semantic_dedup")
+    val got = Caches.scoped(run("q77_semantic_dedup")
       .select(col("vec_id"), col("cell"), col("best_prior_cos"), col("kept"))
-      .as[(Long, Long, Option[Double], Long)].collect().toSeq
-    Caches.releaseScoped()
+      .as[(Long, Long, Option[Double], Long)].collect().toSeq)
 
     // kept bit is exactly the threshold decision on the reported margin
     assert(got.forall { case (_, _, b, k) =>
@@ -86,10 +83,9 @@ class CurationQueriesSpec extends SparkSpec {
     // brute-force the per-vector margin from the same cell assignment
     val e = Tables.embeddings(spark, sf0001)
     val cents = similarity.Ann.trainCentroids(e, k = 16, iters = 2)
-    val asg = similarity.Ann.assignCells(e, cents)
+    val asg = Caches.scoped(similarity.Ann.assignCells(e, cents)
       .select(col("vec_id"), col("cell").cast("long"), col("nv"))
-      .as[(Long, Long, Array[Double])].collect()
-    Caches.releaseScoped()
+      .as[(Long, Long, Array[Double])].collect())
     def cos(a: Array[Double], b: Array[Double]): Double = {
       val dot = a.zip(b).map { case (x, y) => x * y }.sum
       val na = math.sqrt(a.map(x => x * x).sum)
@@ -109,9 +105,8 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q78 packing fills bins greedily within capacity, in doc order") {
-    val got = run("q78_greedy_packing")
-      .as[(Long, String, Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q78_greedy_packing")
+      .as[(Long, String, Long, Long)].collect().toSeq)
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "lang", "n_chars").as[(Long, String, Long)]
       .collect().toSeq
@@ -136,8 +131,7 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q79 temperature mixing equals plain-Scala sqrt-smoothed rates") {
-    val got = run("q79_temperature_mixing").as[(Long, String)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q79_temperature_mixing").as[(Long, String)].collect().toSeq)
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "lang").as[(Long, String)].collect().toSeq
     val cnt = docs.groupBy(_._2).view.mapValues(_.size.toLong).toMap
@@ -156,9 +150,8 @@ class CurationQueriesSpec extends SparkSpec {
   }
 
   test("q137 DSIR resampling equals a plain-Scala importance replay and prefers the target domain") {
-    val got = run("q137_dsir_resample")
-      .as[(Long, String, Long, Double, Double, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q137_dsir_resample")
+      .as[(Long, String, Long, Double, Double, Long)].collect().toSeq)
 
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "lang", "text").as[(Long, String, String)]

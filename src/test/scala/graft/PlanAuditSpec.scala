@@ -10,9 +10,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 class PlanAuditSpec extends SparkSpec {
 
   private def formatted(name: String): String =
-    try SparkEntry.queries(name)(spark, sf0001).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-    finally Caches.releaseScoped()
+    Caches.scoped(SparkEntry.queries(name)(spark, sf0001).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode))
 
   /** BloomFilterMightContain occurrences across the plan's expression
     * trees, descending into AQE subplans and cached-relation plans —
@@ -62,8 +61,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q24: all four segment branches read ONE cached dense-id relation") {
-    val df = SparkEntry.queries("q24_union_reassembly")(spark, sf0001)
-    try {
+    Caches.scoped {
+      val df = SparkEntry.queries("q24_union_reassembly")(spark, sf0001)
       val rels = df.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }
       // 4 branch scans + each branch's broadcast row-count subquery also
       // reads the cache — what matters is that every read hits the SAME
@@ -71,7 +70,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(rels.size >= 4, s"expected >=4 cached reads, got ${rels.size}")
       assert(rels.map(_.cacheBuilder).distinct.size == 1,
         "branches must share one cache — a second build = the 4x re-derivation regression")
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("q64: stage 1 shuffles on the (key, value) PAIR — no hot-key reducer funnel") {
@@ -110,9 +109,8 @@ class PlanAuditSpec extends SparkSpec {
     val joined = graft.operators.AsOfJoin
       .lastAtOrBeforeNative(left, right, "user_id", "ts", "purchase_id")
       .filter(org.apache.spark.sql.functions.col("event_id") < 100)
-    val p = try joined.queryExecution
+    val p = joined.queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
-    finally Caches.releaseScoped()
     assert(p.contains("LessThan(event_id,100)"),
       "PushFilterThroughAsOfJoin must move the probe-side conjunct into PushedFilters")
   }
@@ -131,12 +129,12 @@ class PlanAuditSpec extends SparkSpec {
     val corpus = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Tuple1("dup"), Tuple1("other"))))
       .toDF("text")
-    val df = graft.operators.BloomDedup.newRows(incoming, corpus, "text", 1000L)
-    val (p, probes) = try {
-      val qe = df.queryExecution
+    val (p, probes) = Caches.scoped {
+      val qe = graft.operators.BloomDedup.newRows(incoming, corpus, "text", 1000L)
+        .queryExecution
       (qe.explainString(org.apache.spark.sql.execution.FormattedMode),
         countBloomProbes(qe.executedPlan))
-    } finally Caches.releaseScoped()
+    }
     assert(p.contains("might_contain"),
       "the bloom pre-screen must be the native BloomFilterMightContain predicate, not a UDF")
     // counted by traversing the executed plan's expression trees (incl.
@@ -155,22 +153,22 @@ class PlanAuditSpec extends SparkSpec {
   test("q85: frame_number range predicates reach the connector's scan bounds") {
     // the pushdown face of the container scan: a mid-range filter must
     // shrink the generated/decoded range, not post-filter a full decode
-    val df = SparkEntry.queries("q85_avi_container_scan")(spark, sf0001)
-      .filter(org.apache.spark.sql.functions.col("frame_number") >= 10)
-      .filter(org.apache.spark.sql.functions.col("frame_number") < 20)
-    try {
+    Caches.scoped {
+      val df = SparkEntry.queries("q85_avi_container_scan")(spark, sf0001)
+        .filter(org.apache.spark.sql.functions.col("frame_number") >= 10)
+        .filter(org.apache.spark.sql.functions.col("frame_number") < 20)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("[10, 20)"),
         s"range must push into the scan description:\n${plan.linesIterator.take(8).mkString("\n")}")
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("q86: the sink round-trip joins two bounded container scans via broadcast") {
     // both sides are 48-frame relations; the verify join must broadcast
     // one side, never shuffle both (at corpus scale the read-back side
     // of a container verify is the bounded one)
-    val df = SparkEntry.queries("q86_video_sink_roundtrip")(spark, sf0001)
-    try {
+    Caches.scoped {
+      val df = SparkEntry.queries("q86_video_sink_roundtrip")(spark, sf0001)
       df.collect() // materialize AQE's final plan on THIS query execution
       // structural walk of the FINAL plan only — toString also prints
       // the pre-AQE "Initial Plan" section, whose SMJ is exactly what
@@ -194,7 +192,7 @@ class PlanAuditSpec extends SparkSpec {
       }
       assert(bhj.nonEmpty, s"expected a broadcast join in the final plan:\n$plan")
       assert(smj.isEmpty, "two bounded scans must not sort-merge in the final plan")
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("q42: the vocabulary-sized dfreq table is never force-broadcast") {
@@ -205,21 +203,13 @@ class PlanAuditSpec extends SparkSpec {
     // token join must fall back to a shuffle join. The 1-row n_docs
     // broadcast (a BroadcastNestedLoopJoin) stays allowed — its
     // cardinality is 1 at any scale.
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      keys.foreach(spark.conf.set(_, "-1"))
-      val p = formatted("q42_tfidf_top_terms")
-      assert(!p.contains("BroadcastHashJoin"),
-        "with thresholds off, a BroadcastHashJoin can only come from a forced broadcast() hint on dfreq")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        "the tf-dfreq join must degrade to a shuffle join on token when broadcast is off")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val p = Sessions.withConfs(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(formatted("q42_tfidf_top_terms"))
+    assert(!p.contains("BroadcastHashJoin"),
+      "with thresholds off, a BroadcastHashJoin can only come from a forced broadcast() hint on dfreq")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      "the tf-dfreq join must degrade to a shuffle join on token when broadcast is off")
   }
 
   test("q74: contamination overlap partial-aggregates before the doc-keyed shuffle") {
@@ -320,9 +310,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q01/q09/q10/q15/q24 read the session-shared dense-id caches (one sort per session)") {
     def cacheBuilders(name: String) =
-      try SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan
-        .collect { case r: InMemoryRelation => r.cacheBuilder }
-      finally Caches.releaseScoped()
+      Caches.scoped(SparkEntry.queries(name)(spark, sf0001).queryExecution.optimizedPlan
+        .collect { case r: InMemoryRelation => r.cacheBuilder })
     val perQuery = Seq("q01_ordered_scan", "q09_progress_ticks", "q10_segment_ntile",
       "q15_dropped_frames", "q24_union_reassembly").map(n => n -> cacheBuilders(n))
     perQuery.foreach { case (n, bs) =>
@@ -1057,9 +1046,8 @@ class PlanAuditSpec extends SparkSpec {
     // previous selection into every later step — ~3^k subplans)
     // structural leaf count, not a formatted-string match — FormattedMode's
     // node rendering is a Spark-version detail (r15, ADVICE r14)
-    val qe = try SparkEntry.queries("q231_mmr_rerank")(spark, sf0001)
-      .queryExecution
-    finally Caches.releaseScoped()
+    val qe = Caches.scoped(SparkEntry.queries("q231_mmr_rerank")(spark, sf0001)
+      .queryExecution)
     def realLeaves(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -1164,13 +1152,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q141: the bloom probe screens the fact side inside the plan") {
-    val qe = SparkEntry.queries("q141_bloom_pruned_join")(spark, sf0001)
-      .queryExecution
-    try {
+    Caches.scoped {
+      val qe = SparkEntry.queries("q141_bloom_pruned_join")(spark, sf0001)
+        .queryExecution
       assert(countBloomProbes(qe.executedPlan) >= 1,
         "might_contain must survive into the executed plan (the pre-shuffle screen)")
       val p = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       assert(!p.contains("CartesianProduct"))
-    } finally Caches.releaseScoped()
+    }
   }
 }

@@ -21,8 +21,8 @@ class QueriesSpec extends SparkSpec {
     // err_ppm live here instead: recomputed beside the gated row, pinning
     // the LIBRARY implementation to its published accuracy (rsd = 0.05
     // default → 3σ = 150 000 ppm) at the gate fixture's cardinality.
-    val r = SparkEntry.queries("q38_approx_distinct")(spark, sf0001).collect()
-    try {
+    Caches.scoped {
+      val r = SparkEntry.queries("q38_approx_distinct")(spark, sf0001).collect()
       assert(r.length === 1)
       val row = r.head
       val est = Tables.events(spark, sf0001)
@@ -35,7 +35,7 @@ class QueriesSpec extends SparkSpec {
       assert(row.getAs[Boolean]("within_3rsd"),
         "gated within_3rsd disagrees with the recomputed bound")
       assert(row.getAs[Long]("n_users_exact") === est.getAs[Long]("exact"))
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("every query matches its committed golden hash at sf0.001") {
@@ -43,20 +43,17 @@ class QueriesSpec extends SparkSpec {
     val f = new java.io.File("src/test/resources/goldens.properties")
     assert(f.exists(), "goldens missing — run: sbt \"runMain graft.GoldenGen\"")
     props.load(new java.io.FileReader(f))
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for ((name, fn) <- SparkEntry.select(Nil)) {
       val golden = props.getProperty(name)
       assert(golden != null, s"$name has no golden — regenerate with GoldenGen")
-      // release in a finally: a failed assertion must not leak the
-      // query's scoped persists into the suites sharing this session
-      try assert(GoldenHash.hashDf(fn(spark, sf0001)) === golden, name)
-      finally Caches.releaseScoped()
+      assert(GoldenHash.golden(spark, sf0001, fn) === golden, name)
     }
   }
 
   test("q136: no verified near-dup pair straddles the split — leakage-safe by construction") {
-    val split = SparkEntry.queries("q136_leakage_safe_split")(spark, sf0001)
-      .select(col("doc_id"), col("split"))
-    try {
+    Caches.scoped {
+      val split = SparkEntry.queries("q136_leakage_safe_split")(spark, sf0001)
+        .select(col("doc_id"), col("split"))
       val pairs = SparkEntry.queries("q31_ngram_jaccard")(spark, sf0001)
         .select("doc_a", "doc_b")
       assert(pairs.count() > 0, "fixture sanity: verified near-dup pairs exist at sf0.001")
@@ -68,7 +65,7 @@ class QueriesSpec extends SparkSpec {
         "a near-dup pair split across train/test is exactly the leakage q136 exists to prevent")
       // contrast: the doc-keyed q120 cut has no such guarantee — the
       // cluster keying is load-bearing, not incidental
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("keyframe sampling: count = ceil(n/30) and frame 0 selected") {

@@ -42,9 +42,8 @@ class SequencePackingSpec extends SparkSpec {
   }
 
   test("q245 loader contract at sf0.001: budget respected, spans abut, every doc packed once") {
-    val r = try SparkEntry.queries("q245_sequence_packing")(spark, sf0001)
-      .collect()
-    finally Caches.releaseScoped()
+    val r = Caches.scoped(SparkEntry.queries("q245_sequence_packing")(spark, sf0001)
+      .collect())
     val nDocs = spark.read.parquet(s"$sf0001/documents.parquet").count()
     assert(r.length.toLong === nDocs, "every doc packs exactly once")
     assert(r.map(_.getAs[Long]("doc_id")).distinct.length.toLong === nDocs)
@@ -81,9 +80,8 @@ class SequencePackingSpec extends SparkSpec {
   }
 
   test("q248 split packing: zero waste except the tail, fragments reassemble, flags mark the mask points") {
-    val r = try SparkEntry.queries("q248_packing_split")(spark, sf0001)
-      .collect()
-    finally Caches.releaseScoped()
+    val r = Caches.scoped(SparkEntry.queries("q248_packing_split")(spark, sf0001)
+      .collect())
     val B = 512L
     // per context: every context except each shard's LAST is exactly
     // full — the policy's defining property (waste only at the tail)
@@ -115,9 +113,8 @@ class SequencePackingSpec extends SparkSpec {
   }
 
   test("q250: length-sorted batching never pads more than arrival order, and both conserve the corpus") {
-    val r = try SparkEntry.queries("q250_length_batching")(spark, sf0001)
-      .collect()
-    finally Caches.releaseScoped()
+    val r = Caches.scoped(SparkEntry.queries("q250_length_batching")(spark, sf0001)
+      .collect())
     assert(r.nonEmpty)
     r.foreach { p =>
       // the optimality direction the comment proves: consecutive blocks
@@ -135,12 +132,9 @@ class SequencePackingSpec extends SparkSpec {
 
   test("q249 planner agrees with the two packing faces it plans") {
     val q = SparkEntry.queries
-    val plan = try q("q249_packing_policy")(spark, sf0001).collect()
-      finally Caches.releaseScoped()
-    val greedy = try q("q245_sequence_packing")(spark, sf0001).collect()
-      finally Caches.releaseScoped()
-    val split = try q("q248_packing_split")(spark, sf0001).collect()
-      finally Caches.releaseScoped()
+    val plan = Caches.scoped(q("q249_packing_policy")(spark, sf0001).collect())
+    val greedy = Caches.scoped(q("q245_sequence_packing")(spark, sf0001).collect())
+    val split = Caches.scoped(q("q248_packing_split")(spark, sf0001).collect())
     val gCtx = greedy.groupBy(_.getAs[Long]("shard"))
       .map { case (s, r) => s -> (r.map(_.getAs[Long]("context_id")).max + 1) }
     val sCtx = split.groupBy(_.getAs[Long]("shard"))
@@ -169,8 +163,7 @@ class SequencePackingSpec extends SparkSpec {
   }
 
   test("q252 training-export funnel: stage counters tile, every branch fires, packing is consistent") {
-    val r = try SparkEntry.queries("q252_training_export")(spark, sf0001).collect()
-      finally Caches.releaseScoped()
+    val r = Caches.scoped(SparkEntry.queries("q252_training_export")(spark, sf0001).collect())
     assert(r.length > 0)
     val B = graft.queries.CurationQueries.PackTokenBudget
     r.foreach { p =>
@@ -200,10 +193,8 @@ class SequencePackingSpec extends SparkSpec {
 
   test("q251 streamed split report is byte-identical to q248's batch report") {
     val q = SparkEntry.queries
-    val batch = try GoldenHash.hashDf(q("q248_packing_split")(spark, sf0001))
-      finally Caches.releaseScoped()
-    val streamed = try GoldenHash.hashDf(q("q251_split_stream")(spark, sf0001))
-      finally Caches.releaseScoped()
+    val batch = GoldenHash.golden(spark, sf0001, q("q248_packing_split"))
+    val streamed = GoldenHash.golden(spark, sf0001, q("q251_split_stream"))
     assert(streamed === batch,
       "the two split faces must hash identically (one oracle text, one golden)")
   }

@@ -42,15 +42,6 @@ class SpillProbeSpec extends SparkSpec {
     }
   }
 
-  private def withConfs[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("heavy agg/join/window family: identical results under forced spill, real bytes spilled") {
     val names = Seq(
       "q21_rollup_revenue",          // rollup hash agg
@@ -59,8 +50,7 @@ class SpillProbeSpec extends SparkSpec {
       "q48_running_sum",             // window buffers
       "q73_bucketed_colocated_join") // SMJ over bucketed scans
     def runAll(): Seq[(String, Seq[String])] = names.map { n =>
-      try n -> SparkEntry.queries(n)(spark, sf0001).collect().toSeq.map(_.toString).sorted
-      finally Caches.releaseScoped()
+      n -> Caches.scoped(SparkEntry.queries(n)(spark, sf0001).collect().toSeq.map(_.toString).sorted)
     }
 
     val baseline = runAll()
@@ -72,7 +62,7 @@ class SpillProbeSpec extends SparkSpec {
       // thousands (a threshold of 2 over 10k-row windows spawns one
       // spill file per pair and OOMs the fork on spill bookkeeping —
       // the probe wants the spill PATH, not a pathological file count)
-      try withConfs(
+      try Sessions.withConfs(spark,
         "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "100, 200",
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "128",
         "spark.sql.windowExec.buffer.spill.threshold" -> "256",

@@ -77,8 +77,7 @@ class GuardsSpec extends SparkSpec {
     for (bad <- Seq(1L << 31, -1L)) {
       val bb = Seq((1L, 5L), (1L, bad), (2L, 5L), (2L, bad)).toDF("ck", "pk")
       val e = intercept[Throwable] {
-        try graft.queries.JoinQueries.itemNeighbors(bb).collect()
-        finally graft.Caches.releaseScoped()
+        graft.Caches.scoped(graft.queries.JoinQueries.itemNeighbors(bb).collect())
       }
       assert(rootMessage(e).contains(
         s"q192/q198 packed pair key: part id: outside [0,2147483647]: $bad"))

@@ -26,11 +26,8 @@ class RowIdsSegmentsSpec extends SparkSpec {
     // thing standing between the caller and n copies of the same buffer,
     // so aliasing would surface here as every row holding the LAST id.
     val n = 5000
-    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    graft.Sessions.withConfs(spark, "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
       val df = spark.range(n).select((col("id") * 7919 % n).as("k")).repartition(8)
       val rows = RowIds.withDenseId(df.toDF(), Seq(col("k")), "rid")
         .select("k", "rid").as[(Long, Long)].collect()
@@ -38,9 +35,6 @@ class RowIdsSegmentsSpec extends SparkSpec {
         "each collected row must hold its own id (no aliased buffers)")
       assert(rows.sortBy(_._2).map(_._1).toSeq === rows.map(_._1).sorted.toSeq,
         "id order must match key order through the interpreted path")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -60,7 +54,6 @@ class RowIdsSegmentsSpec extends SparkSpec {
       .orderBy("srid").select("k", "srid").as[(Long, Long)].collect().toSeq
     val slow = RowIds.withDenseId(sample.select("k"), Seq(col("k")), "srid")
       .orderBy("srid").select("k", "srid").as[(Long, Long)].collect().toSeq
-    graft.Caches.releaseScoped()
     assert(fast === slow)
   }
 

@@ -62,9 +62,8 @@ class AnalyticsExtensionsSpec extends SparkSpec {
   }
 
   test("q149 fold betas solve their complement normal equations; sse matches a plain-Scala rescore") {
-    val got = run("q149_crossval_regression")
-      .as[(Long, Long, Double, Double, Double, Double, Double)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q149_crossval_regression")
+      .as[(Long, Long, Double, Double, Double, Double, Double)].collect().toSeq)
     assert(got.map(_._1) === Seq(0L, 1L, 2L, 3L, 4L))
 
     val rows = Tables.events(spark, sf0001)
@@ -103,8 +102,7 @@ class AnalyticsExtensionsSpec extends SparkSpec {
   }
 
   test("q139 equals an all-triples brute force (each triangle counted once per corner)") {
-    val got = run("q139_triangle_count").as[(Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q139_triangle_count").as[(Long, Long)].collect().toSeq)
 
     val und = edges().map { case (u, v) => (u.min(v), u.max(v)) }.distinct.toSet
     val nodes = und.flatMap { case (a, b) => Seq(a, b) }.toSeq.sorted
@@ -156,9 +154,8 @@ class AnalyticsExtensionsSpec extends SparkSpec {
   }
 
   test("q144 equals a plain-Scala 3-round peel and the peel is non-vacuous") {
-    val got = run("q144_kcore_keywords")
-      .as[(String, Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q144_kcore_keywords")
+      .as[(String, Long, Long)].collect().toSeq)
 
     val texts = Tables.documents(spark, sf0001)
       .select("text").as[String].collect().toSeq
@@ -188,9 +185,8 @@ class AnalyticsExtensionsSpec extends SparkSpec {
   }
 
   test("q140 equals a plain-Scala exact-ratio PMI top-20") {
-    val got = run("q140_pmi_collocations")
-      .as[(String, Long, Long, Long, Double)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q140_pmi_collocations")
+      .as[(String, Long, Long, Long, Double)].collect().toSeq)
 
     val texts = Tables.documents(spark, sf0001)
       .select("text").as[String].collect().toSeq

@@ -48,7 +48,7 @@ class ContainmentJoinSpec extends SparkSpec {
 
   test("embedded quote: containment 1.0, jaccard < 0.5, resemblance_blind fires; screen complete vs all-pairs truth") {
     val dir = plantedDir()
-    try {
+    Caches.scoped {
       val got = graft.SparkEntry.queries("q160_containment_join")(spark, dir)
         .select("da", "db", "inter", "ma", "mb", "containment", "jaccard", "resemblance_blind")
         .as[(Long, Long, Long, Long, Long, Double, Double, Long)].collect().toSeq
@@ -75,6 +75,6 @@ class ContainmentJoinSpec extends SparkSpec {
       assert(!resemblance.contains((0L, 1L)) && resemblance.contains((2L, 3L)))
       // the twins are NOT blind: both passes see them
       assert(got.find(r => r._1 == 2L && r._2 == 3L).get._8 === 0L)
-    } finally Caches.releaseScoped()
+    }
   }
 }

@@ -13,10 +13,9 @@ class CorpusPlanningSpec extends SparkSpec {
   private def run(name: String) = SparkEntry.queries(name)(spark, sf0001)
 
   test("q161 events.user_id row recomputes from a plain-Scala key profile") {
-    val got = run("q161_skew_report")
+    val got = Caches.scoped(run("q161_skew_report")
       .as[(String, Long, Long, Long, Long, Double, Double, Long)]
-      .collect().find(_._1 == "events.user_id").get
-    Caches.releaseScoped()
+      .collect().find(_._1 == "events.user_id").get)
     val counts = Tables.events(spark, sf0001).select("user_id").as[Long]
       .collect().groupBy(identity).values.map(_.length.toLong).toSeq.sorted
     val (nKeys, nRows, maxCnt) = (counts.size.toLong, counts.sum, counts.max)
@@ -28,9 +27,8 @@ class CorpusPlanningSpec extends SparkSpec {
   }
 
   test("q162 allocation recomputes exactly and never exceeds budget or availability") {
-    val got = run("q162_mixture_allocation")
-      .as[(String, String, Long, Long, Long, Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q162_mixture_allocation")
+      .as[(String, String, Long, Long, Long, Long, Long)].collect().toSeq)
     val n = got.map(r => (r._1, r._2) -> r._3).toMap
     val nTotal = n.values.sum
     val budget = nTotal / 2
@@ -74,19 +72,18 @@ class CorpusPlanningSpec extends SparkSpec {
       (k.toLong, v, k % 3)
     }.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    try {
+    Caches.scoped {
       val got = SparkEntry.queries("q165_top_principal_component")(spark, dir)
         .as[(Long, Long, Double)].collect().toSeq.sortBy(_._1)
       assert(got.head === ((0L, 1000000L, 55.0)))
       assert(got.tail.forall(r => r._2 === 0L && r._3 === 55.0),
         "off-axis dims must quantize to exactly 0")
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("q166 top-3 recomputes from a plain-Scala tf-idf fold") {
-    val got = run("q166_sparse_cosine_knn")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q166_sparse_cosine_knn")
+      .as[(Long, Long, Long, Long)].collect().toSeq)
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "text").as[(Long, String)].collect()
     val tf = docs.map { case (id, t) =>
@@ -111,9 +108,8 @@ class CorpusPlanningSpec extends SparkSpec {
   }
 
   test("q167 drift takes recompute from a plain-Scala smoothed-ratio fold") {
-    val got = run("q167_token_drift")
-      .as[(String, Long, Long, Double, String)].collect().toSeq
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q167_token_drift")
+      .as[(String, Long, Long, Double, String)].collect().toSeq)
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "text").as[(Long, String)].collect()
     val pairs = docs.flatMap { case (id, t) => t.split(" ", -1).map(id % 2 -> _) }
@@ -134,9 +130,8 @@ class CorpusPlanningSpec extends SparkSpec {
   }
 
   test("q168 novelty recomputes from a plain-Scala first-bucket fold; both branches live") {
-    val got = run("q168_novelty_curve")
-      .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q168_novelty_curve")
+      .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1))
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "text").as[(Long, String)].collect()
     val pos = docs.flatMap { case (id, t) =>
@@ -154,9 +149,8 @@ class CorpusPlanningSpec extends SparkSpec {
   }
 
   test("q172 drift recomputes from a plain-Scala per-half mean fold") {
-    val got = run("q172_centroid_drift")
-      .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q172_centroid_drift")
+      .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1))
     val rows = Tables.embeddings(spark, sf0001)
       .select("vec_id", "embedding", "label")
       .as[(Long, Array[Float], Int)].collect()
@@ -179,9 +173,8 @@ class CorpusPlanningSpec extends SparkSpec {
   }
 
   test("q163 curve recomputes from a plain-Scala first-occurrence fold") {
-    val got = run("q163_vocab_growth")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    Caches.releaseScoped()
+    val got = Caches.scoped(run("q163_vocab_growth")
+      .as[(Long, Long, Long, Long, Long)].collect().toSeq.sortBy(_._1))
     val docs = Tables.documents(spark, sf0001)
       .select("doc_id", "text").as[(Long, String)].collect()
     val toks = docs.flatMap { case (id, t) => t.split(" ", -1).map(id -> _) }

@@ -27,12 +27,12 @@ class LabelAgreementSpec extends SparkSpec {
     val dir = tmp.toString
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    try {
+    Caches.scoped {
       val got = graft.SparkEntry.queries("q164_label_agreement")(spark, dir)
         .as[(Long, Int, Int, Long, Long)].collect()
         .find(_._1 == 0L).get
       assert(got === ((0L, 7, 3, 2L, 1L)),
         "tie 2-2 between labels 3 and 7 must resolve to 3 and flag the doc")
-    } finally Caches.releaseScoped()
+    }
   }
 }

@@ -252,6 +252,5 @@ class Round13EvalSpec extends SparkSpec {
     assert(got === want)
     // fusion is non-trivial: some neighbor is backed by BOTH systems
     assert(got.exists(_._3 > 16393L), "no neighbor fused from both arms")
-    graft.Caches.releaseScoped()
   }
 }

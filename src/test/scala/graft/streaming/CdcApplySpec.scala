@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** The streaming face of the q130 MERGE: batched apply must equal the
@@ -106,9 +108,10 @@ class CdcApplySpec extends SparkSpec {
     Seq(in, st, ck).foreach(graft.TempDirs.cleanupOnExit)
     df(b1).write.parquet(s"$in/f1")
     val schema = df(b1).schema
-    val q = CdcApply.run(
-      spark.readStream.schema(schema).parquet(in.toString + "/*"),
-      st.toString, ck.toString)
+    val q = spark.readStream.schema(schema).parquet(in.toString + "/*")
+      .writeStream.option("checkpointLocation", ck.toString)
+      .foreachBatch { (b: DataFrame, id: Long) => CdcApply.processBatch(b, st.toString, id) }
+      .start()
     try {
       q.processAllAvailable()
       df(b2).coalesce(1).write.parquet(s"$in/f2") // single part: atomic appearance under the running poll

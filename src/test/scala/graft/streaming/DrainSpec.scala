@@ -77,7 +77,7 @@ class DrainSpec extends SparkSpec {
     assert(!spark.conf.getAll.contains(EventStreams.ProviderKey),
       "the session starts with the provider unset")
     // a session width the derived stream width (2 here) cannot equal
-    EventStreams.withConfs(spark, partsKey -> "7") {
+    graft.Sessions.withConfs(spark, partsKey -> "7") {
       EventStreams.drainToFiles(
         RateLimitStream.limited(spark, events(poison = false)), "append").count()
       assert(spark.conf.get(partsKey) === "7")

@@ -3,8 +3,9 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.storage.StorageLevel
 
-import graft.SparkSpec
+import graft.{Caches, SparkSpec}
 
 /** The continuous-ingestion face of q93 (VERDICT r9 item 1): micro-batch
   * N+1 must dedup against the index micro-batch N persisted — and ONLY
@@ -96,5 +97,17 @@ class IncrementalNearDupSpec extends SparkSpec {
     IncrementalNearDup.processBatch(b2, 1L, indexDir, outDir)
     assert(decisions() === dBefore, "replay must not change or duplicate decisions")
     assert(indexRows() === iBefore, "replay must not duplicate index rows")
+  }
+
+  test("a batch body run inside a query's scope leaves the query's persists cached") {
+    val (indexDir, outDir, _) = mkDirs()
+    import spark.implicits._
+    Caches.scoped {
+      val outer = Caches.scopedPersist(spark.range(17).selectExpr("id AS query_k"))
+      IncrementalNearDup.processBatch(
+        Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text"), 0L, indexDir, outDir)
+      assert(outer.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "the batch body must release only the relations it registered")
+    }
   }
 }

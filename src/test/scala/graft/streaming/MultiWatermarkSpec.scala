@@ -58,13 +58,7 @@ class MultiWatermarkSpec extends SparkSpec {
 
   test("max policy: the fast clock finalizes strictly more windows") {
     val (fast, slow) = wmSides()
-    val prev = spark.conf.getOption(PolicyKey)
-    val maxRows =
-      try { spark.conf.set(PolicyKey, "max"); run() }
-      finally prev match {
-        case Some(v) => spark.conf.set(PolicyKey, v)
-        case None => spark.conf.unset(PolicyKey)
-      }
+    val maxRows = graft.Sessions.withConfs(spark, PolicyKey -> "max")(run())
     assert(maxRows === twin(math.max(fast, slow)))
     val minRows = twin(math.min(fast, slow))
     assert(minRows.subsetOf(maxRows) && maxRows.size > minRows.size,

@@ -94,7 +94,7 @@ class StreamWidthSpec extends SparkSpec {
     // listing fails with something other than a missing path
     val glob = spark.readStream.schema(schema).parquet(s"$dir/*")
     val (brokenWidth, brokenLines) = capturingErr("stream width") {
-      EventStreams.withConfs(spark, "fs.file.impl" -> "graft.NoSuchFileSystem",
+      graft.Sessions.withConfs(spark, "fs.file.impl" -> "graft.NoSuchFileSystem",
           "fs.file.impl.disable.cache" -> "true") {
         EventStreams.withStreamWidth(glob)(spark.conf.get(partsKey).toInt)
       }

@@ -40,7 +40,6 @@ class StreamingLineDedupSpec extends SparkSpec {
     assert(r.toSeq === Seq(
       (0L, 0L, 0L, boiler), (1L, 0L, 0L, boiler), (2L, 0L, 0L, boiler),
       (10L, 1L, 1L, ""), (11L, 1L, 0L, fresh)))
-    graft.Caches.releaseScoped()
   }
 
   test("a re-delivered batch no-ops: the index never double-counts a crossing") {
@@ -65,6 +64,5 @@ class StreamingLineDedupSpec extends SparkSpec {
     val r20 = StreamingLineDedup.report(spark, dir)
       .filter(col("doc_id") === 20L).select("n_dropped").collect().head
     assert(r20.getLong(0) === 1L, "count 3 reached after batch 1 — batch 2 drops")
-    graft.Caches.releaseScoped()
   }
 }

@@ -12,13 +12,13 @@ class StreamingNoveltySpec extends SparkSpec {
     // so the streamed fold must reproduce the batch query row-for-row
     // (batch ↔ bucket). This is the cross-check the oracle cannot carry:
     // q170's width scales with the corpus, q168's bucket is fixed.
-    try {
+    Caches.scoped {
       val replay = SparkEntry.queries("q170_novelty_replay")(spark, sf0001)
         .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
       val batch = SparkEntry.queries("q168_novelty_curve")(spark, sf0001)
         .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
       assert(replay === batch)
-    } finally Caches.releaseScoped()
+    }
   }
 
   test("repeat rule at the seam: cross-batch repeats count, intra-batch duplicates stay novel") {

@@ -86,7 +86,6 @@ class StreamingPackingSpec extends SparkSpec {
         "tok_start", "tok_end", "is_head", "is_tail")
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "the two split faces must produce identical fragment sets")
-    graft.Caches.releaseScoped()
   }
 
   test("streamed spans equal the batch fold's on the gate fixture") {
@@ -100,6 +99,5 @@ class StreamingPackingSpec extends SparkSpec {
         "n_tokens", "n_trunc_tokens")
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "the two faces must produce identical span sets")
-    graft.Caches.releaseScoped()
   }
 }

@@ -130,14 +130,14 @@ class VectorIngestSpec extends SparkSpec {
   }
 
   test("q208: the gate-facing replay equals the one-shot q33 search row-for-row") {
-    val replay = graft.SparkEntry.queries("q208_vector_ingest_replay")(spark, sf0001)
-      .collect().toSeq
-    val oneShot = graft.SparkEntry.queries("q33_ann_ivf")(spark, sf0001)
-      .collect().toSeq
-    try {
+    graft.Caches.scoped {
+      val replay = graft.SparkEntry.queries("q208_vector_ingest_replay")(spark, sf0001)
+        .collect().toSeq
+      val oneShot = graft.SparkEntry.queries("q33_ann_ivf")(spark, sf0001)
+        .collect().toSeq
       assert(replay.nonEmpty)
       assert(replay === oneShot,
         "batch-at-a-time ingest must build the SAME index as one-shot indexing")
-    } finally graft.Caches.releaseScoped()
+    }
   }
 }
